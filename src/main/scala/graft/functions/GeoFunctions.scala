@@ -74,21 +74,8 @@ object GeoFunctions {
   /** WGS84 semi-major axis used by EPSG:3857. */
   val R_GRAPH_M_3857: Double = 6378137.0
 
-  /** Planar Euclidean distance in Web-Mercator meters (snap-QA distance,
-    * reference snap_poi_to_nodes.py:183-187 is planar 3857, not haversine). */
-  def mercatorDistM(lon1: Column, lat1: Column, lon2: Column, lat2: Column): Column =
-    sqrt(sq(mercatorX(lon2) - mercatorX(lon1)) + sq(mercatorY(lat2) - mercatorY(lat1)))
-
   /** km per degree of longitude at given latitude (reference grid_creation.py:15). */
   def kmPerDegLon(latDeg: Column): Column = lit(111.32) * cos(rad(latDeg))
-
-  /** Degrees of longitude spanning `km` at latitude, ÷0-guarded
-    * (reference grid_creation.py:30-37). */
-  def degFromKmLon(km: Column, latDeg: Column): Column =
-    km / greatest(kmPerDegLon(latDeg), lit(1e-9))
-
-  /** Degrees of latitude spanning `km`. */
-  def degFromKmLat(km: Column): Column = km / lit(111.32)
 
   /** bbox (minlon,minlat,maxlon,maxlat) struct from center point + radius
     * meters, spherical-earth degree deltas (reference grid_extraction_script.py:18-27):
@@ -133,7 +120,4 @@ object GeoFunctions {
   /** grid id "r{row}_c{col}" (reference grid_creation.py:90). */
   def gridId(row: Column, col: Column): Column =
     concat(lit("r"), row.cast("string"), lit("_c"), col.cast("string"))
-
-  /** Walking time seconds from distance meters (reference precompute_poi_reach.py:197). */
-  def timeFromDist(distM: Column, speedMps: Double = 1.111): Column = distM / lit(speedMps)
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,21 +24,30 @@ object QueryLayer {
     *
     * Scale shape (round-7 SCALECHECK caught the original
     * points × nodes crossJoin at 19.9× on 10× data — 100× candidate
-    * growth): nodes and points are bucketed on a degree grid sized so
-    * that any node OUTSIDE a point's 3×3 neighborhood provably has
-    * equirect distance > maxSnapM (lat cell = maxSnapM in degrees; lon
-    * cell widened by 1/cos(max |lat| in the data) so the guarantee
-    * survives the metric's cos(q_lat) scaling — near the poles cos→0
-    * degrades lon cells to one world-spanning cell, which stays exact
-    * and merely loses lon pruning). A point whose in-neighborhood
-    * winner has d² ≤ maxSnapM² is therefore the GLOBAL argmin —
-    * resolved with one equi-join shuffle, no crossJoin. Points the
-    * neighborhood can't decide (no candidate, or the winner is beyond
-    * the guarantee radius — their snap is −1, but the reported
-    * snap_dist_m must still be the true nearest's) fall back to the
-    * original brute-force argmin, applied to ONLY those points: the
-    * common case scans 9 cells, the rare far-from-everything point
-    * pays the full scan the semantics require. Both branches share one
+    * growth): nodes and points are bucketed on a degree grid whose rows
+    * are the guarantee radius g = maxSnapM / R tall (aDeg degrees; row
+    * r = floor(lat / aDeg)) and whose cells in row r are
+    * aDeg / cos(max(|(r−1)·aDeg|, |(r+2)·aDeg|)) wide — the widest
+    * |lat| of rows r−1..r+1, capped at 90° (cos floored at 1e-9, so
+    * polar rows degrade to one world-spanning cell: still exact, only
+    * lon pruning is lost). A point looks in its own row ±1 and, in each
+    * such row, at its cell ±1 under that row's width. Guarantee: a node
+    * within g of a point lies in the point's row ±1; the point's
+    * latitude then lies in rows r−1..r+1 of the node's row r, so
+    * width(r) ≥ aDeg / cos(q_lat) ≥ |Δlon|, i.e. the node is in one of
+    * the 3×3 cells the point probes. The width is a function of the row
+    * alone, so no aggregate over the data (such as a max |lat|) is
+    * needed — including for points outside the nodes' latitude range,
+    * whose probed rows carry their own, wider, widths.
+    *
+    * One left-outer equi-join on the cell keys (×9 point fan-out) and
+    * one candidate aggregate per point follow. A point whose candidate
+    * winner has d² ≤ g² is the GLOBAL argmin — every node at d² ≤ g²,
+    * ties included, is a candidate. Points the neighborhood can't decide
+    * (no candidate, or the winner is beyond the guarantee radius — their
+    * snap is −1, but the reported snap_dist_m must still be the true
+    * nearest's) fall back to the original brute-force argmin, applied
+    * to ONLY those points. Both branches share one
     * min_by(…, struct(d², node_idx)) expression, so the deterministic
     * tie-break is identical and the result is bit-equal to the
     * all-pairs form (q38's oracle pins it).
@@ -47,36 +56,36 @@ object QueryLayer {
   def snapPoints(points: DataFrame, nodes: DataFrame,
                  maxSnapM: Double = 300.0): DataFrame = {
     val pts = points.select(col("query_id"), col("lon").as("q_lon"), col("lat").as("q_lat"))
+    val nodeCols = Seq(col("node_idx"), col("lon"), col("lat"))
     val d2 = equirectDist2(col("q_lon"), col("q_lat"), col("lon"), col("lat"))
-    val pick = min_by(struct(col("node_idx"), col("lon"), col("lat")),
-      struct(d2, col("node_idx")))
+    // unmatched left-outer rows (null node) are skipped: min_by ignores a
+    // null ordering
+    val pick = min_by(struct(nodeCols: _*),
+      when(col("node_idx").isNotNull, struct(d2, col("node_idx"))))
     val g = maxSnapM / R_QUERY_M // guarantee radius in equirect radians
-    val aDeg = math.toDegrees(g) // lat cell size, degrees
-    // one broadcast row: the lon-cell widening factor (1e-9 floor keeps
-    // bDeg finite/positive at the poles — cells degenerate, never flip)
-    val bounds = broadcast(
-      nodes.select(abs(col("lat")).as("al"))
-        .unionByName(pts.select(abs(col("q_lat")).as("al")))
-        .agg(greatest(cos(radians(max(col("al")))), lit(1e-9)).as("cos_max")))
-    val bDeg = lit(aDeg) / col("cos_max")
-    val nx = nodes.select(col("node_idx"), col("lon"), col("lat")).crossJoin(bounds)
-      .select(col("node_idx"), col("lon"), col("lat"),
-        floor(col("lon") / bDeg).cast("long").as("cx"),
-        floor(col("lat") / lit(aDeg)).cast("long").as("cy"))
+    val aDeg = math.toDegrees(g) // row height, degrees
+    def row(lat: Column): Column = floor(lat / lit(aDeg)).cast("long")
+    def width(r: Column): Column = {
+      val far = least(lit(90.0), greatest(abs((r - 1) * aDeg), abs((r + 2) * aDeg)))
+      lit(aDeg) / greatest(cos(radians(far)), lit(1e-9))
+    }
+    val nx = nodes.select(nodeCols :+ row(col("lat")).as("cy"): _*)
+      .withColumn("cx", floor(col("lon") / width(col("cy"))).cast("long"))
     val neighbors = array((-1 to 1).map(lit): _*)
-    val rep = pts.crossJoin(bounds)
-      .withColumn("dx", explode(neighbors))
+    val rep = pts
       .withColumn("dy", explode(neighbors))
-      .select(col("query_id"), col("q_lon"), col("q_lat"),
-        (floor(col("q_lon") / bDeg).cast("long") + col("dx")).as("cx"),
-        (floor(col("q_lat") / lit(aDeg)).cast("long") + col("dy")).as("cy"))
-    val nn = rep.join(nx, Seq("cx", "cy"))
+      .withColumn("cy", row(col("q_lat")) + col("dy"))
+      .withColumn("dx", explode(neighbors))
+      .select(col("query_id"), col("q_lon"), col("q_lat"), col("cy"),
+        (floor(col("q_lon") / width(col("cy"))).cast("long") + col("dx")).as("cx"))
+    val nn = rep.join(nx, Seq("cx", "cy"), "left_outer")
       .groupBy("query_id", "q_lon", "q_lat")
       .agg(pick.as("nn"), min(d2).as("d2min"))
-    val resolved = nn.filter(col("d2min") <= lit(g * g)).drop("d2min")
-    val unresolved = pts.join(resolved.select("query_id"), Seq("query_id"), "left_anti")
-    val brute = unresolved
-      .crossJoin(nodes.select(col("node_idx"), col("lon"), col("lat")))
+    val decided = col("d2min") <= lit(g * g)
+    val resolved = nn.filter(decided).drop("d2min")
+    val brute = nn.filter(col("d2min").isNull || !decided)
+      .select("query_id", "q_lon", "q_lat")
+      .crossJoin(nodes.select(nodeCols: _*))
       .groupBy("query_id", "q_lon", "q_lat")
       .agg(pick.as("nn"))
     resolved.unionByName(brute)
