@@ -4212,23 +4212,22 @@ object SparkEntry {
         .orderBy("cohort_wk", "age_wk")
     }),
 
-    // Production-depth BPE ROUNDTRIP: train to depth 2000 in the heap
-    // kernel (q309's schedule), then encode the ENTIRE distinct-word
-    // vocabulary with the full table via the priority-loop kernel
-    // (encodeDeep — spec-pinned identical to the in-order replay) and
-    // require losslessness word by word. The oracle lists every distinct
+    // Production-depth BPE ROUNDTRIP: train to depth 2000 (q309's
+    // schedule), then encode the ENTIRE distinct-word vocabulary with the
+    // full table (the priority-loop kernel — spec-pinned identical to an
+    // in-order replay) and require losslessness word by word. The oracle lists every distinct
     // word with ok=true, so ANY word whose tokens fail to reassemble —
     // or that goes missing — flips the hash. This is q217's 4-merge
     // roundtrip at tokenizer-production depth.
     "q316_bpe_deep_roundtrip" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val table = Bpe.mergesDeep(docs, 2000)
+      val table = Bpe.merges(docs, 2000)
         .orderBy("round")
         .select("left", "right").collect()
         .map(r => (r.getString(0), r.getString(1))).toSeq
       val words = docs.select(explode(split(col("text"), " ")).as("word"))
         .filter(length(col("word")) > 0).distinct()
-      Bpe.encodeDeep(words, table)
+      Bpe.encode(words, table)
         .select(col("word"),
           (concat_ws("", col("tokens")) === col("word") &&
             size(col("tokens")) >= 1).as("ok"))
@@ -4461,16 +4460,16 @@ object SparkEntry {
         .orderBy("event_type")
     }),
 
-    // Full-depth BPE training (the production path): the ENTIRE depth-2000
-    // merge schedule runs inside one partition-local heap kernel over the
-    // pooled vocabulary — ONE Spark job, not 2000 explode+agg+collect
-    // rounds (the iterative q97 path's shape). The gate emits the first 4
-    // learned merges and hashes them against q97's 4-round unrolled-CTE
-    // oracle: the kernel's schedule prefix must be bit-identical to the
-    // round-at-a-time reference. Depth equality at every round is
-    // spec-pinned (BpeSpec mergesDeep == merges, fixed + randomized).
+    // Full-depth BPE training (the production depth): the ENTIRE
+    // depth-2000 merge schedule runs inside one partition-local heap
+    // kernel over the pooled vocabulary — ONE Spark job. The gate emits
+    // the first 4 learned merges and hashes them against q97's 4-round
+    // unrolled-CTE oracle: a 2000-round run must start with the same
+    // schedule as a 4-round one. Equality at every depth with a
+    // round-at-a-time reference is spec-pinned (BpeSpec, fixed +
+    // randomized corpora).
     "q309_bpe_deep" -> ((s, dir) =>
-      Bpe.mergesDeep(t(s, dir, "documents"), rounds = 2000)
+      Bpe.merges(t(s, dir, "documents"), rounds = 2000)
         .filter(col("round") <= 4).orderBy("round")),
 
     // DECIMAL-typed aggregation surface: TPC-H Q1's reduce with the
@@ -4982,7 +4981,7 @@ object SparkEntry {
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"))
       // key routing (round-12 verdict #5): balance is data-determined by
       // hash(o_orderkey), not inherited from the upstream partitioning
-      Sinks.writeJdbcSharded(src, urls, "orders_sink", shardKey = Some("o_orderkey"))
+      Sinks.writeJdbcSharded(src, urls, "orders_sink", shardKey = "o_orderkey")
       Sinks.readJdbcSharded(s, urls, "orders_sink")
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), sum(col("price_c")).as("price_c_sum"),
@@ -5510,7 +5509,7 @@ object SparkEntry {
           col("o_orderstatus"),
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"))
         .coalesce(3) // the adversarial upstream partitioning
-      Sinks.writeJdbcSharded(src, urls, "orders_bal", shardKey = Some("o_orderkey"))
+      Sinks.writeJdbcSharded(src, urls, "orders_bal", shardKey = "o_orderkey")
       // per-shard balance counts run as CONCURRENT jobs (guide §2.6 —
       // independent endpoints; 8 serial one-task count jobs were pure
       // driver-gap wall). Values and the requires below are unchanged.
@@ -7587,8 +7586,8 @@ object SparkEntry {
     // replace, same (w DESC, l, r) argmax tie-break as Bpe.merges.
     "q97_bpe_merges" -> bpeMerges4Oracle,
 
-    // The deep kernel's first 4 merges must equal the round-at-a-time
-    // reference schedule — the SAME unrolled-CTE oracle as q97.
+    // The depth-2000 schedule's first 4 merges must equal the 4-round
+    // replay — the SAME unrolled-CTE oracle as q97.
     "q309_bpe_deep" -> bpeMerges4Oracle,
 
     // Every distinct word must survive the full-depth encode→reassemble

@@ -1,43 +1,32 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Byte-pair-encoding merge induction (tokenizer training) — Sennrich et
-  * al., "Neural Machine Translation of Rare Words with Subword Units",
-  * ACL'16. Each round finds the most frequent adjacent symbol pair across
-  * the corpus (weighted by word frequency) and fuses it into a new symbol.
+/** Byte-pair-encoding merge induction (tokenizer training) and encoding —
+  * Sennrich et al., "Neural Machine Translation of Rare Words with Subword
+  * Units", ACL'16. Each round finds the most frequent adjacent symbol pair
+  * across the corpus (weighted by word frequency) and fuses it into a new
+  * symbol.
   *
   * Distributed shape: the corpus collapses to the (word, freq) VOCABULARY
-  * first — one aggregation — and every round after that touches only the
-  * vocabulary (tiny relative to the corpus: BPE cost is independent of
-  * corpus size past the first scan, which is what makes it viable at
-  * 100 TB). A round is one explode+aggregate for pair counts plus a 1-row
-  * argmax collected to the driver (the merge decision is inherently
-  * sequential — same driver-steers-tiny-actions shape as the Lloyd rounds
-  * in SimilarityOps.kmeansCentroids).
+  * in one aggregation — the only corpus-sized step (Heaps' law keeps the
+  * vocabulary ~10⁶ rows even at 100 TB). The merge decision is inherently
+  * sequential, so the whole schedule then trains in ONE task over the
+  * pooled vocabulary: `repartition(1).mapPartitions(trainKernel)`, a
+  * single Spark job whatever the depth, executor memory ~ O(vocab).
+  * Encoding is a partition-local kernel per word, the merge table riding
+  * the closure (a production table is ~32k rows — broadcast-sized).
   *
-  * Symbol-sequence encoding: each symbol is wrapped in single spaces and
-  * concatenated — `[a,b] → " a  b "`. Adjacent wrapped symbols share no
-  * characters, so the pair (x,y) occurs exactly where the substring
-  * `" x  y "` does, and one non-regex left-to-right `replace` performs the
-  * BPE merge pass EXACTLY (greedy, non-overlapping — "a a a" merges to
-  * "aa a"): symbols never contain spaces, so no false substring matches.
-  * DuckDB's `replace` has identical semantics, which is what makes the
-  * operator oracle-checkable bit-for-bit.
+  * Every merge pass is greedy, left to right and non-overlapping
+  * ("a a a" merges to "aa a"). That is exactly what one non-regex
+  * `replace(" l  r " -> " lr ")` does on the space-wrapped symbol string
+  * `[a,b] → " a  b "` (symbols never contain spaces, and adjacent wrapped
+  * symbols share no characters, so there are no false matches) — which is
+  * why the DuckDB oracle's unrolled `replace` CTE replays the kernels'
+  * tables and segmentations bit-for-bit.
   */
 object Bpe {
-
-  /** `[a,b] → " a  b "` — see encoding note above. */
-  private def wrap(syms: Column): Column =
-    concat(lit(" "), array_join(syms, "  "), lit(" "))
-
-  /** 1-char symbols of a word (initial BPE state). */
-  private def chars(word: Column): Column =
-    transform(sequence(lit(1), length(word)), i => word.substr(i, lit(1)))
-
-  /** Unwrap back to the symbol array. */
-  private def syms(repr: Column): Column = split(trim(repr), "  ")
 
   /** The (word, freq) vocabulary of a document corpus. */
   def vocab(docs: DataFrame, textCol: String = "text"): DataFrame =
@@ -45,79 +34,18 @@ object Bpe {
       .filter(length(col("word")) > 0)
       .groupBy("word").agg(count(lit(1)).as("freq"))
 
-  /** Run `rounds` BPE merges; returns the merge table
+  /** Run up to `rounds` BPE merges; returns the merge table
     * (round, left, right, weight) — the learned tokenizer. Ties broken
-    * deterministically: highest weight, then (left, right) ascending. */
-  def merges(docs: DataFrame, rounds: Int, textCol: String = "text"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    require(rounds >= 1, s"bad rounds=$rounds")
-    // localCheckpoint, not cache: a cache still carries (and re-plans, and
-    // stringifies on every AQE update) the full upstream lineage of `docs`,
-    // which for a deep pipeline input can OOM the driver on plan strings
-    // alone. Checkpointing physically severs the corpus lineage, making the
-    // "rounds touch only the vocabulary" claim true for the planner too.
-    var cur = vocab(docs, textCol)
-      .select(col("freq"), wrap(chars(col("word"))).as("repr"))
-      .localCheckpoint()
-    val learned = Seq.newBuilder[(Int, String, String, Long)]
-    for (round <- 1 to rounds) {
-      val s = syms(col("repr"))
-      val top = cur
-        .filter(size(s) >= 2)
-        .select(col("freq"), explode(
-          transform(sequence(lit(0), size(s) - 2),
-            i => struct(element_at(s, i + 1).as("l"),
-              element_at(s, i + 2).as("r")))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum("freq").as("w"))
-        .orderBy(desc("w"), asc("l"), asc("r"))
-        .limit(1)
-        .as[(String, String, Long)]
-        .collect()
-      if (top.nonEmpty) {
-        val (l, r, w) = top.head
-        learned += ((round, l, r, w))
-        val next = cur.select(col("freq"),
-          replace(col("repr"), lit(s" $l  $r "), lit(s" $l$r ")).as("repr"))
-          .cache()
-        next.count()
-        cur.unpersist()
-        cur = next
-      }
-    }
-    cur.unpersist()
-    spark.createDataset(learned.result()).toDF("round", "left", "right", "weight")
-  }
-
-  /** Full-depth BPE training — the production path next to [[merges]].
+    * deterministically: highest weight, then (left, right) ascending in
+    * code-point order. Stops early when no adjacent pair remains.
     *
-    * [[merges]] runs one Spark job (explode + aggregate + 1-row collect)
-    * PER merge round: fine at gate depth (4 rounds), hopeless at a
-    * production tokenizer's ~32k merges (~32k sequential jobs of pure
-    * scheduling overhead — the round-8 verdict's one "argument instead of
-    * a design" LLM-pipeline component). The corpus-size-dependent work is
-    * ONLY the vocabulary collapse (one distributed aggregation; Heaps'
-    * law keeps the (word, freq) table ~10⁶ rows even at 100 TB), so the
-    * merge loop itself belongs in ONE task over the pooled vocabulary:
-    * `repartition(1).mapPartitions(kernel)` — a single job whatever the
-    * depth, executor-local memory ~ O(vocab), the classic pair-count
-    * heap trainer (Sennrich ACL'16 reference implementation shape).
-    *
-    * Kernel: exact pair counts (freq-weighted, every adjacent POSITION —
-    * identical to the explode counter, overlaps included) kept in a hash
-    * map with a lazy-deletion max-heap over (weight desc, left asc,
-    * right asc) — the same deterministic tie-break as [[merges]]; each
+    * The kernel keeps exact pair counts (freq-weighted, every adjacent
+    * POSITION, overlaps included) in a hash map with a lazy-deletion
+    * max-heap over (weight desc, left asc, right asc); each
     * round touches only the words that CONTAIN the merged pair (an exact
     * occurrence index, maintained incrementally), so total work is
-    * Σ_rounds |affected words| · |word|, not rounds × vocab. The merge
-    * pass is the same greedy left-to-right non-overlapping walk the
-    * wrapped-string `replace` performs, so learned tables are
-    * row-identical to the iterative path at every depth (BpeSpec proves
-    * equality on fixed and randomized fixtures; the q309 gate hashes the
-    * first 4 rounds of a depth-2000 run against q97's unrolled-CTE
-    * oracle). Stops early when no mergeable pair remains. */
-  def mergesDeep(docs: DataFrame, rounds: Int, textCol: String = "text"): DataFrame = {
+    * Σ_rounds |affected words| · |word|, not rounds × vocab. */
+  def merges(docs: DataFrame, rounds: Int, textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     require(rounds >= 1, s"bad rounds=$rounds")
@@ -127,8 +55,8 @@ object Bpe {
       .toDF("round", "left", "right", "weight")
   }
 
-  /** Initial 1-symbol-per-CHARACTER split, by CODE POINT — `substr`/
-    * `length` in [[chars]] (and the DuckDB oracle) count code points, so
+  /** Initial 1-symbol-per-CHARACTER split, by CODE POINT — Spark's and
+    * DuckDB's `substr`/`length` (the oracle's split) count code points, so
     * a supplementary-plane char (emoji, rare CJK) is ONE symbol; the
     * naive `w.map(_.toString)` would split it into two lone surrogates
     * and the kernels would learn a different table than the replay. */
@@ -159,10 +87,9 @@ object Bpe {
     Integer.compare(a.length - i, b.length - j)
   }
 
-  /** The in-memory trainer: (word, freq) → (round, left, right, weight).
-    * Package-private for the spec. */
-  private[graft] def trainKernel(words: Iterator[(String, Long)],
-                                 rounds: Int): Iterator[(Int, String, String, Long)] = {
+  /** The in-memory trainer: (word, freq) → (round, left, right, weight). */
+  private def trainKernel(words: Iterator[(String, Long)],
+                          rounds: Int): Iterator[(Int, String, String, Long)] = {
     import scala.collection.mutable
     val ws = words.toArray
     val symsArr: Array[mutable.ArrayBuffer[String]] =
@@ -170,8 +97,8 @@ object Bpe {
     val freq: Array[Long] = ws.map(_._2)
     val counts = mutable.HashMap.empty[(String, String), Long]
     val where = mutable.HashMap.empty[(String, String), mutable.BitSet]
-    // max-heap: highest weight first, then (left, right) ascending —
-    // the [[merges]] orderBy(desc(w), asc(l), asc(r)) tie-break
+    // max-heap: highest weight first, then (left, right) ascending in
+    // code-point order — the oracle's ORDER BY w DESC, l, r tie-break
     val ord = new Ordering[(Long, String, String)] {
       def compare(a: (Long, String, String), b: (Long, String, String)): Int = {
         val c = java.lang.Long.compare(a._1, b._1)
@@ -230,8 +157,8 @@ object Bpe {
               touched += q
               i += 1
             }
-            // greedy left-to-right non-overlapping merge — the exact
-            // semantics of replace(" l  r " -> " lr ") on the wrapped form
+            // greedy left-to-right non-overlapping merge — the oracle's
+            // replace(" l  r " -> " lr ") on the wrapped form
             val out = new mutable.ArrayBuffer[String](s.length)
             i = 0
             while (i < s.length) {
@@ -256,35 +183,18 @@ object Bpe {
     learned.result().iterator
   }
 
-  /** Tokenize words with a learned merge table: replay the merges in
-    * order. Returns (word, tokens array). */
+  /** Tokenize words with a learned merge table. Returns (word, tokens
+    * array).
+    *
+    * Per word, repeatedly merge the LOWEST-RANK adjacent pair present
+    * (greedy left-to-right within a rank). That loop is row-identical to
+    * replaying the table in order: a pair learned at rank i can only
+    * involve symbols that existed before i, so merging a later pair can
+    * never create an earlier pair — by induction the in-order replay and
+    * the min-rank-first loop produce the same segmentation (BpeSpec pins
+    * it against an in-order replay). */
   def encode(words: DataFrame, mergeTable: Seq[(String, String)],
              wordCol: String = "word"): DataFrame = {
-    val repr0 = wrap(chars(col(wordCol)))
-    val reprN = mergeTable.foldLeft(repr0) { case (repr, (l, r)) =>
-      replace(repr, lit(s" $l  $r "), lit(s" $l$r "))
-    }
-    words.select(col(wordCol), syms(reprN).as("tokens"))
-  }
-
-  /** Production-depth BPE ENCODE — the inference twin of [[mergesDeep]].
-    *
-    * [[encode]] replays the merge table as a foldLeft of `replace`
-    * column expressions: exact, but a ~32k-merge production table would
-    * mean ~32k nested string functions in one codegen unit. This variant
-    * runs the classic priority loop as a partition-local kernel: per
-    * word, repeatedly merge the LOWEST-RANK adjacent pair present
-    * (greedy left-to-right within a rank, like the replace). That loop
-    * is provably row-identical to the in-order replay: a pair learned at
-    * rank i can only involve symbols that existed before i, so merging a
-    * later pair can never create an earlier pair — by induction the
-    * in-order replay and the min-rank-first loop produce the same
-    * segmentation (BpeSpec pins equality against [[encode]] on the
-    * trained table). The merge table rides the closure (a production
-    * tokenizer is ~32k rows — broadcast-sized by construction).
-    * Returns (word, tokens array). */
-  def encodeDeep(words: DataFrame, mergeTable: Seq[(String, String)],
-                 wordCol: String = "word"): DataFrame = {
     val spark = words.sparkSession
     import spark.implicits._
     val rank: Map[(String, String), Int] =
@@ -331,11 +241,11 @@ object Bpe {
     *
     * Distributed shape: like [[merges]], everything past the first scan
     * runs on the word VOCABULARY, not the corpus; the learned piece list
-    * is a driver-collected steering table (the BPE/Lloyd control class)
-    * inlined as an array literal, so the encode pass is one codegen'd
-    * HOF fold per word — each step advances by the matched piece length,
-    * replayed step-for-step by the oracle's recursive CTE (longest-match
-    * selection via length-guarded LEFT JOINs + coalesce).
+    * is a driver-collected steering table inlined as an array literal,
+    * so the encode pass is one codegen'd HOF fold per word — each step
+    * advances by the matched piece length, replayed step-for-step by the
+    * oracle's recursive CTE (longest-match selection via length-guarded
+    * LEFT JOINs + coalesce).
     * Output: (w, pieces '|'-joined, n_pieces). */
   def wordpieceEncode(docs: DataFrame, topSub: Int = 20, maxPiece: Int = 4,
                       textCol: String = "text"): DataFrame = {

@@ -211,21 +211,10 @@ object Dijkstra {
     * count is bounded by limitM / min-edge-weight (bounded-radius reach,
     * like the kernel's heap prune — same results, different execution
     * geometry). Equality with the kernel is asserted in DijkstraSpec and by
-    * the shared q26 oracle.
-    *
-    * `roundsPerSync` composes that many relaxation rounds LAZILY between
-    * materializations — the inner rounds are the SAME frontier algorithm
-    * (per-round min-dedup, improved-only frontiers); only convergence
-    * detection is coarser (≤ roundsPerSync−1 no-op empty-frontier rounds
-    * after the true fixpoint). Measured at sf0.1 (~18 rounds) batching is
-    * a wash: AQE schedules every shuffle stage as its own job, so wall
-    * time is pinned by ~2 sequential shuffles/round (~3 s) regardless of
-    * sync granularity — the knob exists for clusters where driver round
-    * trips (not stage scheduling) dominate. */
+    * the shared q26 oracle. */
   def reachIterative(edges: DataFrame, sources: DataFrame,
                      limitM: Double, speedMps: Double = 1.111,
-                     maxIter: Int = 100, roundsPerSync: Int = 1): DataFrame = {
-    require(roundsPerSync >= 1, s"bad roundsPerSync=$roundsPerSync")
+                     maxIter: Int = 100): DataFrame = {
     val seeds = sources
       .groupBy(col("category"), col("node_idx").as("node"))
       .agg(min("poi_id").as("poi"))
@@ -241,37 +230,23 @@ object Dijkstra {
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      var b = best
-      var f = frontier
-      for (_ <- 1 to math.min(roundsPerSync, maxIter - iter)) {
-        val relaxed = f.join(e, f("node") === e("u"))
-          .select(col("category"), col("v").as("node"),
-            (col("dist") + col("w")).as("dist"), col("poi"))
-          .filter(col("dist") <= limitM)
-        val candidates = relaxed.union(b)
-          .groupBy("category", "node")
-          .agg(min(struct(col("dist"), col("poi"))).as("m"))
-          .select(col("category"), col("node"),
-            col("m.dist").as("dist"), col("m.poi").as("poi"))
-        val prev = b.select(col("category"), col("node"),
-          col("dist").as("p_dist"), col("poi").as("p_poi"))
-        f = candidates.join(prev, Seq("category", "node"), "left")
-          .filter(col("p_dist").isNull ||
-            struct(col("dist"), col("poi")) < struct(col("p_dist"), col("p_poi")))
-          .select("category", "node", "dist", "poi")
-        b = candidates
-        iter += 1
-      }
-      // One heavy job materializes the batch; the next frontier is then
-      // derived from the TWO checkpointed frames (improved vs the batch
-      // start), not from f's lineage — f re-executing the whole inner chain
-      // at a second checkpoint was 2× the relax work. This frontier is a
-      // superset of the exact one (nodes improved at any inner round, not
-      // just the last), which only re-relaxes a few settled nodes once;
-      // empty ⟺ the batch improved nothing ⟺ fixpoint, so convergence
-      // detection is unchanged.
+      val relaxed = frontier.join(e, frontier("node") === e("u"))
+        .select(col("category"), col("v").as("node"),
+          (col("dist") + col("w")).as("dist"), col("poi"))
+        .filter(col("dist") <= limitM)
+      val candidates = relaxed.union(best)
+        .groupBy("category", "node")
+        .agg(min(struct(col("dist"), col("poi"))).as("m"))
+        .select(col("category"), col("node"),
+          col("m.dist").as("dist"), col("m.poi").as("poi"))
+      iter += 1
+      // One heavy job materializes the round; the next frontier is then
+      // derived from the TWO checkpointed frames (improved vs the round
+      // start), not from the candidates' lineage, which a second
+      // checkpoint would re-execute. Empty ⟺ the round improved nothing
+      // ⟺ fixpoint.
       val prevBest = best
-      best = b.localCheckpoint()
+      best = candidates.localCheckpoint()
       frontier = best.join(
           prevBest.select(col("category"), col("node"),
             col("dist").as("p_dist"), col("poi").as("p_poi")),

@@ -56,19 +56,9 @@ object GraphOps {
   def cleanWalkableEdges(edges: DataFrame): DataFrame =
     normalizeTags(edges).filter(walkablePredicate)
 
-  /** W1/J1 part 1: assign dense node indices 0..N-1 by ascending id
-    * (reference graph_construction.py:241-243: array position after sort).
-    *
-    * Scale note: the global `row_number` over a single ordering is a
-    * single-partition window — acceptable ONLY for one tile's node set
-    * (≤10⁶ rows, the reference's own tiling bound). For anything larger use
-    * [[indexNodesPerTile]]: indices only need tile-local uniqueness because
-    * the Dijkstra kernel is tile-local. */
-  def indexNodes(nodes: DataFrame, idCol: String = "osm_node_id"): DataFrame =
-    nodes.withColumn("node_idx",
-      (row_number().over(Window.orderBy(col(idCol))) - 1).cast("int"))
-
-  /** W1 at scale: dense per-tile node indices 0..n_t-1. The window partitions
+  /** W1/J1 part 1: dense per-tile node indices 0..n_t-1 by ascending id
+    * (reference graph_construction.py:241-243: array position after sort,
+    * per tile). The window partitions
     * by `grid_id`, so each tile sorts independently — one shuffle on grid_id,
     * every core busy, no single-partition WindowExec. Cross-tile joins must
     * key on (grid_id, node_idx). */

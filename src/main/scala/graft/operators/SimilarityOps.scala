@@ -92,15 +92,10 @@ object SimilarityOps {
 
   /** Quantize float components to round(x·1e7) longs — the native
     * codegen'd [[graft.expressions.Quantize]] kernel since round 14 (one
-    * compiled loop per row; the HOF form below re-interprets the
+    * compiled loop per row; a `transform` HOF form re-interprets the
     * round/cast tree per component). */
   def quantize(emb: Column): Column =
     call_function("graft_quantize", emb)
-
-  /** Reference implementation of [[quantize]] in pure built-ins; kept for
-    * equivalence testing and for sessions without GraftExtensions. */
-  def quantizeHof(emb: Column): Column =
-    transform(emb, x => round(x.cast("double") * 1e7).cast("long"))
 
   /** Exact integer dot product of two quantized vectors, via the native
     * codegen'd [[graft.expressions.DotQ]] expression (registered by
@@ -551,7 +546,9 @@ object SimilarityOps {
       .select(nearestCid(col("qv"), col("na"), centsLit(cents)).as("cid"),
         col("vec_id"), col("qv"))
 
-  /** [[assignToCentroidsGroupedQ]] against LITERAL codebooks. */
+  /** [[assignLit]] per group: input (grp, vec_id, qv); output (grp, cid,
+    * vec_id, qv). Each row folds over its own group's LITERAL codebook,
+    * looked up by grp in a literal map — zero joins, stays lazy. */
   private def assignGroupedLit(grouped: DataFrame,
                                books: Map[Int, Seq[Cent]]): DataFrame = {
     val csMap = map(books.toSeq.sortBy(_._1).flatMap { case (g, cs) =>
@@ -570,46 +567,6 @@ object SimilarityOps {
     * trained centroids as a materialized k-row LocalRelation. */
   def kmeansCentroidsQ(qvIn: DataFrame, k: Int, iters: Int, dim: Int): DataFrame =
     centsFrame(qvIn.sparkSession, lloydDriverQ(qvIn, k, iters, dim))
-
-  /** [[kmeansCentroidsQ]] run independently per GROUP in one DataFrame
-    * chain — the PQ / IVF-PQ sub-codebook trainer. Input (grp, vec_id,
-    * qv); output (grp, cid, n, cv). The per-group math is exactly the
-    * single-group trainer's (init = the group's k smallest vec_ids in
-    * vec_id order; assignment = the strict-`<` fold over the cid-sorted
-    * per-group centroid array; update = re-quantized mean, empty cluster
-    * keeps its previous centroid), so each group's codebook is
-    * bit-identical to a separate [[kmeansCentroidsQ]] call on that
-    * group's rows. The m independent Lloyd chains train in ONE driver-
-    * round loop (guide §2.4 — share one pass whatever m is): every round
-    * is one assignment-fold scan + one (grp, cid) partial-aggregated
-    * exchange of dimension SUMS, read back as ≤ groups·k control rows.
-    * No vector array crosses an exchange during training (the q224
-    * query-time contract, extended to train time). Returns the trained
-    * codebooks as a materialized LocalRelation. */
-  def kmeansCentroidsGroupedQ(grouped: DataFrame, k: Int, iters: Int,
-                              dim: Int): DataFrame =
-    groupedCentsFrame(grouped.sparkSession,
-      lloydDriverGroupedQ(grouped, k, iters, dim))
-
-  /** [[assignToCentroidsQ]] per group in one pass: input (grp, vec_id,
-    * qv) and (grp, cid, cv); output (grp, cid, vec_id, qv). Same
-    * broadcast-array fold, keyed by grp instead of crossJoin'd. */
-  def assignToCentroidsGroupedQ(grouped: DataFrame, cents: DataFrame): DataFrame =
-    grouped.select(col("grp"), col("vec_id"), col("qv"))
-      .withColumn("na", dotQ(col("qv"), col("qv")))
-      .join(centsArrayGrouped(cents.select(col("grp"), col("cid"), col("cv"))),
-        Seq("grp"))
-      .select(col("grp"), nearestCid(col("qv"), col("na"), col("cs")).as("cid"),
-        col("vec_id"), col("qv"))
-
-  /** [[centsArray]] per group: one row per grp holding that group's
-    * cid-sorted (cid, cv, nc) struct array, broadcast (m·k·(dim+1) longs —
-    * tiny at any corpus size). */
-  private def centsArrayGrouped(cents: DataFrame): DataFrame =
-    broadcast(cents
-      .select(col("grp"), struct(col("cid"), col("cv"),
-        dotQ(col("cv"), col("cv")).as("nc")).as("c"))
-      .groupBy("grp").agg(sort_array(collect_list(col("c"))).as("cs")))
 
   /** Assign every vector to its exact-integer-L2 nearest centroid (the
     * k-means assignment rule: argmin |a|² − 2a·c + |c|², ties to the

@@ -494,11 +494,6 @@ object TextOps {
       .filter(col("jaccard") >= threshold)
       .select(col("id1"), col("id2"), col("jaccard"))
 
-  /** 32-bit integer hash of a token: first 8 hex digits of md5, parsed —
-    * portable across engines (`conv` here, 0x-cast in SQL). */
-  def wordHash32(word: Column): Column =
-    conv(substring(md5(word), 1, 8), 16, 10).cast("long")
-
   /** 64-bit SimHash from exploded (id, term) rows: per bit j, sum ±1 by the
     * j-th bit of each 64-bit term hash; simhash bit j = 1 iff the sum is
     * positive. Terms should be SHINGLES for near-dup detection — unigrams

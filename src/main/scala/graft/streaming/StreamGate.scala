@@ -118,9 +118,10 @@ object StreamGate {
       .option("checkpointLocation", s"$work/ckpt")
       .outputMode(outputMode)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // localCheckpoint: without it every batch re-plans the whole fold
-        // chain (the Bpe.merges lesson); keyed delete-then-insert is the
-        // idempotent MERGE from StreamOpsSpec
+        // localCheckpoint: without it `state` carries every earlier
+        // batch's lineage, so each batch re-plans an ever-deeper fold
+        // chain; keyed delete-then-insert is the idempotent MERGE from
+        // StreamOpsSpec
         state = batch.unionByName(state.join(batch, keys, "left_anti"))
           .localCheckpoint()
         ()

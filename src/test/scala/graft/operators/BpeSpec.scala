@@ -1,10 +1,67 @@
 package graft.operators
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.SparkSpec
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class BpeSpec extends SparkSpec {
   import spark.implicits._
+
+  // ---- reference BPE, written from the algorithm's definition; it shares
+  // no code, heap or occurrence index with Bpe's kernels
+
+  /** A word's initial symbols: one per code point. */
+  private def codePoints(w: String): List[String] =
+    w.codePoints.toArray.toList.map(cp => new String(Character.toChars(cp)))
+
+  /** Code-point order of two strings (Spark's and DuckDB's string order). */
+  private def cpLess(a: String, b: String): Boolean = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    Ordering[List[Int]].lt(a.codePoints.toArray.toList, b.codePoints.toArray.toList)
+  }
+
+  /** One merge pass: fuse (l, r) greedily left to right, no overlaps. */
+  private def mergeOnce(s: List[String], l: String, r: String): List[String] = s match {
+    case a :: b :: rest if a == l && b == r => (l + r) :: mergeOnce(rest, l, r)
+    case a :: rest => a :: mergeOnce(rest, l, r)
+    case Nil => Nil
+  }
+
+  /** Each round recounts the frequency-weighted pairs at every adjacent
+    * position, merges the heaviest (ties: (left, right) ascending in
+    * code-point order), and stops when no pair remains. */
+  private def refMerges(texts: Seq[String], rounds: Int): Seq[(Int, String, String, Long)] = {
+    var words: Seq[(List[String], Long)] = texts.flatMap(_.split(" ")).filter(_.nonEmpty)
+      .groupBy(identity).toSeq.map { case (w, ws) => (codePoints(w), ws.size.toLong) }
+    (1 to rounds).iterator.map { round =>
+      val counts = words.flatMap { case (s, f) => s.zip(s.tail).map(_ -> f) }
+        .groupMapReduce(_._1)(_._2)(_ + _).toSeq
+      if (counts.isEmpty) None
+      else {
+        val ((l, r), w) = counts.sortWith { case (((l1, r1), w1), ((l2, r2), w2)) =>
+          if (w1 != w2) w1 > w2
+          else if (l1 != l2) cpLess(l1, l2)
+          else cpLess(r1, r2)
+        }.head
+        words = words.map { case (s, f) => (mergeOnce(s, l, r), f) }
+        Some((round, l, r, w))
+      }
+    }.takeWhile(_.isDefined).flatten.toSeq
+  }
+
+  /** Tokenize by replaying the merge table in order. */
+  private def refEncode(word: String, mergeTable: Seq[(String, String)]): List[String] =
+    mergeTable.foldLeft(codePoints(word)) { case (s, (l, r)) => mergeOnce(s, l, r) }
+
+  private def table(df: DataFrame): Seq[(Int, String, String, Long)] =
+    df.orderBy("round").as[(Int, String, String, Long)].collect().toSeq
+
+  private def docsOf(texts: Seq[String]): DataFrame =
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
 
   test("merges: hand-computed rounds on a tiny corpus") {
     // vocab: ab×3, abc×2. Round 1 pairs: (a,b)=5, (b,c)=2 → merge (a,b).
@@ -37,18 +94,15 @@ class BpeSpec extends SparkSpec {
   }
 
   test("mergesDeep == merges row-for-row on fixed fixtures, at full depth") {
-    def table(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("round").as[(Int, String, String, Long)].collect().toSeq
     val fixtures = Seq(
-      Seq((1L, "ab ab abc"), (2L, "ab abc")),
-      Seq((1L, "aaaa")),                       // overlap-count + greedy merge
-      Seq((1L, "ab ab ba ba")),                // lexicographic tie
-      Seq((1L, "the cat sat on the mat"), (2L, "the cat ate the rat")))
-    fixtures.foreach { rows =>
-      val docs = rows.toDF("doc_id", "text")
-      // rounds=50 over-asks on every fixture: both paths must exhaust at
-      // the same depth with identical (round, left, right, weight) rows
-      assert(table(Bpe.mergesDeep(docs, 50)) == table(Bpe.merges(docs, 50)))
+      Seq("ab ab abc", "ab abc"),
+      Seq("aaaa"),                       // overlap-count + greedy merge
+      Seq("ab ab ba ba"),                // lexicographic tie
+      Seq("the cat sat on the mat", "the cat ate the rat"))
+    fixtures.foreach { texts =>
+      // rounds=50 over-asks on every fixture: both must exhaust at the
+      // same depth with identical (round, left, right, weight) rows
+      assert(table(Bpe.merges(docsOf(texts), 50)) == refMerges(texts, 50))
     }
   }
 
@@ -56,17 +110,16 @@ class BpeSpec extends SparkSpec {
     // "😀" is U+1F600 (two UTF-16 code units): substr/length split by
     // CODE POINT, so the kernels must too — a surrogate-pair split would
     // learn a different table and fail the replay equivalence
-    val docs = Seq((1L, "a😀b a😀b 😀😀 a😀b"), (2L, "😀😀 b😀")).toDF("doc_id", "text")
-    def table(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("round").as[(Int, String, String, Long)].collect().toSeq
-    val deep = table(Bpe.mergesDeep(docs, 20))
-    assert(deep == table(Bpe.merges(docs, 20)) && deep.nonEmpty)
-    val mergeTable = deep.map(r => (r._2, r._3))
+    val texts = Seq("a😀b a😀b 😀😀 a😀b", "😀😀 b😀")
+    val docs = docsOf(texts)
+    val got = table(Bpe.merges(docs, 20))
+    assert(got == refMerges(texts, 20) && got.nonEmpty)
+    val mergeTable = got.map(r => (r._2, r._3))
     val words = docs.select(explode(split(col("text"), " ")).as("word")).distinct()
-    val replay = Bpe.encode(words, mergeTable)
+    val viaKernel = Bpe.encode(words, mergeTable)
       .as[(String, Seq[String])].collect().toMap
-    val viaKernel = Bpe.encodeDeep(words, mergeTable)
-      .as[(String, Seq[String])].collect().toMap
+    val replay = texts.flatMap(_.split(" ")).distinct
+      .map(w => w -> refEncode(w, mergeTable)).toMap
     assert(viaKernel == replay)
     assert(viaKernel.forall { case (w, ts) => ts.mkString == w })
   }
@@ -75,15 +128,11 @@ class BpeSpec extends SparkSpec {
     val rnd = new scala.util.Random(41)
     val words = Vector("aa", "ab", "ba", "abc", "cab", "aab", "bba", "ccc",
       "abab", "baba", "aabb", "x", "y", "xy", "yx")
-    val docs = (0 until 40).map { i =>
-      (i.toLong, Seq.fill(1 + rnd.nextInt(8))(words(rnd.nextInt(words.length)))
-        .mkString(" "))
-    }.toDF("doc_id", "text")
-    def table(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("round").as[(Int, String, String, Long)].collect().toSeq
-    val deep = table(Bpe.mergesDeep(docs, 30))
-    val iter = table(Bpe.merges(docs, 30))
-    assert(deep == iter && deep.nonEmpty)
+    val texts = (0 until 40).map { _ =>
+      Seq.fill(1 + rnd.nextInt(8))(words(rnd.nextInt(words.length))).mkString(" ")
+    }
+    val got = table(Bpe.merges(docsOf(texts), 30))
+    assert(got == refMerges(texts, 30) && got.nonEmpty)
   }
 
   test("mergesDeep runs production depth in one kernel pass") {
@@ -96,7 +145,26 @@ class BpeSpec extends SparkSpec {
         (0 until (3 + rnd.nextInt(8))).map(_ => ('a' + rnd.nextInt(6)).toChar)
           .mkString).mkString(" "))
     }.toDF("doc_id", "text")
-    val got = Bpe.mergesDeep(docs, 2000)
+    // the job count does not grow with depth: the vocabulary aggregate and
+    // the one training task, never a Spark job per merge round
+    val sc = spark.sparkContext
+    val tag = "graft.spec.bpeMerges"
+    val jobs = new AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(tag) != null)) jobs.incrementAndGet()
+    }
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(counter)
+    sc.setLocalProperty(tag, "1")
+    val rows30 = try Bpe.merges(docs, 30).collect().length finally {
+      sc.setLocalProperty(tag, null)
+      ListenerBusAccess.drain(sc)
+      sc.removeSparkListener(counter)
+    }
+    assert(rows30 == 30)
+    assert(jobs.get <= 3, s"${jobs.get} Spark jobs for 30 merge rounds")
+    val got = Bpe.merges(docs, 2000)
       .as[(Int, String, String, Long)].collect().sortBy(_._1)
     // the depth cap is honored exactly (this corpus admits >2000 merges)
     assert(got.length == 2000, s"expected 2000 rounds, got ${got.length}")
@@ -104,9 +172,9 @@ class BpeSpec extends SparkSpec {
     assert(got.map(_._1).toSeq == (1 to got.length))
     assert(got.forall(_._4 > 0))
     // exhaustion is real: two over-asks land on the same full schedule
-    val full = Bpe.mergesDeep(docs, 5000)
+    val full = Bpe.merges(docs, 5000)
       .as[(Int, String, String, Long)].collect()
-    val again = Bpe.mergesDeep(docs, 9000)
+    val again = Bpe.merges(docs, 9000)
       .as[(Int, String, String, Long)].collect()
     assert(full.length > 2000 && again.length == full.length)
     // and the capped run is the exact prefix of the full schedule
@@ -115,24 +183,23 @@ class BpeSpec extends SparkSpec {
 
   test("encodeDeep == encode on a trained table (priority loop == replay)") {
     val rnd = new scala.util.Random(13)
-    val docs = (0 until 60).map { i =>
-      (i.toLong, (0 until 4).map(_ =>
+    val texts = (0 until 60).map { _ =>
+      (0 until 4).map(_ =>
         (0 until (2 + rnd.nextInt(7))).map(_ => ('a' + rnd.nextInt(4)).toChar)
-          .mkString).mkString(" "))
-    }.toDF("doc_id", "text")
-    val table = Bpe.mergesDeep(docs, 500)
-      .orderBy("round").as[(Int, String, String, Long)].collect()
-      .map(r => (r._2, r._3)).toSeq
-    assert(table.length > 20)
+          .mkString).mkString(" ")
+    }
+    val docs = docsOf(texts)
+    val mergeTable = table(Bpe.merges(docs, 500)).map(r => (r._2, r._3))
+    assert(mergeTable.length > 20)
     val words = docs.select(explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0).distinct()
-    val replay = Bpe.encode(words, table)
+    val got = Bpe.encode(words, mergeTable)
       .as[(String, Seq[String])].collect().toMap
-    val deep = Bpe.encodeDeep(words, table)
-      .as[(String, Seq[String])].collect().toMap
-    assert(deep == replay)
+    val replay = texts.flatMap(_.split(" ")).filter(_.nonEmpty).distinct
+      .map(w => w -> refEncode(w, mergeTable)).toMap
+    assert(got == replay)
     // and the segmentation is lossless
-    assert(deep.forall { case (w, ts) => ts.mkString == w })
+    assert(got.forall { case (w, ts) => ts.mkString == w })
   }
 
   test("encode replays the merge table in order") {

@@ -82,7 +82,7 @@ class SinksSpec extends SparkSpec {
     val src = rows.toDF("k", "v")
     // ONE input partition — pid routing would put everything in shard 0;
     // key routing must still spread by hash(k)
-    Sinks.writeJdbcSharded(src.coalesce(1), urls, "t_keyed", shardKey = Some("k"))
+    Sinks.writeJdbcSharded(src.coalesce(1), urls, "t_keyed", shardKey = "k")
     val perShard = urls.map(u => Sinks.readJdbc(spark, u, "t_keyed")
       .as[(Option[Long], String)].collect().toSet)
     assert(perShard.count(_.nonEmpty) == 4, "every shard must be fed from one partition")
@@ -96,7 +96,7 @@ class SinksSpec extends SparkSpec {
     // DETERMINISTIC routing: the same key lands in the same shard on a
     // re-write with a DIFFERENT upstream partitioning — any single row
     // stays findable by recomputing its shard from the key alone
-    Sinks.writeJdbcSharded(src.repartition(8), urls, "t_keyed2", shardKey = Some("k"))
+    Sinks.writeJdbcSharded(src.repartition(8), urls, "t_keyed2", shardKey = "k")
     val perShard2 = urls.map(u => Sinks.readJdbc(spark, u, "t_keyed2")
       .as[(Option[Long], String)].collect().toSet)
     assert(perShard2 == perShard, "routing must depend on the key, not the partitioning")

@@ -486,8 +486,8 @@ class StreamOpsSpec extends SparkSpec {
     val q = mem.toDS().toDF().writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
         def applyBatch(): Unit = {
-          // localCheckpoint: the fold would otherwise re-plan the whole
-          // upstream chain per batch (the Bpe.merges lesson)
+          // localCheckpoint: `state` would otherwise carry every earlier
+          // batch's lineage, so each batch re-plans an ever-deeper chain
           state = graft.operators.EventOps
             .mergeUpsert(state, batch, "user_id", "state_cents")
             .localCheckpoint()

@@ -8,6 +8,10 @@ oracle SQL from oracle_sql.json in DuckDB over the same parquet tables,
 and compares schemas + values (columns sorted by name, rows sorted).
 Exact equality for everything, including floats — the engine is designed
 for bit-parity, so any drift is a bug to fix on the Scala side.
+
+SPARK_GRAFT_ONLY (the comma-separated query list graft.Verify reads)
+restricts the check to exactly those queries; a listed name with no
+Spark output or no oracle SQL counts as bad.
 """
 import json
 import math
@@ -56,9 +60,15 @@ def main():
     with open(f"{outdir}/oracle_sql.json") as f:
         oracle = json.load(f)
 
+    only = os.environ.get("SPARK_GRAFT_ONLY")
+    names = sorted(oracle) if only is None else sorted(set(only.split(",")))
     n_ok = n_bad = 0
-    for name in sorted(oracle):
-        sql = oracle[name]
+    for name in names:
+        sql = oracle.get(name)
+        if sql is None:
+            print(f"[BAD ] {name}: not in oracle_sql.json")
+            n_bad += 1
+            continue
         res_dir = f"{outdir}/{name}"
         if not os.path.isdir(res_dir):
             print(f"[MISS] {name}: no spark output")
