@@ -1,5 +1,7 @@
 package graft
 
+import scala.annotation.tailrec
+
 import org.apache.spark.sql.DataFrame
 
 /** Materialize-then-release: the cache-hygiene contract for
@@ -12,26 +14,54 @@ import org.apache.spark.sql.DataFrame
   * cache would be gone before the caller ever ran the plan, and every
   * consumer would silently recompute the shared lineage (the exact
   * double-evaluation family SCALECHECK caught on q71). The working
-  * discipline is: run the operator's own job once (`localCheckpoint()`,
-  * eager), hand the caller a frame backed by the materialized result,
-  * and release the shared caches deterministically before returning.
+  * discipline is: run the operator's own job once ([[cut]], eager), hand
+  * the caller a frame backed by the materialized result, and release the
+  * shared caches deterministically before returning.
   *
   * Why `localCheckpoint` and not another `cache`: CacheManager holds
   * cached plans until an explicit unpersist, while locally-checkpointed
   * partitions belong to their RDD and the ContextCleaner reclaims them
   * as soon as the frame is garbage-collected — self-cleaning across a
-  * long session. The trade is lineage truncation (partitions are not
-  * recomputable if an executor dies mid-read); on a real cluster, an
-  * operator whose output must survive executor loss would swap this for
-  * reliable `checkpoint()` on cluster storage — one line, same contract.
+  * long session. The trade is lineage truncation: partitions are not
+  * recomputable if their blocks are lost (an executor dies mid-read),
+  * and the next read fails with `[CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND]`
+  * instead of recomputing. On a real cluster, an operator whose output
+  * must survive executor loss would swap [[cut]] for reliable
+  * `checkpoint()` on cluster storage.
+  *
+  * [[cut]] is that one decision for [[thenRelease]] and for every cut in
+  * `GraphOps` and `Dijkstra.reachIterative`, whose convergence loops run
+  * through [[fixpoint]]. The other `localCheckpoint` sites (the Lloyd
+  * trainers, the text, corpus and geo operators, the query bodies) are
+  * not yet routed through it.
   */
 object Materialize {
+  /** The lineage cut: eagerly materializes `df` (one job) and returns a
+    * frame whose plan reads the materialized partitions. */
+  def cut(df: DataFrame): DataFrame = df.localCheckpoint()
+
   /** Eagerly materializes `result` (one job, while `shared` caches are
     * hot), then unpersists every `shared` frame. Returns the
     * materialized result; schema and row set are unchanged. */
   def thenRelease(result: DataFrame, shared: DataFrame*): DataFrame = {
-    val out = result.localCheckpoint()
+    val out = cut(result)
     shared.foreach(_.unpersist())
     out
+  }
+
+  /** Driver-steered iteration to a fixpoint: applies `step` to `init`,
+    * then to each result, until `done` holds of the latest state, and
+    * returns that state. `step` cuts its own state (so no round's plan
+    * nests the last) and `done` reads the cut state. If `cap` rounds run
+    * without `done` holding, it throws: a truncated fixpoint is
+    * indistinguishable from a converged one. */
+  def fixpoint[S](op: String, init: S, cap: Int)(step: S => S)(done: S => Boolean): S = {
+    @tailrec def go(s: S, rounds: Int): S = {
+      if (rounds == cap)
+        throw new IllegalStateException(s"$op did not converge within $cap rounds")
+      val next = step(s)
+      if (done(next)) next else go(next, rounds + 1)
+    }
+    go(init, 0)
   }
 }

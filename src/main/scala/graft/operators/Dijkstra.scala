@@ -5,6 +5,8 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** One edge of a tile-local pedestrian graph (directed; symmetrized upstream). */
 case class TileEdge(tile: String, u: Int, v: Int, w: Double)
 
@@ -210,59 +212,37 @@ object Dijkstra {
     * driver only steers iteration; all data stays distributed. Round
     * count is bounded by limitM / min-edge-weight (bounded-radius reach,
     * like the kernel's heap prune — same results, different execution
-    * geometry). Equality with the kernel is asserted in DijkstraSpec and by
-    * the shared q26 oracle. */
+    * geometry); the call fails if it passes 100 rounds. Equality with the
+    * kernel is asserted in DijkstraSpec and by the shared q26 oracle. */
   def reachIterative(edges: DataFrame, sources: DataFrame,
-                     limitM: Double, speedMps: Double = 1.111,
-                     maxIter: Int = 100): DataFrame = {
-    val seeds = sources
+                     limitM: Double, speedMps: Double = 1.111): DataFrame = {
+    val seeds = Materialize.cut(sources
       .groupBy(col("category"), col("node_idx").as("node"))
       .agg(min("poi_id").as("poi"))
-      .select(col("category"), col("node"), lit(0.0).as("dist"), col("poi"))
-      .localCheckpoint()
+      .select(col("category"), col("node"), lit(0.0).as("dist"), col("poi"),
+        lit(true).as("moved")))
     // Materialize the (possibly expensive) edge lineage ONCE — every round
     // joins against it, and without the cut each round re-executes the
     // whole upstream plan (scan + symmetrize-dedup measured as the
     // dominant per-round cost).
-    val e = edges.select(col("u"), col("v"), col("w")).localCheckpoint()
-    var best = seeds
-    var frontier = seeds
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val relaxed = frontier.join(e, frontier("node") === e("u"))
+    val e = Materialize.cut(edges.select(col("u"), col("v"), col("w")))
+    val best = Materialize.fixpoint("reachIterative", seeds, cap = 100) { best =>
+      val f = best.filter(col("moved"))
+      val relaxed = f.join(e, f("node") === e("u"))
         .select(col("category"), col("v").as("node"),
-          (col("dist") + col("w")).as("dist"), col("poi"))
+          (col("dist") + col("w")).as("dist"), col("poi"), lit(1).as("tag"))
         .filter(col("dist") <= limitM)
-      val candidates = relaxed.union(best)
+      // Tagged union: a row's own value (tag 0) wins ties, so the minimum
+      // carries tag 1 exactly when the round strictly improved the row or
+      // first reached it — the next frontier, read from the cut state.
+      Materialize.cut(relaxed
+        .union(best.select(col("category"), col("node"), col("dist"), col("poi"),
+          lit(0).as("tag")))
         .groupBy("category", "node")
-        .agg(min(struct(col("dist"), col("poi"))).as("m"))
-        .select(col("category"), col("node"),
-          col("m.dist").as("dist"), col("m.poi").as("poi"))
-      iter += 1
-      // One heavy job materializes the round; the next frontier is then
-      // derived from the TWO checkpointed frames (improved vs the round
-      // start), not from the candidates' lineage, which a second
-      // checkpoint would re-execute. Empty ⟺ the round improved nothing
-      // ⟺ fixpoint.
-      val prevBest = best
-      best = candidates.localCheckpoint()
-      frontier = best.join(
-          prevBest.select(col("category"), col("node"),
-            col("dist").as("p_dist"), col("poi").as("p_poi")),
-          Seq("category", "node"), "left")
-        .filter(col("p_dist").isNull ||
-          struct(col("dist"), col("poi")) < struct(col("p_dist"), col("p_poi")))
-        .select("category", "node", "dist", "poi")
-        .localCheckpoint()
-      converged = frontier.isEmpty
-    }
-    // A silently truncated fixpoint is indistinguishable from a converged
-    // one — fail loudly instead (hit only when limitM/min-edge-weight
-    // exceeds maxIter rounds).
-    require(converged,
-      s"reachIterative did not converge within $maxIter rounds; raise maxIter " +
-        "(rounds needed ≈ limitM / min edge weight)")
+        .agg(min(struct(col("dist"), col("poi"), col("tag"))).as("m"))
+        .select(col("category"), col("node"), col("m.dist").as("dist"),
+          col("m.poi").as("poi"), (col("m.tag") === 1).as("moved")))
+    }(_.filter(col("moved")).isEmpty)
     best.select(col("category"), col("node").as("node_idx"),
       col("dist").as("dist_m"), (col("dist") / lit(speedMps)).as("time_s"),
       col("poi").as("poi_id"))

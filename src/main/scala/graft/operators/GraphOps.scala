@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.functions.GeoFunctions._
 
 /** Relational graph-construction operators (SURVEY.md §2.2/§2.3/§2.4/§2.6:
@@ -205,20 +206,18 @@ object GraphOps {
                        srcCol: String = "u", dstCol: String = "v"): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-    val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      .distinct().localCheckpoint()
-    var labels = sym.select(col("u").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .localCheckpoint()
+    val sym = Materialize.cut(
+      e.union(e.select(col("v").as("u"), col("u").as("v"))).distinct())
+    var labels = Materialize.cut(sym.select(col("u").as("node")).distinct()
+      .select(col("node"), col("node").as("label")))
     for (_ <- 1 to rounds) {
       val votes = sym
         .join(labels.select(col("node").as("v"), col("label")), Seq("v"))
         .groupBy(col("u").as("node"), col("label"))
         .agg(count(lit(1)).as("cnt"))
       val w = Window.partitionBy("node").orderBy(col("cnt").desc, col("label"))
-      labels = votes.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).select(col("node"), col("label"))
-        .localCheckpoint()
+      labels = Materialize.cut(votes.withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1).select(col("node"), col("label")))
     }
     labels.select(col("node"), col("label").as("community"))
   }
@@ -245,48 +244,37 @@ object GraphOps {
     * For billion-edge general graphs prefer the O(log n)-round
     * large-star/small-star variant; plain propagation is the right
     * trade for dedup graphs, whose diameter is small by construction.
-    * Lineage is cut per round with localCheckpoint, convergence is an
-    * isEmpty on the strictly-improved label set — same driver-steering
-    * pattern as [[graft.operators.Dijkstra.reachIterative]].
+    * Lineage is cut per round; the round's min-aggregate flags the labels
+    * it strictly lowered, and convergence is an isEmpty on that flag in
+    * the cut state — same driver-steering pattern as
+    * [[graft.operators.Dijkstra.reachIterative]]. More than 50 rounds
+    * fail the call.
     *
     * Input: two node-id columns of any orderable type (same type both
     * sides). Output: (id, component), one row per distinct node appearing
     * in `pairs`; singletons never appear (a node with no pairs is its own
     * component by definition — join survivors back against the corpus). */
   def connectedComponents(pairs: DataFrame, srcCol: String = "id1",
-                          dstCol: String = "id2", maxIter: Int = 50): DataFrame = {
+                          dstCol: String = "id2"): DataFrame = {
     // Materialize the pair lineage ONCE before symmetrizing: the two
     // union branches are separate subplans, so an un-cut `pairs` (e.g. a
     // whole MinHash-verify chain) would execute twice inside the sym
     // checkpoint — measured as the dominant cost of q71 at 10× sf0.1.
-    val p = pairs.select(col(srcCol).as("id"), col(dstCol).as("nbr"))
-      .localCheckpoint()
-    val sym = p
-      .union(p.select(col("nbr").as("id"), col("id").as("nbr")))
-      .distinct()
-      .localCheckpoint()
-    var labels = sym.select(col("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-      .localCheckpoint()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val viaNbr = sym.join(labels.select(col("id").as("nbr"),
-          col("label")), Seq("nbr"))
-        .select(col("id"), col("label"))
-      val next = labels.union(viaNbr)
-        .groupBy("id").agg(min("label").as("label"))
-        .localCheckpoint()
-      val improved = next.join(
-          labels.select(col("id"), col("label").as("old")), Seq("id"))
-        .filter(col("label") < col("old"))
-      converged = improved.isEmpty
-      labels = next
-      iter += 1
-    }
-    require(converged,
-      s"connectedComponents did not converge within $maxIter rounds " +
-        "(rounds needed = max component diameter)")
+    val p = Materialize.cut(pairs.select(col(srcCol).as("id"), col(dstCol).as("nbr")))
+    val sym = Materialize.cut(
+      p.union(p.select(col("nbr").as("id"), col("id").as("nbr"))).distinct())
+    val labels0 = Materialize.cut(sym.select(col("id")).distinct()
+      .select(col("id"), col("id").as("label")))
+    val labels = Materialize.fixpoint("connectedComponents", labels0, cap = 50) { labels =>
+      val viaNbr = sym.join(labels.select(col("id").as("nbr"), col("label")), Seq("nbr"))
+        .select(col("id"), col("label"), lit(1).as("tag"))
+      // tagged union: the node's own label (tag 0) wins ties, so tag 1
+      // survives the min exactly when a neighbor strictly lowered it
+      Materialize.cut(labels.select(col("id"), col("label"), lit(0).as("tag"))
+        .union(viaNbr)
+        .groupBy("id").agg(min(struct(col("label"), col("tag"))).as("m"))
+        .select(col("id"), col("m.label").as("label"), (col("m.tag") === 1).as("moved")))
+    }(_.filter(col("moved")).isEmpty)
     labels.select(col("id"), col("label").as("component"))
   }
 
@@ -307,57 +295,27 @@ object GraphOps {
     * Production refinement for huge graphs is batched peeling (remove ALL
     * sub-k nodes each round, which this does) — round count is small for
     * real topologies; the fixpoint is reached when the edge count stops
-    * changing, and [[require]]d within maxIter. */
+    * changing, and more than 50 rounds fail the call. */
   def kCore(edges: DataFrame, k: Int, srcCol: String = "u",
-            dstCol: String = "v", maxIter: Int = 50): DataFrame = {
-    var e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .localCheckpoint()
-    var nEdges = e.count()
-    var iter = 0
-    var fixed = false
-    while (!fixed && iter < maxIter) {
-      val deg = e.select(col("u").as("node"))
-        .union(e.select(col("v").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-      val keep = deg.filter(col("deg") >= k).select("node")
-      val e2 = e
-        .join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
-        .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
-        .select("u", "v")
-        .localCheckpoint()
-      val n2 = e2.count()
-      fixed = n2 == nEdges
-      e = e2; nEdges = n2
-      iter += 1
-    }
-    require(fixed, s"kCore did not reach a fixpoint within $maxIter rounds")
+            dstCol: String = "v"): DataFrame = {
+    val e0 = Materialize.cut(edges.select(col(srcCol).as("u"), col(dstCol).as("v")))
+    // state: (edges, edge count before the round, edge count after it)
+    val (e, _, _) = Materialize.fixpoint("kCore", (e0, -1L, e0.count()), cap = 50) {
+      case (e, _, nEdges) =>
+        val deg = e.select(col("u").as("node"))
+          .union(e.select(col("v").as("node")))
+          .groupBy("node").agg(count(lit(1)).as("deg"))
+        val keep = deg.filter(col("deg") >= k).select("node")
+        val e2 = Materialize.cut(e
+          .join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
+          .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
+          .select("u", "v"))
+        (e2, nEdges, e2.count())
+    } { case (_, before, after) => before == after }
     e.select(col("u").as("node")).union(e.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
   }
 
-  /** Deterministic integer PageRank over a directed edge list — node
-    * importance for graph QA and link-based corpus quality signals.
-    *
-    * Ranks live in MICRO-UNITS (1 000 000 = rank 1.0) and every update is
-    * 64-bit integer arithmetic:
-    *
-    *   contrib(u→v) = rank(u) div outdeg(u)
-    *   rank'(v)     = 150 000 + (850 · Σ contrib(·→v)) div 1000
-    *
-    * Floating-point PageRank is NOT reproducible distributed (double
-    * addition is order-dependent, and shuffle order varies run to run);
-    * integer mass is associative-commutative, so the result is identical
-    * on 1 core or 1000 executors — and bit-checkable against any other
-    * engine. The `div` flooring loses ≤outdeg−1 micro-units per node per
-    * round (≤1e-3 relative), far below ranking-relevant signal. Dangling
-    * nodes (no out-edges) leak their mass — the standard simplification;
-    * redistribute upstream if mass conservation matters.
-    *
-    * A FIXED iteration count (no convergence probe) keeps the whole plan
-    * lazy — rounds compose as join + partial-aggregated shuffle on the
-    * node id, the same geometry as one [[connectedComponents]] round.
-    * iters is small by design (rank mass geometrically settles at 0.85^k);
-    * for k ≳ 5 checkpoint between rounds at the call site. */
   /** Per-node triangle counts of an undirected graph — two equi-joins,
     * never an all-pairs pass: orient every edge low-id → high-id (dedup +
     * self-loop drop), enumerate wedges a<b<c by joining (a,b)⋈(b,c), and
@@ -450,39 +408,51 @@ object GraphOps {
     * itself a node id; roots point at themselves. Depths are exact (the
     * (anc, depth) pair walks real edges — jumping a root adds depth 0,
     * so converged rows are fixpoints of the join, same invariant as
-    * [[connectedComponents]]' min-label fold). */
+    * [[connectedComponents]]' min-label fold). More than 40 rounds (a
+    * depth beyond 2^40, or a parent that is not a node) fail the call. */
   def pointerJumpRoots(parents: DataFrame, idCol: String = "id",
-                       parentCol: String = "parent", maxIter: Int = 40): DataFrame = {
-    var state = parents.select(col(idCol).as("id"), col(parentCol).as("anc"),
-        when(col(parentCol) === col(idCol), 0L).otherwise(1L).as("depth"))
-      .localCheckpoint()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
+                       parentCol: String = "parent"): DataFrame = {
+    val init = Materialize.cut(parents.select(col(idCol).as("id"), col(parentCol).as("anc"),
+      when(col(parentCol) === col(idCol), 0L).otherwise(1L).as("depth")))
+    val state = Materialize.fixpoint("pointerJumpRoots", init, cap = 40) { state =>
       // inner join is total by the every-parent-is-a-node contract; the
-      // localCheckpoint cuts the doubling lineage (2^rounds plan nodes).
-      // d2 (= the hop this round added) rides along in the checkpoint so
-      // the convergence probe — "did any row advance?", previously a
-      // SECOND state×state join per round — is a cheap scan of already-
-      // materialized partitions: depth changed iff d2 ≠ 0, so the round
-      // count (and every depth) is identical to the old old≠new check.
+      // cut stops the doubling lineage (2^rounds plan nodes). d2 (= the
+      // hop this round added) rides along in the cut state, so the
+      // convergence probe "did any row advance?" is a scan of
+      // materialized partitions: depth changed iff d2 ≠ 0.
       val s3 = state.select("id", "anc", "depth")
-      val next = s3.join(
+      Materialize.cut(s3.join(
           s3.select(col("id").as("anc"), col("anc").as("anc2"),
             col("depth").as("d2")), Seq("anc"))
         .select(col("id"), col("anc2").as("anc"),
-          (col("depth") + col("d2")).as("depth"), col("d2"))
-        .localCheckpoint()
-      converged = next.filter(col("d2") =!= 0L).isEmpty
-      state = next
-      iter += 1
-    }
-    require(converged, s"pointerJumpRoots did not converge in $maxIter " +
-      "rounds (depth would exceed 2^rounds — or a parent is not a node)")
+          (col("depth") + col("d2")).as("depth"), col("d2")))
+    }(_.filter(col("d2") =!= 0L).isEmpty)
     state.select(col("id"), col("anc").as("root"), col("depth"))
-      // d2 stays behind in the checkpoint; the public frame is unchanged
   }
 
+  /** Deterministic integer PageRank over a directed edge list — node
+    * importance for graph QA and link-based corpus quality signals.
+    *
+    * Ranks live in MICRO-UNITS (1 000 000 = rank 1.0) and every update is
+    * 64-bit integer arithmetic:
+    *
+    *   contrib(u→v) = rank(u) div outdeg(u)
+    *   rank'(v)     = 150 000 + (850 · Σ contrib(·→v)) div 1000
+    *
+    * Floating-point PageRank is NOT reproducible distributed (double
+    * addition is order-dependent, and shuffle order varies run to run);
+    * integer mass is associative-commutative, so the result is identical
+    * on 1 core or 1000 executors — and bit-checkable against any other
+    * engine. The `div` flooring loses ≤outdeg−1 micro-units per node per
+    * round (≤1e-3 relative), far below ranking-relevant signal. Dangling
+    * nodes (no out-edges) leak their mass — the standard simplification;
+    * redistribute upstream if mass conservation matters.
+    *
+    * A FIXED iteration count (no convergence probe) keeps the whole plan
+    * lazy — rounds compose as join + partial-aggregated shuffle on the
+    * node id, the same geometry as one [[connectedComponents]] round.
+    * iters is small by design (rank mass geometrically settles at 0.85^k);
+    * for k ≳ 5 checkpoint between rounds at the call site. */
   def pageRank(edges: DataFrame, iters: Int = 5,
                srcCol: String = "u", dstCol: String = "v"): DataFrame = {
     require(iters >= 1, s"bad iters=$iters")
@@ -573,27 +543,22 @@ object GraphOps {
     val lm = nodes.filter(col("node_idx") % lmMod === 0)
       .orderBy("node_idx").limit(nLandmarks)
       .select(col("node_idx").as("landmark"))
-    var reach = lm.select(col("landmark"), col("landmark").as("node"),
-      lit(0L).as("dist_m")).localCheckpoint()
-    var frontier = reach
-    (1 to rounds).foreach { _ =>
-      val cand = frontier.join(sym, col("node") === col("u"))
+    val reach0 = Materialize.cut(lm.select(col("landmark"), col("landmark").as("node"),
+      lit(0L).as("dist_m"), lit(true).as("moved")))
+    val reach = (1 to rounds).foldLeft(reach0) { (reach, _) =>
+      val cand = reach.filter(col("moved")).join(sym, col("node") === col("u"))
         .select(col("landmark"), col("v").as("node"),
-          (col("dist_m") + col("w").cast("long")).as("dist_m"))
+          (col("dist_m") + col("w").cast("long")).as("dist_m"), lit(1).as("tag"))
         .filter(col("dist_m") <= limitM)
-        .groupBy("landmark", "node").agg(min("dist_m").as("dist_m"))
-      val improved = cand
-        .join(reach.select(col("landmark"), col("node"),
-          col("dist_m").as("old_m")), Seq("landmark", "node"), "left")
-        .filter(col("old_m").isNull || col("dist_m") < col("old_m"))
-        .select("landmark", "node", "dist_m")
-        .localCheckpoint() // cut lineage: each round's plan must not nest the last
-      reach = reach.union(improved)
-        .groupBy("landmark", "node").agg(min("dist_m").as("dist_m"))
-        .localCheckpoint()
-      frontier = improved
+      // tagged union: the old distance (tag 0) wins ties, so tag 1 marks
+      // the rows this round improved or first reached — the next frontier
+      Materialize.cut(reach.select(col("landmark"), col("node"), col("dist_m"), lit(0).as("tag"))
+        .union(cand)
+        .groupBy("landmark", "node").agg(min(struct(col("dist_m"), col("tag"))).as("m"))
+        .select(col("landmark"), col("node"), col("m.dist_m").as("dist_m"),
+          (col("m.tag") === 1).as("moved")))
     }
-    reach
+    reach.select("landmark", "node", "dist_m")
   }
 
   /** NEIGHBORHOOD FUNCTION via mergeable HLL sketches (the HyperBall /
@@ -616,27 +581,24 @@ object GraphOps {
   def neighborhoodFunction(nodes: DataFrame, edges: DataFrame, hops: Int = 2,
                            lgK: Int = 12): DataFrame = {
     require(hops >= 1 && lgK >= 4, s"bad hops=$hops lgK=$lgK")
-    val sym = edges.select(col("u").as("uu"), col("v").as("vv"))
-      .union(edges.select(col("v").as("uu"), col("u").as("vv")))
-      .localCheckpoint()
+    val sym = Materialize.cut(edges.select(col("u").as("uu"), col("v").as("vv"))
+      .union(edges.select(col("v").as("uu"), col("u").as("vv"))))
     // exact lane: bounded reach-pair closure (v, member)
     var pairs = nodes.select(col("node_idx").as("v"), col("node_idx").as("m"))
     (1 to hops).foreach { _ =>
       val step = pairs.join(sym, pairs("m") === col("uu"))
         .select(col("v"), col("vv").as("m"))
-      pairs = pairs.union(step).distinct().localCheckpoint()
+      pairs = Materialize.cut(pairs.union(step).distinct())
     }
     val exact = pairs.groupBy("v").agg(count(lit(1)).as("exact_ball"))
     // sketch lane: HyperBall rounds over binary HLL sketch columns
-    var sk = nodes.groupBy(col("node_idx").as("v"))
-      .agg(expr(s"hll_sketch_agg(node_idx, $lgK)").as("sk"))
-      .localCheckpoint()
+    var sk = Materialize.cut(nodes.groupBy(col("node_idx").as("v"))
+      .agg(expr(s"hll_sketch_agg(node_idx, $lgK)").as("sk")))
     (1 to hops).foreach { _ =>
       val fromNbr = sk.join(sym, sk("v") === col("uu"))
         .select(col("vv").as("v"), col("sk"))
-      sk = sk.select(col("v"), col("sk")).union(fromNbr)
-        .groupBy("v").agg(expr("hll_union_agg(sk, true)").as("sk"))
-        .localCheckpoint()
+      sk = Materialize.cut(sk.select(col("v"), col("sk")).union(fromNbr)
+        .groupBy("v").agg(expr("hll_union_agg(sk, true)").as("sk")))
     }
     val est = sk.select(col("v"),
       expr("hll_sketch_estimate(sk)").cast("long").as("est_ball"))
@@ -661,9 +623,9 @@ object GraphOps {
   def modularity(edges: DataFrame, labels: DataFrame,
                  srcCol: String = "u", dstCol: String = "v"): DataFrame = {
     val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-    val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      .distinct().localCheckpoint()
-    val lab = labels.select(col("node"), col("community")).localCheckpoint()
+    val sym = Materialize.cut(
+      e.union(e.select(col("v").as("u"), col("u").as("v"))).distinct())
+    val lab = Materialize.cut(labels.select(col("node"), col("community")))
     val withLab = sym
       .join(lab.select(col("node").as("u"), col("community").as("cu")), Seq("u"))
       .join(lab.select(col("node").as("v"), col("community").as("cv")), Seq("v"))
@@ -741,16 +703,14 @@ object GraphOps {
   def hits(edges: DataFrame, iters: Int = 3,
            srcCol: String = "u", dstCol: String = "v"): DataFrame = {
     require(iters >= 1, s"bad iters=$iters")
-    // localCheckpoint both shared tables: every one of the 2·iters
-    // gathers re-reads them, and unlike pageRank's single-fold plan the
-    // alternating h/a recursion nests joins too deep for ReuseExchange —
+    // cut both shared tables: every one of the 2·iters gathers re-reads
+    // them, and unlike pageRank's single-fold plan the alternating h/a
+    // recursion nests joins too deep for ReuseExchange —
     // measured 14.6 s at sf0.1 uncheckpointed (data-independent Catalyst
     // re-optimization), 2.9 s with the lineage severed
-    val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .localCheckpoint()
-    val nodes = e.select(col("u").as("node"))
-      .union(e.select(col("v").as("node"))).distinct()
-      .localCheckpoint()
+    val e = Materialize.cut(edges.select(col(srcCol).as("u"), col(dstCol).as("v")))
+    val nodes = Materialize.cut(e.select(col("u").as("node"))
+      .union(e.select(col("v").as("node"))).distinct())
     def renorm(df: DataFrame, c: String): DataFrame =
       df.crossJoin(broadcast(df.agg(max(abs(col(c))).as("mx"))))
         .select(col("node"),
@@ -771,10 +731,8 @@ object GraphOps {
       // dominates wall time (measured at sf0.1: 14.6 s fully nested,
       // 8.2 s severed only at the inputs, 3.0 s severed per round — the
       // score frames are |nodes| rows, so materialization is noise)
-      h = renorm(gather(a, "a", "h", joinOn = "v", groupOn = "u"), "h")
-        .localCheckpoint()
-      a = renorm(gather(h, "h", "a", joinOn = "u", groupOn = "v"), "a")
-        .localCheckpoint()
+      h = Materialize.cut(renorm(gather(a, "a", "h", joinOn = "v", groupOn = "u"), "h"))
+      a = Materialize.cut(renorm(gather(h, "h", "a", joinOn = "u", groupOn = "v"), "a"))
     }
     h.join(a, Seq("node")).select(col("node"), col("h"), col("a"))
   }

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,4 +33,27 @@ object TestSession {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
+
+  /** Runs `body` and returns its value with the number of Spark jobs it
+    * started. Only jobs carrying this thread's local property are
+    * counted, and the listener bus is drained on both sides, since
+    * events reach listeners asynchronously. */
+  def countingJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = "graft.spec.countingJobs"
+    val jobs = new AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(tag) != null)) jobs.incrementAndGet()
+    }
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(counter)
+    sc.setLocalProperty(tag, "1")
+    val out = try body finally {
+      sc.setLocalProperty(tag, null)
+      ListenerBusAccess.drain(sc)
+      sc.removeSparkListener(counter)
+    }
+    (out, jobs.get)
+  }
 }

@@ -1,10 +1,6 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.SparkSpec
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -93,7 +89,7 @@ class BpeSpec extends SparkSpec {
     assert(got == Seq((1, "a", "b", 2L)))
   }
 
-  test("mergesDeep == merges row-for-row on fixed fixtures, at full depth") {
+  test("merges == reference trainer row-for-row on fixed fixtures, at full depth") {
     val fixtures = Seq(
       Seq("ab ab abc", "ab abc"),
       Seq("aaaa"),                       // overlap-count + greedy merge
@@ -106,7 +102,7 @@ class BpeSpec extends SparkSpec {
     }
   }
 
-  test("mergesDeep/encodeDeep treat supplementary-plane chars as one symbol") {
+  test("merges/encode treat supplementary-plane chars as one symbol") {
     // "😀" is U+1F600 (two UTF-16 code units): substr/length split by
     // CODE POINT, so the kernels must too — a surrogate-pair split would
     // learn a different table and fail the replay equivalence
@@ -124,7 +120,7 @@ class BpeSpec extends SparkSpec {
     assert(viaKernel.forall { case (w, ts) => ts.mkString == w })
   }
 
-  test("mergesDeep == merges on a randomized corpus (cross-checks the heap/index)") {
+  test("merges == reference trainer on a random corpus (checks the heap/index)") {
     val rnd = new scala.util.Random(41)
     val words = Vector("aa", "ab", "ba", "abc", "cab", "aab", "bba", "ccc",
       "abab", "baba", "aabb", "x", "y", "xy", "yx")
@@ -135,7 +131,7 @@ class BpeSpec extends SparkSpec {
     assert(got == refMerges(texts, 30) && got.nonEmpty)
   }
 
-  test("mergesDeep runs production depth in one kernel pass") {
+  test("merges runs production depth in one kernel pass") {
     // a corpus whose vocabulary admits hundreds of merges: the kernel must
     // learn them all in ONE job (no per-round Spark round-trips) and stop
     // exactly when no adjacent pair remains
@@ -147,23 +143,9 @@ class BpeSpec extends SparkSpec {
     }.toDF("doc_id", "text")
     // the job count does not grow with depth: the vocabulary aggregate and
     // the one training task, never a Spark job per merge round
-    val sc = spark.sparkContext
-    val tag = "graft.spec.bpeMerges"
-    val jobs = new AtomicInteger
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(tag) != null)) jobs.incrementAndGet()
-    }
-    ListenerBusAccess.drain(sc)
-    sc.addSparkListener(counter)
-    sc.setLocalProperty(tag, "1")
-    val rows30 = try Bpe.merges(docs, 30).collect().length finally {
-      sc.setLocalProperty(tag, null)
-      ListenerBusAccess.drain(sc)
-      sc.removeSparkListener(counter)
-    }
+    val (rows30, jobs) = countingJobs(Bpe.merges(docs, 30).collect().length)
     assert(rows30 == 30)
-    assert(jobs.get <= 3, s"${jobs.get} Spark jobs for 30 merge rounds")
+    assert(jobs <= 3, s"$jobs Spark jobs for 30 merge rounds")
     val got = Bpe.merges(docs, 2000)
       .as[(Int, String, String, Long)].collect().sortBy(_._1)
     // the depth cap is honored exactly (this corpus admits >2000 merges)
@@ -181,7 +163,7 @@ class BpeSpec extends SparkSpec {
     assert(full.sortBy(_._1).take(2000).toSeq == got.toSeq)
   }
 
-  test("encodeDeep == encode on a trained table (priority loop == replay)") {
+  test("encode == the in-order replay on a trained table (priority loop)") {
     val rnd = new scala.util.Random(13)
     val texts = (0 until 60).map { _ =>
       (0 until 4).map(_ =>

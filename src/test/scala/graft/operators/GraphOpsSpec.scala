@@ -165,6 +165,17 @@ class GraphOpsSpec extends SparkSpec {
     assert(got == (0L until 20L).map(_ -> 0L).toMap)
   }
 
+  test("connectedComponents: a 16-node path runs in at most 86 Spark jobs") {
+    // Per round: one cut that also flags the labels it lowered, and one
+    // scan of that flag. Finding what moved by joining the new labels
+    // against the old ones costs two more jobs a round (118 here).
+    val pairs = (1 until 16).map(i => (i.toLong, (i - 1).toLong)).reverse
+    val (got, jobs) = countingJobs(GraphOps.connectedComponents(pairs.toDF("id1", "id2"))
+      .as[(Long, Long)].collect().toMap)
+    assert(got == (0L until 16L).map(_ -> 0L).toMap)
+    assert(jobs <= 86, s"$jobs Spark jobs for a 16-node path")
+  }
+
   test("kCore: K4 plus a pendant tail — the tail peels, the clique survives") {
     // K4 on 1..4, tail 4-5-6: 3-core is exactly K4 (every node deg 3)
     val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))

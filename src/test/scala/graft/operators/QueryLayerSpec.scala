@@ -1,10 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.SparkSpec
 
 class QueryLayerSpec extends SparkSpec {
@@ -102,29 +97,15 @@ class QueryLayerSpec extends SparkSpec {
     // aggregate per query. A per-query aggregate over the node table (a
     // data-derived cell size, an anti-join feeding the fallback) adds
     // jobs and fails this: the plan that had both ran 13 jobs here.
-    val sc = spark.sparkContext
     val pts = Seq((1L, 18.6002, 54.3501)).toDF("query_id", "lon", "lat")
     val reach = Seq((0, "supermarket", 400.0, 360.0, 7L), (2, "school", 90.0, 81.0, 8L))
       .toDF("node_idx", "category", "dist_m", "time_s", "poi_id")
-    val tag = "graft.spec.pointQuery"
-    val jobs = new AtomicInteger
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(tag) != null)) jobs.incrementAndGet()
-    }
-    ListenerBusAccess.drain(sc)
-    sc.addSparkListener(counter)
-    sc.setLocalProperty(tag, "1")
-    val got = try {
+    val (got, jobs) = countingJobs {
       QueryLayer.pointQuery(QueryLayer.snapPoints(pts, nodes), reach, radiusM = 1000.0)
         .select("query_id", "category").as[(Long, String)].collect().toSeq
-    } finally {
-      sc.setLocalProperty(tag, null)
-      ListenerBusAccess.drain(sc)
-      sc.removeSparkListener(counter)
     }
     assert(got == Seq((1L, "supermarket")))
-    assert(jobs.get <= 9, s"${jobs.get} Spark jobs for one point query")
+    assert(jobs <= 9, s"$jobs Spark jobs for one point query")
   }
 
   test("nodesNear: radius branch when matches exist, k-nearest fallback otherwise") {
