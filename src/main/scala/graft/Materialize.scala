@@ -29,11 +29,11 @@ import org.apache.spark.sql.DataFrame
   * must survive executor loss would swap [[cut]] for reliable
   * `checkpoint()` on cluster storage.
   *
-  * [[cut]] is that one decision for [[thenRelease]] and for every cut in
-  * `GraphOps` and `Dijkstra.reachIterative`, whose convergence loops run
-  * through [[fixpoint]]. The other `localCheckpoint` sites (the Lloyd
-  * trainers, the text, corpus and geo operators, the query bodies) are
-  * not yet routed through it.
+  * [[cut]] is that one decision for every lineage cut in the engine:
+  * [[thenRelease]], the graph convergence loops that run through
+  * [[fixpoint]], and every operator and query body that materializes a
+  * shared intermediate. No other file calls `localCheckpoint`
+  * (MaterializeSpec scans the sources for it).
   */
 object Materialize {
   /** The lineage cut: eagerly materializes `df` (one job) and returns a

@@ -2542,10 +2542,10 @@ object SparkEntry {
       val toks = t(s, dir, "documents")
         .select((col("doc_id") % 2 === 0).as("old_half"),
           explode(split(col("text"), " ")).as("term"))
-      val counts = toks.groupBy("term").agg(
+      // feeds the totals AND the scored rows
+      val counts = Materialize.cut(toks.groupBy("term").agg(
         sum(when(col("old_half"), 1L).otherwise(0L)).as("ca"),
-        sum(when(!col("old_half"), 1L).otherwise(0L)).as("cb"))
-        .localCheckpoint() // feeds the totals AND the scored rows
+        sum(when(!col("old_half"), 1L).otherwise(0L)).as("cb")))
       val tot = counts.agg(sum("ca").as("na"), sum("cb").as("nb"))
       counts.filter(col("ca") + col("cb") >= 40)
         .crossJoin(broadcast(tot))
@@ -2898,8 +2898,8 @@ object SparkEntry {
       val grams = w.select(col("doc_id"), explode(expr(
         "transform(sequence(0, size(w) - 2), i -> concat(element_at(w, i + 1), ' ', element_at(w, i + 2)))"))
         .as("g"))
-      val cnt = grams.groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
-        .localCheckpoint() // one gram pass feeds both pair sides
+      // one gram pass feeds both pair sides
+      val cnt = Materialize.cut(grams.groupBy("doc_id", "g").agg(count(lit(1)).as("c")))
       val a = cnt.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id").as("pair_id"), col("g"), col("c").as("ca"))
       val b = cnt.filter(col("doc_id") % 2 === 1)
@@ -2932,10 +2932,10 @@ object SparkEntry {
       val toks = t(s, dir, "documents")
         .select((col("doc_id") % 2 === 0).as("old_half"),
           explode(split(col("text"), " ")).as("term"))
-      val counts = toks.groupBy("term").agg(
+      // feeds the totals AND the scored rows
+      val counts = Materialize.cut(toks.groupBy("term").agg(
         sum(when(col("old_half"), 1L).otherwise(0L)).as("ca"),
-        sum(when(!col("old_half"), 1L).otherwise(0L)).as("cb"))
-        .localCheckpoint() // feeds the totals AND the scored rows
+        sum(when(!col("old_half"), 1L).otherwise(0L)).as("cb")))
       val tot = counts.agg(sum("ca").as("na"), sum("cb").as("nb"))
       counts.filter(col("ca") + col("cb") >= 40)
         .crossJoin(broadcast(tot))
@@ -4195,8 +4195,8 @@ object SparkEntry {
       val ev = t(s, dir, "events")
         .select(col("user_id"), expr(s"(ts div 1000) div $wk").as("wk"),
           expr("CAST(round(value * 100) AS BIGINT)").as("xc"))
-      val signup = ev.groupBy("user_id").agg(min("wk").as("cohort_wk"))
-        .localCheckpoint() // feeds cohort sizes AND the age join
+      // feeds cohort sizes AND the age join
+      val signup = Materialize.cut(ev.groupBy("user_id").agg(min("wk").as("cohort_wk")))
       val sizes = signup.groupBy("cohort_wk")
         .agg(count(lit(1)).as("n_users"))
       val aged = ev.join(signup, Seq("user_id"))
@@ -4617,10 +4617,9 @@ object SparkEntry {
       // as Sort(HashAggregate(stage)) under the join and silently never
       // match (measured). Materializing the 97-row dim gives the join
       // the scan→shuffle→SMJ geometry a real pre-built dimension has.
-      val right = t(s2, dir, "part")
+      val right = Materialize.cut(t(s2, dir, "part")
         .groupBy((col("p_partkey") % 97).as("skey"))
-        .agg(count(lit(1)).as("pw"))
-        .localCheckpoint()
+        .agg(count(lit(1)).as("pw")))
       val df = left.join(right, "skey")
         .groupBy("skey")
         .agg(count(lit(1)).as("n"), sum("price_c").as("rev_c"),
@@ -4632,7 +4631,7 @@ object SparkEntry {
       // the one execution both finalizes the plan and IS the returned
       // result (the former collect() + returned-frame pair re-ran the
       // whole skew-split join a second time in the sink)
-      val out = df.localCheckpoint()
+      val out = Materialize.cut(df)
       val plan = df.queryExecution.executedPlan.toString
       require(plan.contains("skew=true"),
         s"AQE OptimizeSkewedJoin did not fire:\n$plan")
@@ -4701,7 +4700,7 @@ object SparkEntry {
         .orderBy("n_name")
       // materialize (≤5-row result — the q336 one-execution discipline:
       // the eager checkpoint finalizes the plan AND is the returned frame)
-      val out = df.localCheckpoint()
+      val out = Materialize.cut(df)
       val plan = df.queryExecution.executedPlan.toString
       require(plan.toLowerCase.contains("dynamicpruning"),
         s"dynamic partition pruning did not fire:\n$plan")
@@ -4756,7 +4755,7 @@ object SparkEntry {
       graft.sources.v2.GraftCsv.lastAggPushdown.set("")
       // 1-row eager checkpoint: one execution finalizes the plan for the
       // require and is the returned frame (the q336 discipline)
-      val out = df.localCheckpoint()
+      val out = Materialize.cut(df)
       val pushedAgg = graft.sources.v2.GraftCsv.lastAggPushdown.get()
       require(pushedAgg.nonEmpty,
         "aggregate pushdown was not accepted — the scan read data files")
@@ -4909,7 +4908,7 @@ object SparkEntry {
         .orderBy("k")
       graft.sources.v2.GraftCsv.lastAggPushdown.set("")
       // ≤16-row eager checkpoint: one execution (the q336 discipline)
-      val out = df.localCheckpoint()
+      val out = Materialize.cut(df)
       require(graft.sources.v2.GraftCsv.lastAggPushdown.get().contains("group_by=k"),
         "grouped aggregate pushdown was not accepted — the scan read data files")
       out
@@ -5113,7 +5112,7 @@ object SparkEntry {
         .orderBy("n_name")
       graft.sources.v2.GraftCsv.lastRuntimeSkip.set((0, 0))
       // ≤5-row eager checkpoint: one execution (the q336 discipline)
-      val out = df.localCheckpoint()
+      val out = Materialize.cut(df)
       val plan = df.queryExecution.executedPlan.toString
       require(plan.toLowerCase.contains("dynamicpruning"),
         s"no dynamicpruning runtime filter reached the custom scan:\n$plan")
@@ -5235,7 +5234,7 @@ object SparkEntry {
       val df = s.read.schema(sch).format(fmt).load(path)
         .orderBy("k").limit(100)
       // ≤100-row eager checkpoint: one execution (the q336 discipline)
-      val out = df.localCheckpoint()
+      val out = Materialize.cut(df)
       require(graft.sources.v2.GraftCsv.lastBoundPushdown.get().startsWith("topn=k"),
         s"top-n pushdown was not accepted: " +
           s"'${graft.sources.v2.GraftCsv.lastBoundPushdown.get()}'")
@@ -5264,7 +5263,7 @@ object SparkEntry {
       val limited = s.read.schema(sch).format(fmt).load(path).limit(500)
       val df = limited.agg(count(lit(1)).as("n"))
       // 1-row eager checkpoint: one execution (the q336 discipline)
-      val out = df.localCheckpoint()
+      val out = Materialize.cut(df)
       require(graft.sources.v2.GraftCsv.lastBoundPushdown.get() == "limit=500",
         s"limit pushdown was not accepted: " +
           s"'${graft.sources.v2.GraftCsv.lastBoundPushdown.get()}'")
@@ -5386,11 +5385,10 @@ object SparkEntry {
         .option("checkpointLocation", ck)
         .foreachBatch { (b: DataFrame, _: Long) =>
           if (!b.isEmpty) nBatches.incrementAndGet()
-          val snap = b.localCheckpoint()
+          val snap = Materialize.cut(b)
           val prev = state.get()
           state.set(if (prev == null) snap
-            else snap.unionByName(prev.join(snap, Seq("k"), "left_anti"))
-              .localCheckpoint())
+            else Materialize.cut(snap.unionByName(prev.join(snap, Seq("k"), "left_anti"))))
           ()
         }.start()
       q.processAllAvailable()
@@ -5438,11 +5436,10 @@ object SparkEntry {
         .writeStream.outputMode("update")
         .option("checkpointLocation", ck)
         .foreachBatch { (b: DataFrame, _: Long) =>
-          val snap = b.localCheckpoint()
+          val snap = Materialize.cut(b)
           val prev = state.get()
           state.set(if (prev == null) snap
-            else snap.unionByName(prev.join(snap, Seq("k"), "left_anti"))
-              .localCheckpoint())
+            else Materialize.cut(snap.unionByName(prev.join(snap, Seq("k"), "left_anti"))))
           ()
         }.start()
       q.processAllAvailable()

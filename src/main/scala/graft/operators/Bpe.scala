@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Byte-pair-encoding merge induction (tokenizer training) and encoding —
   * Sennrich et al., "Neural Machine Translation of Rare Words with Subword
   * Units", ACL'16. Each round finds the most frequent adjacent symbol pair
@@ -250,10 +252,10 @@ object Bpe {
   def wordpieceEncode(docs: DataFrame, topSub: Int = 20, maxPiece: Int = 4,
                       textCol: String = "text"): DataFrame = {
     require(maxPiece >= 2 && topSub >= 0, s"bad maxPiece=$maxPiece topSub=$topSub")
-    val words = docs
+    // consumed by the substring count AND the encode
+    val words = Materialize.cut(docs
       .select(explode(split(col(textCol), " ")).as("w")).distinct()
-      .filter(length(col("w")) >= 1)
-      .localCheckpoint() // consumed by the substring count AND the encode
+      .filter(length(col("w")) >= 1))
     val subs = words.select(explode(expr(
         s"""flatten(transform(sequence(2, $maxPiece),
            |  L -> CASE WHEN length(w) >= L

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Event-stream relational operators over the harness `events` table
   * (event_id, ts, user_id, event_type, value, props).
   *
@@ -855,10 +857,10 @@ object EventOps {
   def covariateBalance(events: DataFrame, userCol: String = "user_id",
                        valueCol: String = "value"): DataFrame = {
     def dec(c: Column): Column = c.cast("decimal(38,0)")
-    val per = events.groupBy(col(userCol).as("u"))
+    // one per-user reduce feeds both melted metrics
+    val per = Materialize.cut(events.groupBy(col(userCol).as("u"))
       .agg(count(lit(1)).as("n_ev"), sum(cents(col(valueCol))).as("sum_c"))
-      .select((col("u") % 2 === 0).as("in_a"), col("n_ev"), col("sum_c"))
-      .localCheckpoint() // one per-user reduce feeds both melted metrics
+      .select((col("u") % 2 === 0).as("in_a"), col("n_ev"), col("sum_c")))
     val melted = per.select(col("in_a"), lit("n_events").as("metric"),
         col("n_ev").as("x"))
       .union(per.select(col("in_a"), lit("sum_cents"), col("sum_c")))
@@ -908,9 +910,9 @@ object EventOps {
                         tsCol: String = "ts"): DataFrame = {
     val ev = events.select(col(typeCol).as("et"), col(userCol).as("u"),
       tsUs(tsCol).as("ts_us"))
-    val from = ev.filter(col("et") === fromType)
-      .groupBy("u").agg(min("ts_us").as("t0"))
-      .localCheckpoint() // feeds the join AND the denominator
+    // feeds the join AND the denominator
+    val from = Materialize.cut(ev.filter(col("et") === fromType)
+      .groupBy("u").agg(min("ts_us").as("t0")))
     val lat = ev.filter(col("et") === toType)
       .join(from, Seq("u"))
       .filter(col("ts_us") >= col("t0"))
@@ -1165,11 +1167,11 @@ object EventOps {
   def theilSen(events: DataFrame, seriesCol: String = "event_type",
                tsCol: String = "ts", valueCol: String = "value"): DataFrame = {
     val dayUs = 86400000000L
-    val pts = events.select(col(seriesCol),
+    // three consumers: pair join ×2, residual pass
+    val pts = Materialize.cut(events.select(col(seriesCol),
         expr(s"(${tsCol} div 1000) div ${dayUs}L").as("t"),
         cents(col(valueCol)).as("x"))
-      .groupBy(col(seriesCol), col("t")).agg(sum("x").as("y"))
-      .localCheckpoint() // three consumers: pair join ×2, residual pass
+      .groupBy(col(seriesCol), col("t")).agg(sum("x").as("y")))
     def lowerMedian(df: DataFrame, vCol: String, out: String): DataFrame = {
       val dom = df.groupBy(col(seriesCol), col(vCol)).agg(count(lit(1)).as("c"))
       val wCum = Window.partitionBy(seriesCol).orderBy(vCol)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Tile-lattice generation and spatial partition assignment (SURVEY.md §2.8
   * G5, §2.7 F11, §4 buffer-replication convention).
   *
@@ -154,13 +156,13 @@ object Grid {
         floor(col(latCol) * lit(invCellDeg)).cast("long").as("cy"),
         floor(col(lonCol) * lit(invCellDeg)).cast("long").as("cx"))
       .groupBy("cy", "cx").agg(count(lit(1)).as("n_pts"))
-    val dense = cells
+    // feeds offsets, the join probe, AND the labeling
+    val dense = Materialize.cut(cells
       .withColumn("mean_occ",
         expr("sum(n_pts) OVER () div count(n_pts) OVER ()"))
       .filter(col("n_pts") > col("mean_occ"))
       .select(col("cy"), col("cx"), col("n_pts"),
-        (col("cy") * 1000000L + col("cx")).as("cell_id"))
-      .localCheckpoint() // feeds offsets, the join probe, AND the labeling
+        (col("cy") * 1000000L + col("cx")).as("cell_id")))
     val offsets = Seq((-1L, -1L), (-1L, 0L), (-1L, 1L), (0L, -1L),
       (0L, 1L), (1L, -1L), (1L, 0L), (1L, 1L))
     val nbr = dense.select(col("cell_id").as("id1"),

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Materialized summary tables ("materialized views") + the registration
   * half of the [[graft.expressions.RewriteAggToSummary]] optimizer rule —
   * the warehouse feature where `GROUP BY` queries over a 100 TB fact
@@ -90,14 +92,13 @@ object Mv {
     }
     val keys = groupCols.map(g =>
       coalesce(col(s"a.$g"), col(s"b.$g")).as(g))
-    val merged = cur.alias("a").join(delta.alias("b"),
+    val merged = Materialize.cut(cur.alias("a").join(delta.alias("b"),
         groupCols.map(g => col(s"a.$g") <=> col(s"b.$g")).reduce(_ && _),
         "full_outer")
       .select(keys ++ (both("mv_cnt", _ + _) +: valueCols.flatMap(v => Seq(
         both(s"mv_sum_$v", _ + _),
         both(s"mv_min_$v", least(_, _)),
-        both(s"mv_max_$v", greatest(_, _))))): _*)
-      .localCheckpoint()
+        both(s"mv_max_$v", greatest(_, _))))): _*))
     merged.write.mode("overwrite").parquet(summaryPath)
   }
 }

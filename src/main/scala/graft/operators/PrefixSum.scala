@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Range-bucketed two-pass prefix sum over a REDUCED (distinct-value)
   * domain — the replacement for `Window.orderBy(value)` running sums
   * (round-14 verdict "What's wrong" #4 / next-round #7).
@@ -52,7 +54,7 @@ object PrefixSum {
                   sums: Seq[(String, String)], nBuckets: Int = 64): DataFrame = {
     require(nBuckets >= 1, s"bad nBuckets=$nBuckets")
     require(sums.nonEmpty, "runningSums needs at least one (src, dst) pair")
-    val dom = df.localCheckpoint()
+    val dom = Materialize.cut(df)
     val v = col(orderCol).cast("double")
     val stats = dom.agg(min(v).as("mn"), max(v).as("mx")).head()
     val bucket =

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 
+import graft.Materialize
+
 /** Dataset profiling — the "what is in this table" pass every ingestion
   * pipeline runs before trusting 100 TB of new parquet: per-column row /
   * null / distinct counts and value ranges, computed in ONE aggregation
@@ -298,12 +300,11 @@ object ProfileOps {
     // reduced domain, materialized once: it feeds both the total and the
     // cumulative window (localCheckpoint — one corpus scan, no unpersist
     // bookkeeping, ContextCleaner-reclaimed)
-    val dom = df
+    val dom = Materialize.cut(df
       .select(col(valueCol).cast("long").as("v"),
         col(outcomeCol).cast("boolean").as("y"))
       .groupBy("v").agg(count(lit(1)).as("cnt"),
-        sum(when(col("y"), 1L).otherwise(0L)).as("ys"))
-      .localCheckpoint()
+        sum(when(col("y"), 1L).otherwise(0L)).as("ys")))
     val cum = dom.withColumn("cum_end", sum(col("cnt")).over(
         Window.orderBy(col("v"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -423,10 +424,10 @@ object ProfileOps {
     * The cells table is tiny, so the inequality pair join is an
     * intended broadcast nested loop (plan-contract allowlisted). */
   def kendallTau(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val cells = df
+    // three consumers of the tiny cell table
+    val cells = Materialize.cut(df
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // three consumers of the tiny cell table
+      .groupBy("a", "b").agg(count(lit(1)).as("cnt")))
     val pairs = cells.alias("x").join(broadcast(cells.alias("y")),
         col("x.a") < col("y.a"))
       .agg(
@@ -470,11 +471,11 @@ object ProfileOps {
   def spearman(df: DataFrame, groupCol: String, aCol: String,
                bCol: String): DataFrame = {
     def dec(c: Column): Column = c.cast("decimal(38,0)")
-    val cells = df
+    // consumed by both margins and the moment join
+    val cells = Materialize.cut(df
       .select(col(groupCol).as("g"), col(aCol).cast("long").as("a"),
         col(bCol).cast("long").as("b"))
-      .groupBy("g", "a", "b").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // consumed by both margins and the moment join
+      .groupBy("g", "a", "b").agg(count(lit(1)).as("cnt")))
     // doubled average rank per value cell: 2·r̄ = 2·(cum − m) + m + 1
     def marg(vc: String): DataFrame = {
       val w = Window.partitionBy("g").orderBy(vc)
@@ -582,10 +583,9 @@ object ProfileOps {
   def giniConcentration(df: DataFrame, keyCol: String,
                         weightCol: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val mass = df.groupBy(col(keyCol).as("k"))
+    val mass = Materialize.cut(df.groupBy(col(keyCol).as("k"))
       .agg(weightCol.map(w => sum(col(w).cast("long")))
-        .getOrElse(count(lit(1))).as("x"))
-      .localCheckpoint()
+        .getOrElse(count(lit(1))).as("x")))
     val ranked = mass.withColumn("i",
       row_number().over(Window.orderBy(col("x"), col("k"))).cast("long"))
     ranked.crossJoin(broadcast(
@@ -657,9 +657,9 @@ object ProfileOps {
     * construction of the identity. */
   def isotonicFit(bins: DataFrame, binCol: String = "bin",
                   nCol: String = "n", posCol: String = "pos"): DataFrame = {
-    val b = bins.select(col(binCol).cast("long").as("bin"),
-      col(nCol).cast("long").as("n"), col(posCol).cast("long").as("pos"))
-      .localCheckpoint() // d rows; feeds cumulative, triples, and emission
+    // d rows; feeds cumulative, triples, and emission
+    val b = Materialize.cut(bins.select(col(binCol).cast("long").as("bin"),
+      col(nCol).cast("long").as("n"), col(posCol).cast("long").as("pos")))
     val wc = Window.orderBy("bin")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = b.select(col("bin"), col("n"), col("pos"),
@@ -699,9 +699,9 @@ object ProfileOps {
     * no scalar broadcast join. Output per cell: (a, b, obs, row_n, col_n,
     * n, chi2_micro_cell, chi2_micro, dof). */
   def chi2Independence(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val obs0 = df.select(col(aCol).as("a"), col(bCol).as("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("obs"))
-      .localCheckpoint() // r·c rows, consumed by the lattice and the join
+    // r·c rows, consumed by the lattice and the join
+    val obs0 = Materialize.cut(df.select(col(aCol).as("a"), col(bCol).as("b"))
+      .groupBy("a", "b").agg(count(lit(1)).as("obs")))
     // densify to the full r×c value lattice: an UNOBSERVED cell has O = 0
     // but E = R·C/n > 0 and still contributes to the statistic — dropping
     // it would understate chi² exactly when the dependence is strongest
@@ -787,7 +787,7 @@ object ProfileOps {
         sum(dec(col(a)) * dec(col(b))).as(s"sp_${a}_$b") }
     // 1-row moment frame, checkpointed: six pair projections re-reading a
     // live aggregate would re-run the scan per branch of the union
-    val m = base.agg(aggs.head, aggs.tail: _*).localCheckpoint()
+    val m = Materialize.cut(base.agg(aggs.head, aggs.tail: _*))
     pairs.map { case (a, b) =>
       m.select(lit(a).as("col_a"), lit(b).as("col_b"), col("n"),
         (dec(col("n")) * col(s"sp_${a}_$b") - col(s"s_$a") * col(s"s_$b"))

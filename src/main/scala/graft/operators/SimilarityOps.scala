@@ -1,8 +1,12 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.Materialize
 
 /** Similarity search over an embedding column (builder brief: brute-force
   * cosine top-k baseline + a bucketed scale path; near-dup join).
@@ -299,40 +303,6 @@ object SimilarityOps {
       .select("qid", "rank", "vec_id", "cos")
   }
 
-  /** Distributed Lloyd k-means over quantized vectors — the centroid
-    * TRAINING step for [[ivfTopK]], which otherwise buckets on whatever
-    * vectors the caller sampled. Deterministic and engine-mirrorable by
-    * construction:
-    *  - init: the k smallest vec_ids' vectors (a data-independent rule);
-    *  - assignment: argmin exact-integer squared L2 (|a|² − 2a·c + |c|²,
-    *    three native dotQ calls — all 64-bit-exact on quantized input),
-    *    ties to the smaller cluster id;
-    *  - update: per-dimension mean RE-QUANTIZED with round() (identical
-    *    half-away-from-zero in Spark and DuckDB; dim sums ≈1e10 ≪ 2⁵³
-    *    stay exact through the one double division);
-    *  - an empty cluster keeps its previous centroid (size 0).
-    *
-    * Scale shape: assignment is a broadcast cross join (centroids are k×dim
-    * longs) + a per-vector argmin window; the update is one partial-
-    * aggregated shuffle on cid with dim sum columns — the classic
-    * map-side-combine k-means, linear per iteration.
-    *
-    * EAGER, one job per round: assignment folds over a LITERAL centroid
-    * array, the update is the same partial-aggregated (cid → count,
-    * re-quantized mean) exchange as ever, and the k·(dim+1)-long result
-    * row set is read back to the driver to seed the next round's literal
-    * (a bounded CONTROL read — sized by the k/dim parameters, never by
-    * the corpus; the quantileNormalize bucket-totals class). The former
-    * lazily-composed rounds nested `iters` plans whose per-round
-    * centsArray BROADCAST re-executed every earlier round inside its
-    * build — at gate scale that job fan-out (q224: 37 jobs, 3.1 s of
-    * between-job driver wall for 3.2 task-seconds of real work) dominated
-    * the query, and every consumer re-planned the whole chain. Arithmetic
-    * is unchanged expression for expression, so centroids (and every
-    * downstream result) are bit-identical.
-    *
-    * Returns (cid, n, cv: array<long>) for all k clusters, n = final
-    * assignment size (0 for a cluster that kept its previous centroid). */
   /** Centroid set as ONE broadcast row holding a cid-sorted array of
     * (cid, cv, nc=|cv|²) structs — the operand for map-side assignment.
     * k×(dim+1) longs ≪ any broadcast threshold; the single-row aggregate
@@ -390,16 +360,32 @@ object SimilarityOps {
       },
       acc => acc.getField("cid"))
 
+  /** Lloyd k-means over quantized vectors — the centroid TRAINING step
+    * for [[ivfTopK]], which otherwise buckets on whatever vectors the
+    * caller sampled. Deterministic and engine-mirrorable by construction:
+    *  - init: the k smallest vec_ids' vectors (a data-independent rule);
+    *  - assignment: argmin exact-integer squared L2 (|a|² − 2a·c + |c|²,
+    *    three native dotQ calls — all 64-bit-exact on quantized input),
+    *    ties to the smaller cluster id;
+    *  - update: per-dimension mean RE-QUANTIZED with round() (identical
+    *    half-away-from-zero in Spark and DuckDB; dim sums ≈1e10 ≪ 2⁵³
+    *    stay exact through the one double division);
+    *  - an empty cluster keeps its previous centroid (size 0).
+    *
+    * Returns (cid, n, cv: array<long>) for all k clusters, n = final
+    * assignment size (0 for a cluster that kept its previous centroid),
+    * as a materialized k-row frame. Training is [[lloydDriverQ]]: this
+    * corpus is its one group. */
   def kmeansCentroids(vectors: DataFrame, k: Int, iters: Int, dim: Int): DataFrame =
     kmeansCentroidsQ(
       vectors.select(col("vec_id"), quantize(col("embedding")).as("qv")),
       k, iters, dim)
 
-  /** Driver-side centroid row for the Lloyd trainers: k·(dim+1) longs —
+  /** Driver-side centroid row for the Lloyd trainer: k·(dim+1) longs —
     * CONTROL-PLANE sized (bounded by the k/dim parameters, never by the
     * corpus), the same bounded-steering-read class as quantileNormalize's
     * bucket totals and the AQE gates' ≤97-row plan finalizers. */
-  private case class Cent(cid: Int, n: Long, cv: Array[Long])
+  private[operators] case class Cent(cid: Int, n: Long, cv: Array[Long])
 
   /** |cv|² in driver Scala — the exact Long arithmetic [[dotQ]] runs
     * (same wrap-on-overflow), precomputing the `nc` literal the
@@ -410,58 +396,40 @@ object SimilarityOps {
     s
   }
 
-  /** The centroid-array operand as a LITERAL: the same cid-sorted
-    * (cid, cv, nc=|cv|²) struct array [[centsArray]] aggregates into a
-    * broadcast 1-row frame, embedded directly in the assignment
-    * expression. Field order and cid sort match, so the [[nearestCid]]
-    * fold is bit-identical; what changes is the JOB SHAPE — no broadcast
-    * exchange and no re-execution of training lineage per consumer. */
-  private def centsLit(cents: Seq[Cent]): Column =
-    array(cents.sortBy(_.cid).map(c =>
-      struct(lit(c.cid).as("cid"), typedLit(c.cv.toSeq).as("cv"),
-        lit(normSqL(c.cv)).as("nc"))): _*)
+  /** The codebooks as a LITERAL grp → centroid-array map: per group the
+    * same cid-sorted (cid, cv, nc=|cv|²) struct array [[centsArray]]
+    * aggregates into a broadcast 1-row frame, embedded directly in the
+    * assignment expression. Field order and cid sort match, so the
+    * [[nearestCid]] fold is bit-identical; what changes is the JOB SHAPE
+    * — no broadcast exchange and no re-execution of training lineage per
+    * consumer. With one group (grp a literal 0) the lookup constant-folds
+    * to the group's array. */
+  private def booksLit(books: Map[Int, Seq[Cent]]): Column =
+    map(books.toSeq.sortBy(_._1).flatMap { case (g, cs) =>
+      Seq(lit(g), array(cs.sortBy(_.cid).map(c =>
+        struct(lit(c.cid).as("cid"), typedLit(c.cv.toSeq).as("cv"),
+          lit(normSqL(c.cv)).as("nc"))): _*)) }: _*)
 
-  /** One Spark job per Lloyd round: assignment = the [[nearestCid]] fold
-    * over the literal centroid array (pure map, zero shuffle), update =
-    * the SAME partial-aggregated (cid → count(1), per-dimension
-    * round(sum/count) re-quantized mean) expressions as the former lazy
-    * composition, collected as ≤k control rows. An empty cluster keeps
-    * its previous centroid with n = 0 — the left-join/coalesce rule,
-    * applied driver-side. */
-  private def lloydRounds(qvNa: DataFrame, init: Seq[Cent], iters: Int,
-                          dim: Int): Seq[Cent] = {
-    var cents = init
-    (1 to iters).foreach { _ =>
-      val upd = qvNa
-        .select(nearestCid(col("qv"), col("na"), centsLit(cents)).as("cid"),
-          col("qv"))
-        .groupBy("cid")
-        .agg(count(lit(1)).as("n"), array((1 to dim).map(i =>
-          round(sum(element_at(col("qv"), i)) / count(lit(1))).cast("long")): _*).as("ucv"))
-        .collect()
-      val byCid = upd.map(r =>
-        r.getInt(0) -> ((r.getLong(1), r.getSeq[Long](2).toArray))).toMap
-      cents = cents.map(c => byCid.get(c.cid)
-        .map { case (n, u) => Cent(c.cid, n, u) }
-        .getOrElse(Cent(c.cid, 0L, c.cv))) // empty keeps previous
-    }
-    cents
-  }
+  /** An ungrouped (vec_id, qv) frame as the trainer's one group, grp = 0. */
+  private def oneGroup(qvIn: DataFrame): DataFrame =
+    qvIn.select(lit(0).as("grp"), col("vec_id"), col("qv"))
 
-  /** [[lloydRounds]] per GROUP in one job per round, assignment keyed by
-    * a grp → centroid-array literal MAP (so m sub-codebooks still train
-    * in ONE pass whatever m is — the r14 grouped-chain shape, minus its
-    * per-round broadcasts). */
-  private def lloydRoundsGrouped(qvNa: DataFrame, init: Map[Int, Seq[Cent]],
-                                 iters: Int, dim: Int): Map[Int, Seq[Cent]] = {
+  /** One Spark job per Lloyd round for every group at once: assignment =
+    * the [[nearestCid]] fold over the row's own group's literal centroid
+    * array (pure map, zero shuffle, so m sub-codebooks train in ONE pass
+    * whatever m is), update = the partial-aggregated ((grp, cid) →
+    * count(1), per-dimension round(sum/count) re-quantized mean)
+    * expressions, collected as ≤ groups·k control rows. An empty cluster
+    * keeps its previous centroid with n = 0 — the left-join/coalesce
+    * rule, applied driver-side. */
+  private def lloydRounds(qvNa: DataFrame, init: Map[Int, Seq[Cent]],
+                          iters: Int, dim: Int): Map[Int, Seq[Cent]] = {
     var books = init
     (1 to iters).foreach { _ =>
-      val csMap = map(books.toSeq.sortBy(_._1).flatMap { case (g, cs) =>
-        Seq(lit(g), centsLit(cs)) }: _*)
       val upd = qvNa
         .select(col("grp"),
           nearestCid(col("qv"), col("na"),
-            element_at(csMap, col("grp"))).as("cid"),
+            element_at(booksLit(books), col("grp"))).as("cid"),
           col("qv"))
         .groupBy("grp", "cid")
         .agg(count(lit(1)).as("n"), array((1 to dim).map(i =>
@@ -471,66 +439,55 @@ object SimilarityOps {
         (r.getInt(0), r.getInt(1)) -> ((r.getLong(2), r.getSeq[Long](3).toArray))).toMap
       books = books.map { case (g, cs) => g -> cs.map(c =>
         byKey.get((g, c.cid)).map { case (n, u) => Cent(c.cid, n, u) }
-          .getOrElse(Cent(c.cid, 0L, c.cv))) }
+          .getOrElse(Cent(c.cid, 0L, c.cv))) } // empty keeps previous
     }
     books
   }
 
-  /** Driver-round Lloyd over an already-quantized (vec_id, qv) frame,
-    * returning centroids as control rows. Init = the k smallest vec_ids'
-    * vectors in vec_id order (TakeOrdered — k rows to the driver), cid =
-    * position, exactly the former row_number rule. */
-  private def lloydDriverQ(qvIn: DataFrame, k: Int, iters: Int,
-                           dim: Int): Seq[Cent] = {
+  /** The seed rule — per group, the k smallest vec_ids' vectors in vec_id
+    * order, cid = position — as ONE job shaped like TakeOrdered: each
+    * partition keeps its k smallest (vec_id, qv) per grp in a bounded
+    * max-heap, and the driver merges the partitions' lists and keeps k
+    * per group. At most partitions·groups·k rows reach the driver, and
+    * nothing shuffles (a window over grp would add an exchange, and a job,
+    * even for one group). Input (grp, vec_id: long, qv). */
+  private def lloydSeeds(base: DataFrame, k: Int): Map[Int, Seq[Cent]] =
+    base.rdd.mapPartitions { rows =>
+      val heaps = mutable.HashMap.empty[Int, mutable.PriorityQueue[(Long, Array[Long])]]
+      rows.foreach { r =>
+        val h = heaps.getOrElseUpdate(r.getInt(0),
+          mutable.PriorityQueue.empty(Ordering.by[(Long, Array[Long]), Long](_._1)))
+        val id = r.getLong(1)
+        if (h.size < k || id < h.head._1) {
+          if (h.size == k) h.dequeue()
+          h.enqueue(id -> r.getSeq[Long](2).toArray)
+        }
+      }
+      heaps.iterator.flatMap { case (g, h) => h.iterator.map { case (id, qv) => (g, id, qv) } }
+    }.collect()
+      .groupBy(_._1).map { case (g, rs) =>
+        g -> rs.sortBy(_._2).take(k).toSeq.zipWithIndex
+          .map { case ((_, _, qv), i) => Cent(i, 0L, qv) } }
+
+  /** The Lloyd trainer: driver-round Lloyd over an already-quantized
+    * (grp, vec_id, qv) frame, every group training its own k centroids in
+    * the same jobs — one seed job ([[lloydSeeds]]) plus one job per round
+    * ([[lloydRounds]]). Returns each group's centroids as control rows.
+    * An ungrouped caller is one group ([[oneGroup]]). */
+  private[operators] def lloydDriverQ(grouped: DataFrame, k: Int, iters: Int,
+                                      dim: Int): Map[Int, Seq[Cent]] = {
     require(k > 0 && iters > 0 && dim > 0,
       s"bad kmeans params k=$k iters=$iters dim=$dim")
-    val qvNa = qvIn.select(col("vec_id"), col("qv"))
-      .withColumn("na", dotQ(col("qv"), col("qv")))
-    val init = qvIn.select(col("vec_id").cast("long").as("vec_id"), col("qv"))
-      .orderBy("vec_id").limit(k)
-      .collect().sortBy(_.getLong(0)).zipWithIndex
-      .map { case (r, i) => Cent(i, 0L, r.getSeq[Long](1).toArray) }.toSeq
-    lloydRounds(qvNa, init, iters, dim)
-  }
-
-  /** Grouped [[lloydDriverQ]]: per-group seeds = the group's k smallest
-    * vec_ids in vec_id order (the same slice/array_sort rule as before,
-    * shuffled as bare longs — narrow exchange), fetched back with ONE
-    * literal-filtered scan (≤ groups·k rows). */
-  private def lloydDriverGroupedQ(grouped: DataFrame, k: Int, iters: Int,
-                                  dim: Int): Map[Int, Seq[Cent]] = {
-    require(k > 0 && iters > 0 && dim > 0,
-      s"bad grouped-kmeans params k=$k iters=$iters dim=$dim")
     val base = grouped.select(col("grp"),
       col("vec_id").cast("long").as("vec_id"), col("qv"))
-    val qvNa = base.withColumn("na", dotQ(col("qv"), col("qv")))
-    val seedIds = base.select(col("grp"), col("vec_id"))
-      .groupBy("grp")
-      .agg(slice(array_sort(collect_list(col("vec_id"))), 1, k).as("ids"))
-      .collect()
-      .map(r => r.getInt(0) -> r.getSeq[Long](1)).toMap
-    val wanted = seedIds.valuesIterator.flatten.toSet
-    val byKey = base.filter(col("vec_id").isin(wanted.toSeq: _*))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1)) -> r.getSeq[Long](2).toArray).toMap
-    val init = seedIds.map { case (g, ids) =>
-      g -> ids.zipWithIndex.map { case (id, i) =>
-        Cent(i, 0L, byKey((g, id))) }.toSeq }
-    lloydRoundsGrouped(qvNa, init, iters, dim)
+    lloydRounds(base.withColumn("na", dotQ(col("qv"), col("qv"))),
+      lloydSeeds(base, k), iters, dim)
   }
 
-  /** Materialized (cid, n, cv) frame from control rows — a LocalRelation
-    * with the trainers' original output schema. */
+  /** Materialized (grp, cid, n, cv) frame from control rows: literal
+    * rows, no scan of the training input. */
   private def centsFrame(spark: org.apache.spark.sql.SparkSession,
-                         cents: Seq[Cent]): DataFrame =
-    spark.range(1).select(explode(array(cents.sortBy(_.cid).map(c =>
-      struct(lit(c.cid).as("cid"), lit(c.n).as("n"),
-        typedLit(c.cv.toSeq).as("cv"))): _*)).as("c"))
-      .select(col("c.cid").as("cid"), col("c.n").as("n"), col("c.cv").as("cv"))
-
-  /** Grouped [[centsFrame]]: (grp, cid, n, cv). */
-  private def groupedCentsFrame(spark: org.apache.spark.sql.SparkSession,
-                                books: Map[Int, Seq[Cent]]): DataFrame =
+                         books: Map[Int, Seq[Cent]]): DataFrame =
     spark.range(1).select(explode(array(books.toSeq.sortBy(_._1).flatMap {
       case (g, cs) => cs.sortBy(_.cid).map(c =>
         struct(lit(g).as("grp"), lit(c.cid).as("cid"),
@@ -538,35 +495,25 @@ object SimilarityOps {
       .select(col("c.grp").as("grp"), col("c.cid").as("cid"),
         col("c.n").as("n"), col("c.cv").as("cv"))
 
-  /** [[assignToCentroidsQ]] against LITERAL centroids: the same
-    * [[nearestCid]] fold, zero joins, stays lazy. */
-  private def assignLit(qvIn: DataFrame, cents: Seq[Cent]): DataFrame =
-    qvIn.select(col("vec_id"), col("qv"))
-      .withColumn("na", dotQ(col("qv"), col("qv")))
-      .select(nearestCid(col("qv"), col("na"), centsLit(cents)).as("cid"),
-        col("vec_id"), col("qv"))
-
-  /** [[assignLit]] per group: input (grp, vec_id, qv); output (grp, cid,
-    * vec_id, qv). Each row folds over its own group's LITERAL codebook,
-    * looked up by grp in a literal map — zero joins, stays lazy. */
-  private def assignGroupedLit(grouped: DataFrame,
-                               books: Map[Int, Seq[Cent]]): DataFrame = {
-    val csMap = map(books.toSeq.sortBy(_._1).flatMap { case (g, cs) =>
-      Seq(lit(g), centsLit(cs)) }: _*)
+  /** [[assignToCentroidsQ]] against LITERAL codebooks: input (grp,
+    * vec_id, qv), output (grp, cid, vec_id, qv). Each row folds over its
+    * own group's codebook, looked up by grp in [[booksLit]] — zero
+    * joins, stays lazy. */
+  private def assignLit(grouped: DataFrame, books: Map[Int, Seq[Cent]]): DataFrame =
     grouped.select(col("grp"), col("vec_id"), col("qv"))
       .withColumn("na", dotQ(col("qv"), col("qv")))
       .select(col("grp"),
         nearestCid(col("qv"), col("na"),
-          element_at(csMap, col("grp"))).as("cid"),
+          element_at(booksLit(books), col("grp"))).as("cid"),
         col("vec_id"), col("qv"))
-  }
 
   /** [[kmeansCentroids]] over an ALREADY-quantized (vec_id, qv) frame —
     * the form residual training needs (residuals are exact differences of
     * quantized vectors; re-quantizing them would be wrong). Returns the
-    * trained centroids as a materialized k-row LocalRelation. */
+    * trained centroids as a materialized k-row frame. */
   def kmeansCentroidsQ(qvIn: DataFrame, k: Int, iters: Int, dim: Int): DataFrame =
-    centsFrame(qvIn.sparkSession, lloydDriverQ(qvIn, k, iters, dim))
+    centsFrame(qvIn.sparkSession, lloydDriverQ(oneGroup(qvIn), k, iters, dim))
+      .drop("grp")
 
   /** Assign every vector to its exact-integer-L2 nearest centroid (the
     * k-means assignment rule: argmin |a|² − 2a·c + |c|², ties to the
@@ -675,7 +622,7 @@ object SimilarityOps {
       .filter(col("a.vec_id") < col("b.vec_id"))
       .filter(cosQ(col("a.qv"), col("b.qv")) >= threshold)
       .select(col("b.vec_id").as("vec_id")).distinct()
-    graft.Materialize.thenRelease(
+    Materialize.thenRelease(
       assigned.select("vec_id", "cid")
         .join(dropped, Seq("vec_id"), "left_anti"),
       assigned)
@@ -710,9 +657,9 @@ object SimilarityOps {
     // ONE frame of every subspace slice (grp = subspace id): quantize once,
     // slice per subspace — quantize is elementwise, so slice(quantize(v))
     // equals the former quantize(slice(v)) exactly. All m codebooks then
-    // train as ONE grouped Lloyd chain and all m encoders run as ONE
-    // assignment pass (guide §2.4: operations keyed the same way share
-    // exchanges) — formerly m separate localCheckpoint'ed chains whose
+    // train as ONE Lloyd run (a group per subspace) and all m encoders run
+    // as ONE assignment pass (guide §2.4: operations keyed the same way
+    // share exchanges) — formerly m separate checkpointed chains whose
     // per-job overhead dominated the gate (q116: 46 jobs → ~1/m of that)
     // and whose m scans per round dominate at corpus scale.
     def sliced(df: DataFrame, idOut: String): DataFrame =
@@ -721,15 +668,16 @@ object SimilarityOps {
           slice(col("qv0"), s * sub + 1, sub)): _*)).as(Seq("grp", "qv")))
     val subQ = sliced(vectors, "vec_id")
     // Codebooks live on the DRIVER as control rows (m×ksub×sub longs —
-    // tiny at any corpus size): training is the driver-round grouped
-    // Lloyd (one job per round), and both consumers — the encoder and
-    // the ADC tables — read them as literals / a LocalRelation, so no
-    // training lineage is ever re-planned or re-executed downstream.
-    val booksC = lloydDriverGroupedQ(subQ, ksub, iters, sub)
-    val books = groupedCentsFrame(vectors.sparkSession, booksC)
+    // tiny at any corpus size): training is the driver-round Lloyd with
+    // one group per subspace (one job per round), and both consumers —
+    // the encoder and the ADC tables — read them as literals / a
+    // LocalRelation, so no training lineage is ever re-planned or
+    // re-executed downstream.
+    val booksC = lloydDriverQ(subQ, ksub, iters, sub)
+    val books = centsFrame(vectors.sparkSession, booksC)
       .select(col("grp").as("s"), col("cid"), col("cv"))
     // codes: one row per vector, array of m sub-centroid ids (s-ordered)
-    val codes = assignGroupedLit(subQ, booksC)
+    val codes = assignLit(subQ, booksC)
       .select(col("vec_id"), col("grp").as("s"), col("cid"))
       .groupBy("vec_id")
       .agg(transform(sort_array(collect_list(struct(col("s"), col("cid")))),
@@ -797,29 +745,29 @@ object SimilarityOps {
     // plan Catalyst re-optimized per consumer (22 s at sf0.1 with lazy
     // caches; 37 jobs with per-round broadcasts) are gone: every
     // downstream stage reads them as literals. Only the corpus-sized
-    // residual table still materializes via localCheckpoint (one job).
-    val coarseC = lloydDriverQ(qvAll, nlist, iters, dim)
+    // residual table still materializes via Materialize.cut (one job).
+    val coarse = lloydDriverQ(oneGroup(qvAll), nlist, iters, dim)
     // coarse assignment + exact residual per vector, both against the
     // literal centroid array (cids are 0..nlist-1 by the seed rule, so
     // the centroid vector is an element_at lookup — no join at all)
-    val coarseCvs: Seq[Seq[Long]] = coarseC.sortBy(_.cid).map(_.cv.toSeq)
-    val resid = assignLit(qvAll, coarseC)
+    val coarseC = coarse(0).sortBy(_.cid)
+    val coarseCvs: Seq[Seq[Long]] = coarseC.map(_.cv.toSeq)
+    val resid = Materialize.cut(assignLit(oneGroup(qvAll), coarse)
       .select(col("cid"), col("vec_id"),
         zip_with(col("qv"),
           element_at(typedLit(coarseCvs), col("cid") + lit(1)),
-          (a, b) => a - b).as("rv"))
-      .localCheckpoint()
+          (a, b) => a - b).as("rv")))
     // ONE frame of every residual slice (grp = subspace id): all m
-    // residual codebooks train in ONE driver-round grouped Lloyd and all
-    // m encoders run as ONE literal-fold assignment pass (guide §2.4).
+    // residual codebooks train in ONE driver-round Lloyd and all m
+    // encoders run as ONE literal-fold assignment pass (guide §2.4).
     val rsliced = resid.select(col("vec_id"),
         posexplode(array((0 until m).map(s =>
           slice(col("rv"), s * sub + 1, sub)): _*)).as(Seq("grp", "qv")))
-    val booksC = lloydDriverGroupedQ(rsliced, ksub, iters, sub)
-    val books = groupedCentsFrame(vectors.sparkSession, booksC)
+    val booksC = lloydDriverQ(rsliced, ksub, iters, sub)
+    val books = centsFrame(vectors.sparkSession, booksC)
       .select(col("grp").as("s"), col("cid").as("scid"), col("cv"))
     // flat code rows (coarse list, subspace, sub-centroid id) per vector
-    val codes = assignGroupedLit(rsliced, booksC)
+    val codes = assignLit(rsliced, booksC)
       .select(col("vec_id"), col("grp").as("s"), col("cid").as("scid"))
       .join(resid.select("vec_id", "cid"), Seq("vec_id"))
     // probe the nprobe exact-L2-nearest coarse lists per query — ranked by
@@ -829,7 +777,7 @@ object SimilarityOps {
     // no-array-type-crosses-a-shuffle pin; same (cdist asc, cid asc) tie
     // rule via the struct field order, so results are bit-identical)
     val q = queries.select(col("vec_id").as("qid"), quantize(col("embedding")).as("qq"))
-    val centsArr = array(coarseC.sortBy(_.cid).map(c =>
+    val centsArr = array(coarseC.map(c =>
       struct(lit(c.cid).as("cid"), typedLit(c.cv.toSeq).as("cv"))): _*)
     val probes = q
       .select(col("qid"), col("qq"), explode(slice(array_sort(
@@ -1078,8 +1026,8 @@ object SimilarityOps {
       .orderBy("j").collect().map(r => r.getLong(1))
     require(means.length == dim, s"expected $dim dims, got ${means.length}")
     val mlit = array(means.toIndexedSeq.map(lit(_)): _*)
-    val y = x.select(zip_with(col("xc"), mlit, (a, b) => a - b).as("y"))
-      .localCheckpoint() // sever: every round rescans Y, not its lineage
+    // sever: every round rescans Y, not its lineage
+    val y = Materialize.cut(x.select(zip_with(col("xc"), mlit, (a, b) => a - b).as("y")))
     def round(v: Array[Long]): DataFrame = {
       val vlit = array(v.toIndexedSeq.map(lit(_)): _*)
       y.select(col("y"),
@@ -1123,9 +1071,9 @@ object SimilarityOps {
     require(k >= 1, s"bad k=$k")
     val spark = vectors.sparkSession
     import spark.implicits._
-    val x = vectors
-      .select(col(idCol).cast("long").as("id"), quantize(col(embCol)).as("xc"))
-      .localCheckpoint() // k scans of the quantized table, not its lineage
+    // k scans of the quantized table, not its lineage
+    val x = Materialize.cut(vectors
+      .select(col(idCol).cast("long").as("id"), quantize(col(embCol)).as("xc")))
     def vecOf(id: Long): IndexedSeq[Long] =
       x.filter(col("id") === id).select("xc").head().getSeq[Long](0).toIndexedSeq
     val firstId = x.agg(min("id")).head().getLong(0)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Text-analysis + deduplication operators for the training-data pipeline
   * (builder brief: dedup, text analysis over `documents`).
   *
@@ -202,7 +204,7 @@ object TextOps {
       .select(col(idCol), explode(sequence(col("pos"), col("pos") + (n - 1))).as("p"))
       .distinct()
       .groupBy(idCol).agg(count(lit(1)).as("dup_tokens"))
-    graft.Materialize.thenRelease(
+    Materialize.thenRelease(
       docs.select(col(idCol), size(words(col(textCol))).cast("long").as("n_tokens"))
         .join(covered, Seq(idCol), "left")
         .select(col(idCol), col("n_tokens"),
@@ -219,7 +221,7 @@ object TextOps {
   def nearDupDropIds(docs: DataFrame, idCol: String,
                      threshold: Double = 0.5): DataFrame = {
     val sh = shingleTable(docs, idCol).cache()
-    graft.Materialize.thenRelease(
+    Materialize.thenRelease(
       jaccardVerify(minhashCandidates(sh, idCol), sh, idCol, threshold)
         .select(col("id2").as(idCol)).distinct(),
       sh)
@@ -265,7 +267,7 @@ object TextOps {
       .groupBy(col(s"a.$idCol").as("id1"), col(s"b.$idCol").as("id2"),
         col("a.sz").as("s1"), col("b.sz").as("s2"))
       .agg(count(lit(1)).as("inter"))
-    graft.Materialize.thenRelease(
+    Materialize.thenRelease(
       inter
         .withColumn("jaccard", col("inter") / (col("s1") + col("s2") - col("inter")))
         .filter(col("jaccard") >= threshold)
@@ -310,7 +312,7 @@ object TextOps {
       .groupBy(col(s"a.$idCol").as("ida"), col(s"b.$idCol").as("idb"),
         col("a.sz").as("sa"), col("b.sz").as("sb"))
       .agg(count(lit(1)).as("inter"))
-    graft.Materialize.thenRelease(
+    Materialize.thenRelease(
       pairs
         .select(explode(array(
             struct(col("ida").as("id1"), col("idb").as("id2"),
@@ -352,17 +354,6 @@ object TextOps {
   def containmentPairsPrefix(shingleDf: DataFrame, idCol: String,
                              thrNum: Long = 9, thrDen: Long = 10,
                              minShingles: Int = 1): DataFrame = {
-    val (result, shared) =
-      containmentPairsPrefixInner(shingleDf, idCol, thrNum, thrDen, minShingles)
-    graft.Materialize.thenRelease(result, shared: _*)
-  }
-
-  /** [[containmentPairsPrefix]]'s lazy body: (result frame, shared caches
-    * to release after materialization). Split out so diagnostics can see
-    * the real plan (Materialize truncates it to a checkpoint scan). */
-  private[graft] def containmentPairsPrefixInner(
-      shingleDf: DataFrame, idCol: String, thrNum: Long, thrDen: Long,
-      minShingles: Int): (DataFrame, Seq[DataFrame]) = {
     require(thrNum > 0 && thrDen > 0 && thrNum <= thrDen,
       s"bad threshold $thrNum/$thrDen")
     val base = shingleDf.select(col(idCol).as("id"), col("sh"))
@@ -408,14 +399,15 @@ object TextOps {
       .join(postings.select(col("id").as("id2"), col("shingle")), Seq("shingle"))
       .filter(col("id1") =!= col("id2"))
       .select("id1", "id2").distinct()
-    val verified = cand
-      .join(base.select(col("id").as("id1"), col("sh").as("sh1")), Seq("id1"))
-      .join(base.select(col("id").as("id2"), col("sh").as("sh2")), Seq("id2"))
-      .withColumn("containment",
-        size(array_intersect(col("sh1"), col("sh2"))) / size(col("sh1")))
-      .filter(col("containment") >= lit(thrNum.toDouble / thrDen.toDouble))
-      .select(col("id1"), col("id2"), col("containment"))
-    (verified, Seq(postings, base))
+    Materialize.thenRelease(
+      cand
+        .join(base.select(col("id").as("id1"), col("sh").as("sh1")), Seq("id1"))
+        .join(base.select(col("id").as("id2"), col("sh").as("sh2")), Seq("id2"))
+        .withColumn("containment",
+          size(array_intersect(col("sh1"), col("sh2"))) / size(col("sh1")))
+        .filter(col("containment") >= lit(thrNum.toDouble / thrDen.toDouble))
+        .select(col("id1"), col("id2"), col("containment")),
+      postings, base)
   }
 
   /** Ed-Join-style edit-distance similarity join (Xiao, Wang, Lin,
@@ -474,7 +466,7 @@ object TextOps {
     val shortPairs = shorts.select(col("name").as("n1"))
       .crossJoin(shorts.select(col("name").as("n2")))
       .filter(col("n1") < col("n2"))
-    graft.Materialize.thenRelease(
+    Materialize.thenRelease(
       cand.union(shortPairs).distinct() // buckets overlap on mid-length pairs
         .filter(abs(length(col("n1")) - length(col("n2"))) <= d)
         .withColumn("dist", levenshtein(col("n1"), col("n2")).cast("long"))
@@ -667,7 +659,7 @@ object TextOps {
       .cache()
     val c1 = bg.groupBy("w1").agg(count(lit(1)).as("c1"))
     val c2 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-    graft.Materialize.thenRelease(
+    Materialize.thenRelease(
       bg.join(c2, Seq("w1", "w2")).join(c1, Seq("w1"))
         .select(col(idCol), expr("(1000000 * c2) div c1").as("p_micro"))
         .groupBy(col(idCol))
@@ -855,7 +847,7 @@ object TextOps {
                       textCol: String = "text"): DataFrame = {
     def dec(c: Column): Column = c.cast("decimal(38,0)")
     // (token, successor-or-null) counts: ONE generate pass over the corpus
-    val pc = docs.select(words(col(textCol)).as("w"))
+    val pc = Materialize.cut(docs.select(words(col(textCol)).as("w"))
       // greatest(..., 0) keeps the slice length total: size(w) = 0 would
       // make it -1 and throw at runtime. Unreachable while the tokenizer
       // maps empty text to [""], but that precondition shouldn't be
@@ -864,8 +856,7 @@ object TextOps {
         "zip_with(w, concat(slice(w, 2, greatest(size(w) - 1, 0)), array(CAST(NULL AS STRING)))," +
           " (a, b) -> struct(a AS t, b AS nxt))")).as("p"))
       .groupBy(col("p.t").as("t"), col("p.nxt").as("nxt"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("c")))
     val uni = pc.groupBy("t").agg(sum("c").as("c"))
     val nUni = pc.agg(sum("c").as("n_uni"))
     val nBi = pc.filter(col("nxt").isNotNull).agg(sum("c").as("n_bi"))
@@ -899,15 +890,15 @@ object TextOps {
   def skipgramPmi(docs: DataFrame, minCount: Long = 20, k: Int = 50,
                   textCol: String = "text"): DataFrame = {
     def dec(c: Column): Column = c.cast("decimal(38,0)")
-    val tri = docs.select(words(col(textCol)).as("w"))
+    // ONE corpus scan feeds unigrams + both offsets
+    val tri = Materialize.cut(docs.select(words(col(textCol)).as("w"))
       .select(explode(expr(
         """transform(sequence(1, size(w)), i -> struct(
           |  element_at(w, i) AS t,
           |  CASE WHEN i + 1 <= size(w) THEN element_at(w, i + 1) END AS n1,
           |  CASE WHEN i + 2 <= size(w) THEN element_at(w, i + 2) END AS n2))"""
           .stripMargin)).as("p"))
-      .select(col("p.t").as("t"), col("p.n1").as("n1"), col("p.n2").as("n2"))
-      .localCheckpoint() // ONE corpus scan feeds unigrams + both offsets
+      .select(col("p.t").as("t"), col("p.n1").as("n1"), col("p.n2").as("n2")))
     val uni = tri.groupBy("t").agg(count(lit(1)).as("c"))
     val nUni = broadcast(tri.agg(count(lit(1)).as("n_uni")))
     val pairsRaw = tri.filter(col("n1").isNotNull)
@@ -917,8 +908,7 @@ object TextOps {
         .select(least(col("t"), col("n2")).as("w1"),
           greatest(col("t"), col("n2")).as("w2")))
       .filter(col("w1") =!= col("w2"))
-    val pc = pairsRaw.groupBy("w1", "w2").agg(count(lit(1)).as("cxy"))
-      .localCheckpoint()
+    val pc = Materialize.cut(pairsRaw.groupBy("w1", "w2").agg(count(lit(1)).as("cxy")))
     val nPairs = broadcast(pc.agg(sum("cxy").as("n_pairs")))
     pc.filter(col("cxy") >= minCount)
       .crossJoin(nUni).crossJoin(nPairs)
@@ -1088,9 +1078,9 @@ object TextOps {
           " (a, b) -> struct(a AS a, b AS b))")).as("p"))
       .filter(col("p.b").isNotNull)
       .select(col("doc_id"), col("lang"), col("p.a").as("a"), col("p.b").as("b"))
-    val cab = pairs.filter(col("doc_id") % 10 < 8)
-      .groupBy("a", "b").agg(count(lit(1)).as("cab"))
-      .localCheckpoint() // feeds heads, vocab, and the cost table
+    // feeds heads, vocab, and the cost table
+    val cab = Materialize.cut(pairs.filter(col("doc_id") % 10 < 8)
+      .groupBy("a", "b").agg(count(lit(1)).as("cab")))
     val ca = cab.groupBy("a").agg(sum("cab").as("ca"))
     val v = broadcast(cab.agg(countDistinct("b").as("v")))
     val costAb = cab.join(ca, Seq("a")).crossJoin(v)
@@ -1227,9 +1217,9 @@ object TextOps {
           " (a, b) -> struct(a AS a, b AS b))")).as("p"))
       .filter(col("p.b").isNotNull)
       .select(col("doc_id"), col("lang"), col("p.a").as("a"), col("p.b").as("b"))
-    val cab = pairs.filter(col("doc_id") % 10 < 8)
-      .groupBy("a", "b").agg(count(lit(1)).as("cab"))
-      .localCheckpoint() // feeds heads, continuations, B, and the val join
+    // feeds heads, continuations, B, and the val join
+    val cab = Materialize.cut(pairs.filter(col("doc_id") % 10 < 8)
+      .groupBy("a", "b").agg(count(lit(1)).as("cab")))
     val heads = cab.groupBy("a")
       .agg(sum("cab").as("ca"), count(lit(1)).as("n1a"))
     val conts = cab.groupBy("b").agg(count(lit(1)).as("n1b"))
@@ -1318,9 +1308,9 @@ object TextOps {
       floor(log(x) * lit(1e6) + lit(0.5)).cast("long")
     val toks = docs.select(col(idCol).as("doc_id"),
       col(labelCol).as("lang"), explode(words(col(textCol))).as("term"))
-    val ct = toks.filter(col("doc_id") % 10 < 8)
-      .groupBy("lang", "term").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // feeds class totals, vocab size, and lp rows
+    // feeds class totals, vocab size, and lp rows
+    val ct = Materialize.cut(toks.filter(col("doc_id") % 10 < 8)
+      .groupBy("lang", "term").agg(count(lit(1)).as("c")))
     val tc = ct.groupBy("lang").agg(sum("c").as("tc"))
     val v = broadcast(ct.agg(countDistinct("term").as("v")))
     val lp = ct.join(tc, Seq("lang")).crossJoin(v)
@@ -1371,10 +1361,9 @@ object TextOps {
           " (a, b) -> struct(a AS t, b AS nxt))")).as("p"))
       .filter(col("p.nxt").isNotNull && col("p.t") =!= col("p.nxt"))
       .select(col("p.t").as("a"), col("p.nxt").as("b"))
-    val sym = pairs
+    val sym = Materialize.cut(pairs
       .union(pairs.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     GraphOps.pageRank(sym, iters, "a", "b")
       .orderBy(col("rank").desc, col("node"))
       .limit(k)
@@ -1414,11 +1403,11 @@ object TextOps {
   def unigramSegment(docs: DataFrame, textCol: String = "text",
                      topPieces: Int = 150, topWords: Int = 2000,
                      maxPieceLen: Int = 4, maxWordLen: Int = 12): DataFrame = {
-    val words = docs
+    // reduced word domain, consumed three times below
+    val words = Materialize.cut(docs
       .select(explode(split(col(textCol), " ")).as("w"))
       .filter(length(col("w")).between(2, maxWordLen))
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // reduced word domain, consumed three times below
+      .groupBy("w").agg(count(lit(1)).as("cnt")))
     val pos = words.select(col("w"), col("cnt"),
       explode(sequence(lit(1), length(col("w")))).as("s"))
     val multi = pos

@@ -7,6 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
+import graft.Materialize
+
 /** Drives the streaming operators end-to-end for the CORRECTNESS GATE:
   * a real file-source stream, the production `foreachBatch` idempotent
   * MERGE sink, and a parquet result table the DuckDB oracle can hash —
@@ -100,7 +102,7 @@ object StreamGate {
     // equivalence path), except for ops that cannot run in batch mode at
     // all (transformWithState needs the StateStoreCoordinator that only a
     // streaming query creates) — those pass the empty frame explicitly
-    var state = seed.getOrElse(op(staged.limit(0))).localCheckpoint()
+    var state = Materialize.cut(seed.getOrElse(op(staged.limit(0))))
     // Stateful operators keep one state-store instance PER shuffle
     // partition PER micro-batch: at the session's 32 partitions a 5-batch
     // run pays 160 store open/commit cycles per stateful operator (the
@@ -122,8 +124,7 @@ object StreamGate {
         // batch's lineage, so each batch re-plans an ever-deeper fold
         // chain; keyed delete-then-insert is the idempotent MERGE from
         // StreamOpsSpec
-        state = batch.unionByName(state.join(batch, keys, "left_anti"))
-          .localCheckpoint()
+        state = Materialize.cut(batch.unionByName(state.join(batch, keys, "left_anti")))
         ()
       }
       .start()
@@ -360,7 +361,7 @@ object StreamGate {
     spark.conf.set(partsKey, "4")
     try {
       def runPhase(seed: DataFrame): (DataFrame, Seq[Long]) = {
-        var state = seed.localCheckpoint()
+        var state = Materialize.cut(seed)
         val delivered = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
         val stream = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(in)
@@ -369,8 +370,7 @@ object StreamGate {
           .outputMode("update")
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             delivered.add(batchId)
-            state = batch.unionByName(state.join(batch, keys, "left_anti"))
-              .localCheckpoint()
+            state = Materialize.cut(batch.unionByName(state.join(batch, keys, "left_anti")))
             ()
           }
           .start()
@@ -485,9 +485,8 @@ object StreamGate {
     * watermark: segment x type is a bounded key domain). Converges to
     * the batch group-by the oracle replays. */
   def enrichGate(spark: SparkSession, events: DataFrame, work: String): DataFrame = {
-    val dim = events.select(col("user_id")).distinct()
-      .withColumn("segment", (col("user_id") % 4).cast("int"))
-      .localCheckpoint()
+    val dim = Materialize.cut(events.select(col("user_id")).distinct()
+      .withColumn("segment", (col("user_id") % 4).cast("int")))
     runMerged(spark, events, work,
       st => st.join(broadcast(dim), Seq("user_id"))
         .groupBy("segment", "event_type")

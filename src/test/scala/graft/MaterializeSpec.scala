@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -35,5 +40,23 @@ class MaterializeSpec extends SparkSpec {
     assert(rounds == 3)
     assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
       .exists(_.getMessage.contains("[CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND]")), err)
+  }
+
+  test("every lineage cut in src/main goes through Materialize.cut") {
+    // The cut policy (localCheckpoint here, reliable checkpoint where
+    // executors can be lost) is decided in one function only while no
+    // other source calls localCheckpoint itself.
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"no sources at ${root.toAbsolutePath}")
+    val hits = Using.resource(Files.walk(root)) { paths =>
+      paths.iterator.asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          p.getFileName.toString != "Materialize.scala")
+        .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains(".localCheckpoint(") => s"$p:${i + 1}"
+        })
+        .toList
+    }
+    assert(hits.isEmpty, hits.mkString("localCheckpoint outside Materialize.cut:\n", "\n", ""))
   }
 }

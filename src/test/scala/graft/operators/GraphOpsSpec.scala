@@ -225,7 +225,7 @@ class GraphOpsSpec extends SparkSpec {
       20L -> (20L, 0L)))
   }
 
-  test("pointerJumpRoots: depth-1000 chain converges in ≤ maxIter doublings") {
+  test("pointerJumpRoots: depth-1000 chain converges within the 40-round cap") {
     // log2(1000) ≈ 10 — well under the 40-round guard; a naive walk
     // would need 1000 join rounds
     val parents = (0L to 1000L).map(i => (i, math.max(0L, i - 1))).toDF("id", "parent")

@@ -14,6 +14,49 @@ class SimilarityOpsSpec extends SparkSpec {
 
   private lazy val vecs = randomVecs(1, 60).toDF("vec_id", "embedding")
 
+  /** Plain-Scala Lloyd over quantized (vec_id, qv) rows: seeds are the k
+    * smallest vec_ids (cid = position); each vector goes to its exact
+    * integer-L2 nearest centroid, ties to the smaller cid; the new
+    * centroid is the per-dimension mean rounded HALF_UP on the double
+    * quotient, as Spark's `round` does; an empty cluster keeps its
+    * previous centroid with n = 0. Returns (cid, n, cv). */
+  private def refLloyd(qv: Seq[(Long, Seq[Long])], k: Int,
+                       iters: Int): Seq[(Int, Long, Seq[Long])] = {
+    def dot(a: Seq[Long], b: Seq[Long]): Long = a.zip(b).map { case (x, y) => x * y }.sum
+    val dim = qv.head._2.length
+    var cents = qv.sortBy(_._1).take(k).map(v => (0L, v._2)).toIndexedSeq
+    (1 to iters).foreach { _ =>
+      val members = qv.groupBy { case (_, v) =>
+        cents.indices.minBy(c =>
+          (dot(v, v) - 2 * dot(v, cents(c)._2) + dot(cents(c)._2, cents(c)._2), c))
+      }
+      cents = cents.indices.map(c => members.get(c) match {
+        case Some(vs) => (vs.size.toLong, (0 until dim).map(d =>
+          BigDecimal(vs.map(_._2(d)).sum.toDouble / vs.size)
+            .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong))
+        case None => (0L, cents(c)._2)
+      })
+    }
+    cents.zipWithIndex.map { case ((n, cv), c) => (c, n, cv) }
+  }
+
+  private def quantized(df: org.apache.spark.sql.DataFrame): Seq[(Long, Seq[Long])] =
+    df.select(col("vec_id"), SimilarityOps.quantize(col("embedding")))
+      .as[(Long, Seq[Long])].collect().toSeq
+
+  private val centers = Seq(Seq(0.9f, 0.9f), Seq(0.9f, -0.9f), Seq(-0.9f, 0.9f), Seq(-0.9f, -0.9f))
+
+  /** `n` vectors in 4 tight clusters around `centers` (dims 0/1), vector
+    * i in cluster i % 4. */
+  private def planted(seed: Int, n: Int, dim: Int): Seq[(Long, Seq[Float])] = {
+    val rnd = new scala.util.Random(seed)
+    (0 until n).map { i =>
+      val c = centers(i % 4)
+      (i.toLong, Seq.tabulate(dim)(d =>
+        (if (d < 2) c(d) else 0.0f) + (rnd.nextGaussian() / 50).toFloat))
+    }
+  }
+
   test("cosQ: self-similarity is 1.0 to an ulp; bounded by [-1, 1]") {
     // n/(sqrt(n)*sqrt(n)) is 1 ± 1 ulp (sqrt(n)² ≠ n exactly); what matters
     // is that the SAME double comes out of every engine, not that it's 1.0
@@ -73,15 +116,8 @@ class SimilarityOpsSpec extends SparkSpec {
 
   test("kmeansCentroids: separates planted clusters; centroids near true centers") {
     // 4 tight clusters around axis-aligned centers ±0.9 in dims 0/1
-    val centers = Seq(Seq(0.9f, 0.9f), Seq(0.9f, -0.9f), Seq(-0.9f, 0.9f), Seq(-0.9f, -0.9f))
-    val rnd = new scala.util.Random(11)
     val dim = 8
-    val data = (0 until 80).map { i =>
-      val c = centers(i % 4)
-      val v = Seq.tabulate(dim)(d =>
-        (if (d < 2) c(d) else 0.0f) + (rnd.nextGaussian() / 50).toFloat)
-      (i.toLong, v)
-    }
+    val data = planted(11, 80, dim)
     val df = data.toDF("vec_id", "embedding")
     val got = SimilarityOps.kmeansCentroids(df, k = 4, iters = 3, dim = dim)
       .as[(Int, Long, Seq[Long])].collect().sortBy(_._1)
@@ -98,16 +134,69 @@ class SimilarityOpsSpec extends SparkSpec {
     }
   }
 
-  test("ivfTopK over kmeans-trained centroids matches bruteTopK on clustered data") {
-    val centers = Seq(Seq(0.9f, 0.9f), Seq(0.9f, -0.9f), Seq(-0.9f, 0.9f), Seq(-0.9f, -0.9f))
-    val rnd = new scala.util.Random(12)
-    val dim = 8
-    val data = (0 until 60).map { i =>
-      val c = centers(i % 4)
-      val v = Seq.tabulate(dim)(d =>
-        (if (d < 2) c(d) else 0.0f) + (rnd.nextGaussian() / 50).toFloat)
-      (i.toLong, v)
+  test("kmeansCentroids equals the plain-Scala Lloyd reference bit for bit") {
+    // seeds 0 and 2 coincide, so cid 2 is empty in round 1 (ties go to
+    // cid 0); round 2 takes all three of cid 0's members away from it,
+    // so cid 0 ends with n = 0 and its round-1 centroid
+    val emptying = Seq((-4, 2), (-3, -5), (-4, 2), (-3, -2), (3, -3), (-4, -3), (-1, -1))
+      .zipWithIndex.map { case ((x, y), i) => (i.toLong, Seq(x / 10f, y / 10f)) }
+    val fixtures = Seq(
+      ("random", randomVecs(41, 70, dim = 8), 5, 3, 8),
+      ("planted", planted(11, 80, 8), 4, 3, 8),
+      ("empty cluster", emptying, 3, 2, 2))
+    fixtures.foreach { case (name, rows, k, iters, dim) =>
+      val df = rows.toDF("vec_id", "embedding")
+      val want = refLloyd(quantized(df), k, iters)
+      if (name == "empty cluster") assert(want.exists(_._2 == 0L), want)
+      val got = SimilarityOps.kmeansCentroids(df, k, iters, dim)
+        .as[(Int, Long, Seq[Long])].collect().sortBy(_._1).toSeq
+      assert(got == want, name)
     }
+  }
+
+  test("Lloyd trainer: m groups at once equal each group trained alone") {
+    val dim = 4
+    // the same vec_ids in every group, as product quantization slices them
+    val grouped = (0 until 3).flatMap(g => randomVecs(50 + g, 25, dim).map {
+        case (id, v) => (g, id, v) })
+      .toDF("grp", "vec_id", "embedding")
+      .select(col("grp"), col("vec_id"), SimilarityOps.quantize(col("embedding")).as("qv"))
+    def train(df: org.apache.spark.sql.DataFrame): Map[Int, Seq[(Int, Long, Seq[Long])]] =
+      SimilarityOps.lloydDriverQ(df, k = 3, iters = 2, dim = dim)
+        .map { case (g, cs) => g -> cs.map(c => (c.cid, c.n, c.cv.toSeq)) }
+    val all = train(grouped)
+    assert(all.keySet == Set(0, 1, 2))
+    (0 until 3).foreach { g =>
+      val one = grouped.filter(col("grp") === g)
+      assert(train(one.withColumn("grp", lit(0))) == Map(0 -> all(g)), s"group $g")
+      assert(all(g) == refLloyd(one.select(col("vec_id"), col("qv"))
+        .as[(Long, Seq[Long])].collect().toSeq, 3, 2), s"group $g")
+    }
+  }
+
+  test("Lloyd trainer job pins: one seed job, two jobs a round") {
+    // counted over the frame build only; a round is the update
+    // aggregate's shuffle-map job plus its collect
+    val df = planted(19, 40, 8).toDF("vec_id", "embedding")
+    val q = df.filter(col("vec_id") === 0)
+    Seq(1, 3).foreach { iters =>
+      val (_, jobs) = countingJobs(SimilarityOps.kmeansCentroids(df, 4, iters, 8))
+      assert(jobs <= 1 + 2 * iters, s"kmeansCentroids iters=$iters: $jobs jobs")
+    }
+    Seq(1, 2).foreach { iters =>
+      val (_, pq) = countingJobs(SimilarityOps.pqTopK(df, q, k = 3,
+        m = 4, ksub = 4, iters = iters, dim = 8))
+      assert(pq <= 1 + 2 * iters, s"pqTopK iters=$iters: $pq jobs")
+      // coarse training, the residual cut, then the residual codebooks
+      val (_, ivfpq) = countingJobs(SimilarityOps.ivfpqTopK(df, q, k = 3,
+        nlist = 4, nprobe = 1, m = 4, ksub = 4, iters = iters, dim = 8))
+      assert(ivfpq <= 3 + 4 * iters, s"ivfpqTopK iters=$iters: $ivfpq jobs")
+    }
+  }
+
+  test("ivfTopK over kmeans-trained centroids matches bruteTopK on clustered data") {
+    val dim = 8
+    val data = planted(12, 60, dim)
     val df = data.toDF("vec_id", "embedding")
     val trained = SimilarityOps.kmeansCentroids(df, k = 4, iters = 3, dim = dim)
       .select(col("cid").cast("long").as("vec_id"),
@@ -166,15 +255,8 @@ class SimilarityOpsSpec extends SparkSpec {
   }
 
   test("pqTopK: a planted duplicate ranks first; clustered recall matches brute force") {
-    val centers = Seq(Seq(0.9f, 0.9f), Seq(0.9f, -0.9f), Seq(-0.9f, 0.9f), Seq(-0.9f, -0.9f))
-    val rnd = new scala.util.Random(13)
     val dim = 8
-    val base = (0 until 60).map { i =>
-      val c = centers(i % 4)
-      val v = Seq.tabulate(dim)(d =>
-        (if (d < 2) c(d) else 0.0f) + (rnd.nextGaussian() / 50).toFloat)
-      (i.toLong, v)
-    }
+    val base = planted(13, 60, dim)
     val dup = (99L, base.head._2) // exact copy of vec 0
     val df = (base :+ dup).toDF("vec_id", "embedding")
     val got = SimilarityOps.pqTopK(df, df.filter(col("vec_id") === 0), k = 5,
@@ -194,15 +276,8 @@ class SimilarityOpsSpec extends SparkSpec {
   }
 
   test("ivfpqTopK: probed-cluster containment, planted duplicate at minimum ADC distance") {
-    val centers = Seq(Seq(0.9f, 0.9f), Seq(0.9f, -0.9f), Seq(-0.9f, 0.9f), Seq(-0.9f, -0.9f))
-    val rnd = new scala.util.Random(17)
     val dim = 8
-    val base = (0 until 60).map { i =>
-      val c = centers(i % 4)
-      val v = Seq.tabulate(dim)(d =>
-        (if (d < 2) c(d) else 0.0f) + (rnd.nextGaussian() / 50).toFloat)
-      (i.toLong, v)
-    }
+    val base = planted(17, 60, dim)
     val dup = (99L, base.head._2) // exact copy of vec 0
     val df = (base :+ dup).toDF("vec_id", "embedding")
     val got = SimilarityOps.ivfpqTopK(df, df.filter(col("vec_id") === 0), k = 5,
@@ -262,7 +337,6 @@ class SimilarityOpsSpec extends SparkSpec {
   }
 
   test("binaryTopK: exact copy at Hamming 0 and rank 1; recall against brute on clusters") {
-    val centers = Seq(Seq(0.9f, 0.9f), Seq(0.9f, -0.9f), Seq(-0.9f, 0.9f), Seq(-0.9f, -0.9f))
     val rnd = new scala.util.Random(41)
     val dim = 16
     val base = (0 until 40).map { i =>
