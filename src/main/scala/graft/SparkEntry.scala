@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.Wkt
 import graft.operators._
 import graft.sources.{Sinks, ValidatedSource}
+import graft.sources.v2.{GraftCsv, GraftCsvAggScan, GraftCsvScan}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -3397,7 +3398,7 @@ object SparkEntry {
     // custom-source analogue of parquet row-group pruning (and of
     // Iceberg/Delta manifest skipping). Orders are range-clustered on
     // o_orderkey into 8 files, so the key-range query must plan a strict
-    // subset of files (in-query require via the planning instrumentation)
+    // subset of files (in-query require on the scan node's file counts)
     // while answering exactly like the raw-table oracle.
     "q238_dsv2_skipping" -> ((s, dir) => {
       val path = rtPath("dsv2skip")
@@ -3415,11 +3416,14 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"),
           sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("price_c"))
         .orderBy("bucket")
-      q.rdd.getNumPartitions // force partition planning
-      val (kept, total) = graft.sources.v2.GraftCsv.lastSkipStats.get()
-      require(total == 8 && kept < total,
-        s"file skipping did not prune: kept $kept of $total")
-      q
+      // ≤10-row eager checkpoint: one execution, whose scan node reports
+      // the files it read (the q336 discipline)
+      val out = Materialize.cut(q)
+      val counts = GraftCsv.scans(q).map(GraftCsv.fileCounts)
+      require(counts.length == 1 &&
+          counts.forall { case (kept, total) => total == 8 && kept < total },
+        s"file skipping did not prune: (kept, total) per scan $counts")
+      out
     }),
 
     // STREAMING incremental view maintenance (SEVENTH streaming gate):
@@ -3911,10 +3915,10 @@ object SparkEntry {
     // DSv2 BLOOM file skipping: the documents table written through
     // GraftCsv in an INTERLEAVED key layout (file f holds doc_id ≡ f
     // mod 8, so every file's [min, max] covers every probe and range
-    // stats cannot prune) — the three point lookups must still plan a
-    // strict file subset through the per-file Bloom filters
-    // (require'd in-engine), and the rows must hash-match the plain
-    // parquet filter. False positives only KEEP files, so the result
+    // stats cannot prune) — each of the three point lookups must still
+    // plan a strict file subset through the per-file Bloom filters
+    // (require'd on its own scan node), and the rows must hash-match the
+    // plain parquet filter. False positives only KEEP files, so the result
     // is exact by construction.
     "q276_bloom_skip" -> ((s, dir) => {
       import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -3926,16 +3930,16 @@ object SparkEntry {
         StructField("lang", StringType), StructField("n_chars", LongType)))
       val rd = s.read.schema(sch).format("graft.sources.v2.GraftCsv").load(path)
       val probes = Seq(40L, 41L, 1002L)
-      // three single-key probes, each must prune through the blooms
-      val parts = probes.map { k =>
-        val one = rd.filter(col("doc_id") === k)
-        one.rdd.getNumPartitions // force partition planning
-        val (kept, total) = graft.sources.v2.GraftCsv.lastSkipStats.get()
-        require(total == 8 && kept <= 2,
-          s"bloom skipping did not prune for key $k: kept $kept of $total")
-        one
-      }
-      parts.reduce(_ unionByName _).orderBy("doc_id")
+      val q = probes.map(k => rd.filter(col("doc_id") === k))
+        .reduce(_ unionByName _).orderBy("doc_id")
+      // few-row eager checkpoint: one execution (the q336 discipline); each
+      // single-key probe's scan node must show it pruned through the blooms
+      val out = Materialize.cut(q)
+      val counts = GraftCsv.scans(q).map(GraftCsv.fileCounts)
+      require(counts.length == probes.length &&
+          counts.forall { case (kept, total) => total == 8 && kept <= 2 },
+        s"bloom skipping did not prune for keys $probes: (kept, total) per scan $counts")
+      out
     }),
 
     // Theil–Sen robust trend per event series: median of pairwise daily
@@ -4752,12 +4756,10 @@ object SparkEntry {
           max(col("o_orderkey")).as("max_key"),
           min(col("o_totalprice")).as("min_price"),
           max(col("o_totalprice")).as("max_price"))
-      graft.sources.v2.GraftCsv.lastAggPushdown.set("")
       // 1-row eager checkpoint: one execution finalizes the plan for the
       // require and is the returned frame (the q336 discipline)
       val out = Materialize.cut(df)
-      val pushedAgg = graft.sources.v2.GraftCsv.lastAggPushdown.get()
-      require(pushedAgg.nonEmpty,
+      require(GraftCsv.scans(df).exists(_.scan.isInstanceOf[GraftCsvAggScan]),
         "aggregate pushdown was not accepted — the scan read data files")
       out
     }),
@@ -4906,10 +4908,12 @@ object SparkEntry {
           min(col("o_orderkey")).as("min_key"),
           max(col("o_orderkey")).as("max_key"))
         .orderBy("k")
-      graft.sources.v2.GraftCsv.lastAggPushdown.set("")
       // ≤16-row eager checkpoint: one execution (the q336 discipline)
       val out = Materialize.cut(df)
-      require(graft.sources.v2.GraftCsv.lastAggPushdown.get().contains("group_by=k"),
+      require(GraftCsv.scans(df).map(_.scan).exists {
+          case a: GraftCsvAggScan => a.pushedDesc.contains("group_by=k")
+          case _ => false
+        },
         "grouped aggregate pushdown was not accepted — the scan read data files")
       out
     }),
@@ -5083,8 +5087,8 @@ object SparkEntry {
     // The fact is range-partitioned on the key so file ranges are
     // disjoint and the IN-set provably skips files. Two requires: the
     // dynamicpruning filter is ON the scan in the executed plan, and the
-    // re-planning kept strictly fewer files than exist. Oracle is the
-    // plain join — runtime pruning must drop nothing.
+    // runtime-filtered scan node read strictly fewer files than exist.
+    // Oracle is the plain join — runtime pruning must drop nothing.
     "q351_dsv2_runtime_filter" -> ((s, dir) => {
       val fmt = "graft.sources.v2.GraftCsv"
       val path = rtPath("dsv2rt")
@@ -5110,15 +5114,15 @@ object SparkEntry {
         .groupBy("n_name")
         .agg(count(lit(1)).as("n_li"), sum("price_c").as("rev_c"))
         .orderBy("n_name")
-      graft.sources.v2.GraftCsv.lastRuntimeSkip.set((0, 0))
       // ≤5-row eager checkpoint: one execution (the q336 discipline)
       val out = Materialize.cut(df)
       val plan = df.queryExecution.executedPlan.toString
       require(plan.toLowerCase.contains("dynamicpruning"),
         s"no dynamicpruning runtime filter reached the custom scan:\n$plan")
-      val (kept, total) = graft.sources.v2.GraftCsv.lastRuntimeSkip.get()
-      require(kept > 0 && kept < total,
-        s"runtime re-planning did not skip files: kept $kept of $total")
+      val counts = GraftCsv.scans(df).filter(_.runtimeFilters.nonEmpty)
+        .map(GraftCsv.fileCounts)
+      require(counts.nonEmpty && counts.forall { case (kept, total) => kept > 0 && kept < total },
+        s"runtime re-planning did not skip files: (kept, total) per scan $counts")
       out
     }),
 
@@ -5230,17 +5234,19 @@ object SparkEntry {
       val sch = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("price_c", org.apache.spark.sql.types.LongType)))
-      graft.sources.v2.GraftCsv.lastBoundPushdown.set("")
       val df = s.read.schema(sch).format(fmt).load(path)
         .orderBy("k").limit(100)
       // ≤100-row eager checkpoint: one execution (the q336 discipline)
       val out = Materialize.cut(df)
-      require(graft.sources.v2.GraftCsv.lastBoundPushdown.get().startsWith("topn=k"),
-        s"top-n pushdown was not accepted: " +
-          s"'${graft.sources.v2.GraftCsv.lastBoundPushdown.get()}'")
-      val (kept, total) = graft.sources.v2.GraftCsv.lastSkipStats.get()
-      require(kept > 0 && kept < total,
-        s"top-n pruning read every file: $kept/$total")
+      val scans = GraftCsv.scans(df)
+      require(scans.map(_.scan).exists {
+          case g: GraftCsvScan => g.topNPush.exists(_._1.name == "k")
+          case _ => false
+        },
+        s"top-n pushdown was not accepted: ${scans.map(_.scan.description)}")
+      val counts = scans.map(GraftCsv.fileCounts)
+      require(counts.nonEmpty && counts.forall { case (kept, total) => kept > 0 && kept < total },
+        s"top-n pruning read every file: (kept, total) per scan $counts")
       out
     }),
 
@@ -5259,17 +5265,19 @@ object SparkEntry {
         .write.format(fmt).mode("overwrite").save(path)
       val sch = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType)))
-      graft.sources.v2.GraftCsv.lastBoundPushdown.set("")
       val limited = s.read.schema(sch).format(fmt).load(path).limit(500)
       val df = limited.agg(count(lit(1)).as("n"))
       // 1-row eager checkpoint: one execution (the q336 discipline)
       val out = Materialize.cut(df)
-      require(graft.sources.v2.GraftCsv.lastBoundPushdown.get() == "limit=500",
-        s"limit pushdown was not accepted: " +
-          s"'${graft.sources.v2.GraftCsv.lastBoundPushdown.get()}'")
-      val (kept, total) = graft.sources.v2.GraftCsv.lastSkipStats.get()
-      require(kept > 0 && kept < total,
-        s"limit pruning read every file: $kept/$total")
+      val scans = GraftCsv.scans(df)
+      require(scans.map(_.scan).exists {
+          case g: GraftCsvScan => g.limitPush.contains(500)
+          case _ => false
+        },
+        s"limit pushdown was not accepted: ${scans.map(_.scan.description)}")
+      val counts = scans.map(GraftCsv.fileCounts)
+      require(counts.nonEmpty && counts.forall { case (kept, total) => kept > 0 && kept < total },
+        s"limit pruning read every file: (kept, total) per scan $counts")
       out
     }),
 
@@ -5410,9 +5418,9 @@ object SparkEntry {
     // (12 files); `maxFilesPerTrigger=3` flows through
     // SupportsAdmissionControl.getDefaultReadLimit, so discovery admits
     // ≤3 files per trigger and the backlog drains in ≥4 BOUNDED
-    // micro-batches — require()d from the source's own batch-plan
-    // instrumentation, alongside the companion redesign this gate rides
-    // on: offsets are now constant-size generation cursors into a
+    // micro-batches — require()d from the file count each batch reports
+    // in the query's progress, alongside the companion redesign this gate
+    // rides on: offsets are now constant-size generation cursors into a
     // discovery log (the round-12 file-list offset grew O(table) per
     // trigger). Oracle = the one-shot batch aggregate: rate limiting
     // changes pacing, never sums.
@@ -5427,7 +5435,6 @@ object SparkEntry {
       val sch = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("price_c", org.apache.spark.sql.types.LongType)))
-      graft.sources.v2.GraftCsv.lastStreamBatches.set(Nil)
       val state = new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
       val q = s.readStream.schema(sch).format(fmt)
         .option("maxFilesPerTrigger", "3").load(in)
@@ -5447,8 +5454,8 @@ object SparkEntry {
       val lastOff = q.lastProgress.sources.apply(0).endOffset
       require(lastOff != null && lastOff.length <= 32 && lastOff.contains("gen"),
         s"offset must be a constant-size generation cursor, got: $lastOff")
+      val batches = GraftCsv.batchFiles(q)
       q.stop()
-      val batches = graft.sources.v2.GraftCsv.lastStreamBatches.get().filter(_ > 0)
       require(batches.length >= 4,
         s"12-file backlog under maxFilesPerTrigger=3 must drain in >= 4 micro-batches, got $batches")
       require(batches.forall(_ <= 3),

@@ -612,20 +612,16 @@ object SimilarityOps {
   def semDedup(vectors: DataFrame, k: Int, iters: Int, dim: Int,
                threshold: Double): DataFrame = {
     val cents = kmeansCentroids(vectors, k, iters, dim).select("cid", "cv")
-    // cache() (lazy — builds nothing until the query runs) severs the
-    // iterative-training lineage for the THREE consumers below: without it
-    // each re-evaluates the whole Lloyd chain. At cluster scale the cached
-    // assignment is n×(dim+2) longs — columnar-compressed and evictable;
-    // spill-safe via MEMORY_AND_DISK default.
-    val assigned = assignToCentroids(vectors, cents).cache()
+    // the assignment is built ONCE (one job) before its THREE consumers
+    // below run: the self-join's two sides and the survivor select. A lazy
+    // cache() would be filled by both join sides' tasks at once, so a
+    // partition could be assigned twice.
+    val assigned = Materialize.cut(assignToCentroids(vectors, cents))
     val dropped = assigned.alias("a").join(assigned.alias("b"), Seq("cid"))
       .filter(col("a.vec_id") < col("b.vec_id"))
       .filter(cosQ(col("a.qv"), col("b.qv")) >= threshold)
       .select(col("b.vec_id").as("vec_id")).distinct()
-    Materialize.thenRelease(
-      assigned.select("vec_id", "cid")
-        .join(dropped, Seq("vec_id"), "left_anti"),
-      assigned)
+    assigned.select("vec_id", "cid").join(dropped, Seq("vec_id"), "left_anti")
   }
 
   /** Product-quantization ANN (Jégou, Douze, Schmid: "Product Quantization

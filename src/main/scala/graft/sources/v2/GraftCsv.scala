@@ -6,13 +6,20 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.{EmptyRelation, LogicalPlan}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.{EmptyRelationExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, LogicalQueryStage}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.sources._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -74,6 +81,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * Pushed-filter evaluation happens on the TYPED parsed value of only the
   * referenced columns, so a filtered scan parses `referenced ∪ required`
   * fields per line and drops failing lines without building output rows.
+  *
+  * What a scan skipped and pushed down is read off the query that ran it,
+  * per scan node ([[GraftCsv.scans]]): the files it read out of the
+  * table's total (SQL metrics, updated by runtime re-planning), and the
+  * accepted aggregate, limit or top-n pushdown. A stream reports each
+  * micro-batch's file count in that batch's progress
+  * ([[GraftCsv.batchFiles]]).
   */
 class GraftCsv extends TableProvider {
 
@@ -199,39 +213,61 @@ object GraftCsv {
     }
   }
 
-  /** (kept, total) of the last driver-side partition planning — test
-    * instrumentation for the skip decision (same spirit as
-    * `description()`'s PushedFilters: observable, not load-bearing). */
-  val lastSkipStats = new java.util.concurrent.atomic.AtomicReference[(Int, Int)]((0, 0))
+  /** Driver metrics of a [[GraftCsvScan]] node: the files its latest
+    * partition planning kept and the files the table holds. Runtime (DPP)
+    * re-planning updates both, so the executed node shows the final
+    * skip decision. Read them off the node with [[fileCounts]]. */
+  val FilesRead = "filesRead"
+  val FilesTotal = "filesTotal"
 
-  /** Rendered function list of the last ACCEPTED aggregate pushdown
-    * ("" = the last build answered from data, not the manifest) — the
-    * in-plan-require hook for the metadata-only-aggregate gate. */
-  val lastAggPushdown = new java.util.concurrent.atomic.AtomicReference[String]("")
+  /** Streaming source metric: the files of the micro-batch the stream
+    * planned, reported in that batch's progress (see [[batchFiles]]). */
+  val BatchFiles = "filesInBatch"
 
-  /** (kept, total) of the last RUNTIME re-planning — set only when Spark
-    * hands a scan runtime filters (DPP over the join's build side) and the
-    * scan re-prunes its file list against them. (0, 0) = no runtime filter
-    * arrived since the last reset. The in-plan-require hook for the
-    * runtime-filtering gate. */
-  val lastRuntimeSkip = new java.util.concurrent.atomic.AtomicReference[(Int, Int)]((0, 0))
+  private object PlanWalk extends AdaptiveSparkPlanHelper
 
-  /** Rendered form of the last ACCEPTED limit/top-n pushdown ("" = the
-    * last build carried neither) — the require hook for the bound-scan
-    * gates. */
-  val lastBoundPushdown = new java.util.concurrent.atomic.AtomicReference[String]("")
+  /** The GraftCsv scan nodes of `df`'s executed plan, AQE query stages
+    * included, in plan order. Each node carries its own scan facts: a
+    * [[GraftCsvAggScan]] with its `pushedDesc`, or a [[GraftCsvScan]]
+    * with its pushed limit/top-n and the [[fileCounts]] it reported. Read
+    * them after `df` has run (a node reports file counts when it plans
+    * its partitions). */
+  def scans(df: Dataset[_]): Seq[BatchScanExec] = scanNodes(df.queryExecution.executedPlan)
 
-  /** File counts of the streaming micro-batches planned since the last
-    * reset (newest first) — the require hook for the admission-control
-    * gate: a backlog drained under maxFilesPerTrigger must show MANY
-    * SMALL entries here, never one entry holding the whole backlog. */
-  val lastStreamBatches =
-    new java.util.concurrent.atomic.AtomicReference[List[Int]](Nil)
+  // AQE replaces a subtree whose stage ran empty with an EmptyRelation;
+  // the stages that ran stay reachable through the logical plan it keeps
+  private def scanNodes(plan: SparkPlan): Seq[BatchScanExec] = PlanWalk.flatMap(plan) {
+    case b: BatchScanExec if b.scan.isInstanceOf[GraftCsvScan] ||
+      b.scan.isInstanceOf[GraftCsvAggScan] => Seq(b)
+    case e: EmptyRelationExec => ranStages(e.logical).flatMap(scanNodes)
+    case _ => Nil
+  }
+
+  private def ranStages(plan: LogicalPlan): Seq[SparkPlan] = plan.flatMap {
+    case s: LogicalQueryStage => Seq(s.physicalPlan)
+    case e: EmptyRelation => ranStages(e.logical)
+    case _ => Nil
+  }
+
+  /** (files read, files total) a [[GraftCsvScan]] node reported. */
+  def fileCounts(node: BatchScanExec): (Long, Long) =
+    (node.metrics(FilesRead).value, node.metrics(FilesTotal).value)
+
+  /** Files each micro-batch of a one-GraftCsv-source stream planned,
+    * oldest first: one entry per progress batchId that read input rows
+    * (only the last `spark.sql.streaming.numRecentProgressUpdates`
+    * batches are kept). */
+  def batchFiles(q: StreamingQuery): Seq[Int] =
+    q.recentProgress.filter(_.numInputRows > 0).groupBy(_.batchId).toSeq
+      .sortBy(_._1).map(_._2.head.sources.head.metrics.get(BatchFiles).toInt)
 
   /** (droppedFiles, rewrittenFiles, keptFiles) of the last catalog
     * DELETE — the require hook for the copy-on-write gate: a predicate
     * crossing file boundaries must show BOTH metadata-only drops and
-    * row-level rewrites, with untouched files proven untouched. */
+    * row-level rewrites, with untouched files proven untouched. It stays
+    * process-global: a DELETE is a side effect of a command, whose plan
+    * carries no scan node and no progress, and the file listing after it
+    * cannot tell a metadata-only drop from a rewrite that came out empty. */
   val lastDeleteStats =
     new java.util.concurrent.atomic.AtomicReference[(Int, Int, Int)]((0, 0, 0))
 
@@ -1116,21 +1152,9 @@ class GraftCsvScanBuilder(fullSchema: StructType, path: String,
     true
   }
 
-  override def build(): Scan = aggScan match {
-    case Some(a) =>
-      GraftCsv.lastAggPushdown.set(a.pushedDesc)
-      a
-    case None =>
-      GraftCsv.lastAggPushdown.set("")
-      GraftCsv.lastBoundPushdown.set((limitPush, topNPush) match {
-        case (_, Some((f, asc, n))) =>
-          s"topn=${f.name} ${if (asc) "asc" else "desc"} $n"
-        case (Some(n), _) => s"limit=$n"
-        case _ => ""
-      })
-      new GraftCsvScan(fullSchema, required, pushed, path, limitPush, topNPush,
-        streamMaxFiles)
-  }
+  override def build(): Scan = aggScan.getOrElse(
+    new GraftCsvScan(fullSchema, required, pushed, path, limitPush, topNPush,
+      streamMaxFiles))
 }
 
 /** Scan produced by an accepted aggregate pushdown: one partition per
@@ -1163,10 +1187,12 @@ class GraftCsvAggReaderFactory extends PartitionReaderFactory {
     }
 }
 
+/** The data scan. `limitPush` and `topNPush` are the accepted LIMIT and
+  * ORDER BY ... LIMIT pushdowns (top-n: sort column, ascending, n). */
 class GraftCsvScan(fullSchema: StructType, required: StructType,
                    pushed: Array[Filter], path: String,
-                   limitPush: Option[Int] = None,
-                   topNPush: Option[(StructField, Boolean, Int)] = None,
+                   val limitPush: Option[Int] = None,
+                   val topNPush: Option[(StructField, Boolean, Int)] = None,
                    streamMaxFiles: Option[Int] = None)
   extends Scan with Batch with SupportsReportPartitioning
     with SupportsReportStatistics with SupportsRuntimeFiltering {
@@ -1203,11 +1229,22 @@ class GraftCsvScan(fullSchema: StructType, required: StructType,
         org.apache.spark.sql.connector.expressions.Expressions.column(f.name)
     }
 
-  override def filter(filters: Array[Filter]): Unit = {
-    runtime = filters
-    val all = GraftCsv.listDataFiles(path)
-    val kept = keptFiles
-    GraftCsv.lastRuntimeSkip.set((kept.length, all.length))
+  override def filter(filters: Array[Filter]): Unit = runtime = filters
+
+  // (read, total) files of the latest keptFiles: the scan node's driver
+  // metrics, posted when BatchScanExec builds its input RDD
+  private var fileCounts = (0, 0)
+
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new GraftCsvFilesRead, new GraftCsvFilesTotal)
+
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = {
+    def metric(n: String, v: Int): CustomTaskMetric = new CustomTaskMetric {
+      override def name(): String = n
+      override def value(): Long = v
+    }
+    Array(metric(GraftCsv.FilesRead, fileCounts._1),
+      metric(GraftCsv.FilesTotal, fileCounts._2))
   }
 
   /** Files surviving manifest skipping, in listing order. */
@@ -1228,7 +1265,7 @@ class GraftCsvScan(fullSchema: StructType, required: StructType,
         .forall(stats => GraftCsv.mayMatch(stats, fullSchema, effective))
     }
     val kept = boundPrune(filtered, manifest)
-    GraftCsv.lastSkipStats.set((kept.length, all.length))
+    fileCounts = (kept.length, all.length)
     kept
   }
 
@@ -1439,7 +1476,8 @@ class GraftCsvMicroBatchStream(fullSchema: StructType, required: StructType,
                                checkpointLocation: String,
                                maxFilesPerTrigger: Option[Int])
   extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
+    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
+    with org.apache.spark.sql.connector.read.streaming.ReportsSourceMetrics {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit, ReadAllAvailable, ReadMaxFiles, CompositeReadLimit}
 
   private val logDir = new Path(checkpointLocation, "graft_discovery_log")
@@ -1537,6 +1575,13 @@ class GraftCsvMicroBatchStream(fullSchema: StructType, required: StructType,
   override def deserializeOffset(json: String): Offset =
     GraftCsvOffset.fromJson(json)
 
+  // files of the batch planned last; the engine reads the source metrics
+  // after running that batch, so its progress carries its own count
+  private var plannedFiles = 0
+
+  override def metrics(latestConsumedOffset: java.util.Optional[Offset]): util.Map[String, String] =
+    Map(GraftCsv.BatchFiles -> plannedFiles.toString).asJava
+
   /** The batch = the files named by log generations (start, end] — read
     * from O(batch) small log entries, never by re-listing or re-diffing
     * the whole table. */
@@ -1544,7 +1589,7 @@ class GraftCsvMicroBatchStream(fullSchema: StructType, required: StructType,
     val s = start.asInstanceOf[GraftCsvOffset].gen
     val e = end.asInstanceOf[GraftCsvOffset].gen
     val names = ((s + 1) to e).flatMap(readGen)
-    GraftCsv.lastStreamBatches.updateAndGet(names.length :: _)
+    plannedFiles = names.length
     val base = new Path(path)
     names.map(n => GraftCsvPartition(new Path(base, n).toString): InputPartition)
       .toArray
@@ -1555,6 +1600,16 @@ class GraftCsvMicroBatchStream(fullSchema: StructType, required: StructType,
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
+}
+
+class GraftCsvFilesRead extends CustomSumMetric {
+  override def name(): String = GraftCsv.FilesRead
+  override def description(): String = "files read"
+}
+
+class GraftCsvFilesTotal extends CustomSumMetric {
+  override def name(): String = GraftCsv.FilesTotal
+  override def description(): String = "files total"
 }
 
 case class GraftCsvPartition(file: String) extends InputPartition

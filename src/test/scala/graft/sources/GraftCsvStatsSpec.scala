@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
+import graft.sources.ScanFacts._
 
 /** Round-12 GraftCsv surface: NaN-safe stats (min/max pushdown + file
   * skipping stand down for NaN-bearing double columns), tolerant keys
@@ -16,7 +17,6 @@ class GraftCsvStatsSpec extends SparkSpec {
   private val fmt = "graft.sources.v2.GraftCsv"
 
   test("NaN doubles: max()/min() pushdown declines; answer honors NaN-above-all") {
-    import graft.sources.v2.GraftCsv
     val out = java.nio.file.Files.createTempDirectory("graftcsv-nan").toString
     val sch = StructType(Seq(StructField("id", LongType), StructField("x", DoubleType)))
     // file 1: finite values; file 2: contains a NaN (and the largest finite)
@@ -28,20 +28,20 @@ class GraftCsvStatsSpec extends SparkSpec {
     def rd = spark.read.schema(sch).format(fmt).load(out)
     // min/max over x must NOT be answered from the manifest (stats see
     // only finite values; Spark's max must be NaN)
-    GraftCsv.lastAggPushdown.set("sentinel")
-    val r = rd.agg(min($"x").as("mn"), max($"x").as("mx")).collect().head
-    assert(GraftCsv.lastAggPushdown.get().isEmpty,
+    val mm = rd.agg(min($"x").as("mn"), max($"x").as("mx"))
+    val r = mm.collect().head
+    assert(pushedAgg(mm).isEmpty,
       "min/max over a NaN-bearing double must decline the manifest lane")
     assert(r.getDouble(0) == 1.5 && r.getDouble(1).isNaN)
     // count(x) is still manifest-answerable: NaN is a VALUE, not a null
-    GraftCsv.lastAggPushdown.set("")
-    val c = rd.agg(count(lit(1)).as("n"), count($"x").as("nx")).collect().head
-    assert(GraftCsv.lastAggPushdown.get().nonEmpty, "count lanes must still push")
+    val cq = rd.agg(count(lit(1)).as("n"), count($"x").as("nx"))
+    val c = cq.collect().head
+    assert(pushedAgg(cq).nonEmpty, "count lanes must still push")
     assert(c.getLong(0) == 5 && c.getLong(1) == 4)
     // min/max over id (int lane, no NaN possible) still pushes
-    GraftCsv.lastAggPushdown.set("")
-    val ids = rd.agg(min($"id"), max($"id")).collect().head
-    assert(GraftCsv.lastAggPushdown.get().nonEmpty)
+    val idq = rd.agg(min($"id"), max($"id"))
+    val ids = idq.collect().head
+    assert(pushedAgg(idq).nonEmpty)
     assert(ids.getLong(0) == 1L && ids.getLong(1) == 5L)
   }
 
@@ -57,9 +57,10 @@ class GraftCsvStatsSpec extends SparkSpec {
     Seq((3L, 0.5), (4L, 0.6), (5L, Double.NaN)).toDF("id", "x")
       .coalesce(1).write.format(fmt).mode("append").save(out)
     def rd = spark.read.schema(sch).format(fmt).load(out)
-    val got = rd.filter($"x" > 100.0).select("id").as[Long].collect().toSet
+    val big = rd.filter($"x" > 100.0).select("id").as[Long]
+    val got = big.collect().toSet
     assert(got == Set(5L), s"NaN row lost or extra rows: $got")
-    val (kept, total) = GraftCsv.lastSkipStats.get()
+    val (kept, total) = fileCounts(big)
     assert(total == 2 && kept == 1, s"finite file should skip, NaN file must not: $kept/$total")
     // an all-NaN file renders blank bounds + nan marker, never Infinity
     val out2 = java.nio.file.Files.createTempDirectory("graftcsv-allnan").toString
@@ -144,10 +145,10 @@ class GraftCsvStatsSpec extends SparkSpec {
     def grouped = rd.groupBy($"k").agg(
       count(lit(1)).as("n"), count($"x").as("nx"),
       min($"v").as("mnv"), max($"v").as("mxv"))
-    GraftCsv.lastAggPushdown.set("")
-    val r1 = grouped.collect().sortBy(_.getLong(0))
-    assert(GraftCsv.lastAggPushdown.get().contains("group_by=k"),
-      s"grouped pushdown not accepted: '${GraftCsv.lastAggPushdown.get()}'")
+    val g1 = grouped
+    val r1 = g1.collect().sortBy(_.getLong(0))
+    assert(pushedAgg(g1).contains("group_by=k"),
+      s"grouped pushdown not accepted: '${pushedAgg(g1)}'")
     val expect = (0 until 400).map(i => (i.toLong % 5, i)).groupBy(_._1)
       .map { case (k, rows) =>
         (k, rows.size.toLong, rows.count(_._2 % 10 != 0).toLong,
@@ -169,7 +170,6 @@ class GraftCsvStatsSpec extends SparkSpec {
   }
 
   test("grouped pushdown declines: non-key grouping, unkeyed table, expression group") {
-    import graft.sources.v2.GraftCsv
     val out = java.nio.file.Files.createTempDirectory("graftcsv-gaggn").toString
     val sch = StructType(Seq(StructField("k", LongType),
       StructField("v", LongType), StructField("s", StringType)))
@@ -178,36 +178,33 @@ class GraftCsvStatsSpec extends SparkSpec {
     df.repartition(4, $"k")
       .write.format(fmt).option("partition_col", "k").mode("overwrite").save(out)
     def rd = spark.read.schema(sch).format(fmt).load(out)
-    def declined[T](body: => T): T = {
-      GraftCsv.lastAggPushdown.set("sentinel")
-      val r = body
-      assert(GraftCsv.lastAggPushdown.get().isEmpty,
-        "pushdown should have been declined")
+    def declined(q: org.apache.spark.sql.DataFrame): Array[org.apache.spark.sql.Row] = {
+      val r = q.collect()
+      assert(pushedAgg(q).isEmpty, "pushdown should have been declined")
       r
     }
     // GROUP BY a non-key column: files are not pure in it
-    assert(declined(rd.groupBy($"s").agg(count(lit(1))).collect()).length == 3)
+    assert(declined(rd.groupBy($"s").agg(count(lit(1)))).length == 3)
     // GROUP BY an expression over the key: no manifest lane
-    assert(declined(rd.groupBy(($"k" % 2).as("k2")).agg(count(lit(1))).collect())
+    assert(declined(rd.groupBy(($"k" % 2).as("k2")).agg(count(lit(1))))
       .length == 2)
     // unkeyed table: GROUP BY anything declines
     val out2 = java.nio.file.Files.createTempDirectory("graftcsv-gaggn2").toString
     df.repartition(2).write.format(fmt).mode("overwrite").save(out2)
     assert(declined(spark.read.schema(sch).format(fmt).load(out2)
-      .groupBy($"k").agg(count(lit(1))).collect()).length == 4)
+      .groupBy($"k").agg(count(lit(1)))).length == 4)
   }
 
   test("a column literally named 'star' does not alias count(*)'s stats coverage") {
-    import graft.sources.v2.GraftCsv
     val out = java.nio.file.Files.createTempDirectory("graftcsv-star").toString
     val sch = StructType(Seq(StructField("star", LongType), StructField("v", LongType)))
     (0 until 50).map(i => (i.toLong, i.toLong * 2)).toDF("star", "v")
       .repartition(2).write.format(fmt).mode("overwrite").save(out)
     def rd = spark.read.schema(sch).format(fmt).load(out)
-    GraftCsv.lastAggPushdown.set("")
-    val r = rd.agg(count(lit(1)).as("n"), count($"star").as("ns"),
-      min($"star").as("mn")).collect().head
-    assert(GraftCsv.lastAggPushdown.get().nonEmpty)
+    val q = rd.agg(count(lit(1)).as("n"), count($"star").as("ns"),
+      min($"star").as("mn"))
+    val r = q.collect().head
+    assert(pushedAgg(q).nonEmpty)
     assert(r.getLong(0) == 50 && r.getLong(1) == 50 && r.getLong(2) == 0L)
   }
 
@@ -248,25 +245,44 @@ class GraftCsvStatsSpec extends SparkSpec {
   }
 
   test("IN pushdown: evaluated per line, pruned per file through range + bloom stats") {
-    import graft.sources.v2.GraftCsv
     val out = java.nio.file.Files.createTempDirectory("graftcsv-in").toString
     val sch = StructType(Seq(StructField("k", LongType), StructField("v", LongType)))
     (0 until 100).map(i => (i.toLong, i.toLong * 2)).toDF("k", "v")
       .repartitionByRange(4, $"k") // 4 files with disjoint k ranges
       .write.format(fmt).mode("overwrite").save(out)
     def rd = spark.read.schema(sch).format(fmt).load(out)
-    val q = rd.filter($"k".isin(3L, 97L)).select("v")
+    val q = rd.filter($"k".isin(3L, 97L)).select("v").as[Long]
     // the IN reached the scan (not a residual Spark filter)…
     val scanDesc = q.queryExecution.executedPlan.toString
     assert(scanDesc.contains("In(k"), s"IN not pushed:\n$scanDesc")
     // …answers exactly…
-    assert(q.as[Long].collect().toSet == Set(6L, 194L))
+    assert(q.collect().toSet == Set(6L, 194L))
     // …and only the two files whose range covers a probe value were read
-    val (kept, total) = GraftCsv.lastSkipStats.get()
+    val (kept, total) = fileCounts(q)
     assert(total == 4 && kept == 2, s"IN should prune to 2 of 4 files: $kept/$total")
     // a probe set entirely outside every range reads nothing
-    assert(rd.filter($"k".isin(1000L, -5L)).collect().isEmpty)
-    assert(GraftCsv.lastSkipStats.get() == ((0, 4)))
+    val none = rd.filter($"k".isin(1000L, -5L))
+    assert(none.collect().isEmpty)
+    assert(fileCounts(none) == ((0, 4)))
+    // …which the scan node still reports after AQE drops its empty stage
+    val noGroups = rd.filter($"k".isin(1000L, -5L)).groupBy("v").count()
+    assert(noGroups.collect().isEmpty)
+    assert(fileCounts(noGroups) == ((0, 4)))
+  }
+
+  test("two scans of one table in one query report their own file counts") {
+    import graft.sources.v2.GraftCsv
+    val out = java.nio.file.Files.createTempDirectory("graftcsv-twoscans").toString
+    val sch = StructType(Seq(StructField("k", LongType), StructField("m", LongType)))
+    (0 until 100).map(i => (i.toLong, i.toLong % 7)).toDF("k", "m")
+      .repartitionByRange(4, $"k") // 4 files with disjoint k ranges
+      .write.format(fmt).mode("overwrite").save(out)
+    def rd = spark.read.schema(sch).format(fmt).load(out)
+    // k = 7 lies in one file's range; m = 3 occurs in every file
+    val q = rd.filter($"k" === 7L).unionByName(rd.filter($"m" === 3L))
+    assert(q.collect().length == 1 + 14)
+    val counts = GraftCsv.scans(q).map(GraftCsv.fileCounts)
+    assert(counts.sorted == Seq((1L, 4L), (4L, 4L)), s"per-scan (read, total): $counts")
   }
 
   test("runtime (DPP) filtering: the join's IN-set re-prunes the file list at execution") {
@@ -290,7 +306,6 @@ class GraftCsvStatsSpec extends SparkSpec {
     // fact broadcasts instead, the planted filter degrades to true
     val j = fact.join(broadcast(dim), "k")
       .agg(count(lit(1)).as("n"), sum($"v").as("sv"))
-    GraftCsv.lastRuntimeSkip.set((0, 0))
     val r = j.collect().head
     val expect = (0 until 1000).filter(i => i % 20 % 5 == 0)
     assert(r.getLong(0) == expect.size && r.getLong(1) == expect.map(_.toLong).sum,
@@ -300,13 +315,14 @@ class GraftCsvStatsSpec extends SparkSpec {
     assert(plan.toLowerCase.contains("dynamicpruning"), s"no DPP filter:\n$plan")
     // …and the execution-time re-planning skipped at least one file: the
     // 4 probe keys can hit at most 4 of the 5 disjoint range files
-    val (kept, total) = GraftCsv.lastRuntimeSkip.get()
+    val runtimeScans = GraftCsv.scans(j).filter(_.runtimeFilters.nonEmpty)
+    assert(runtimeScans.length == 1, s"no runtime-filtered scan node:\n$plan")
+    val (kept, total) = GraftCsv.fileCounts(runtimeScans.head)
     assert(total == 5 && kept > 0 && kept < total,
       s"runtime filter did not re-prune: $kept/$total")
   }
 
   test("top-n pushdown: dominated files drop, both directions, overlap-safe, null-decline") {
-    import graft.sources.v2.GraftCsv
     val out = java.nio.file.Files.createTempDirectory("graftcsv-topn").toString
     val sch = StructType(Seq(StructField("k", LongType), StructField("v", LongType)))
     (0 until 100).map(i => (i.toLong, i.toLong * 3)).toDF("k", "v")
@@ -314,18 +330,17 @@ class GraftCsvStatsSpec extends SparkSpec {
       .write.format(fmt).mode("overwrite").save(out)
     def rd = spark.read.schema(sch).format(fmt).load(out)
     // ascending: only the lowest-range file can hold the top 5
-    GraftCsv.lastBoundPushdown.set("")
-    val asc = rd.orderBy($"k").limit(5).as[(Long, Long)].collect().toSeq
+    val ascQ = rd.orderBy($"k").limit(5).as[(Long, Long)]
+    val asc = ascQ.collect().toSeq
     assert(asc == (0L to 4L).map(i => (i, i * 3)))
-    assert(GraftCsv.lastBoundPushdown.get().startsWith("topn=k asc"),
-      GraftCsv.lastBoundPushdown.get())
-    assert(GraftCsv.lastSkipStats.get() == ((1, 4)), GraftCsv.lastSkipStats.get().toString)
+    assert(pushedBound(ascQ).startsWith("topn=k asc"), pushedBound(ascQ))
+    assert(fileCounts(ascQ) == ((1, 4)), fileCounts(ascQ).toString)
     // descending mirrors
-    GraftCsv.lastBoundPushdown.set("")
-    val desc = rd.orderBy($"k".desc).limit(5).as[(Long, Long)].collect().toSeq
+    val descQ = rd.orderBy($"k".desc).limit(5).as[(Long, Long)]
+    val desc = descQ.collect().toSeq
     assert(desc == (99L to 95L by -1).map(i => (i, i * 3)))
-    assert(GraftCsv.lastBoundPushdown.get().startsWith("topn=k desc"))
-    assert(GraftCsv.lastSkipStats.get() == ((1, 4)))
+    assert(pushedBound(descQ).startsWith("topn=k desc"))
+    assert(fileCounts(descQ) == ((1, 4)))
     // overlapping ranges: two files both span small keys — neither is
     // provably dominated, both must survive, answer exact
     val out2 = java.nio.file.Files.createTempDirectory("graftcsv-topn2").toString
@@ -336,44 +351,44 @@ class GraftCsvStatsSpec extends SparkSpec {
     Seq(100L, 101L, 102L).toDF("k").coalesce(1)
       .write.format(fmt).mode("append").save(out2)
     val sch1 = StructType(Seq(StructField("k", LongType)))
-    val got = spark.read.schema(sch1).format(fmt).load(out2)
-      .orderBy($"k").limit(4).as[Long].collect().toSeq
+    val overlap = spark.read.schema(sch1).format(fmt).load(out2)
+      .orderBy($"k").limit(4).as[Long]
+    val got = overlap.collect().toSeq
     assert(got == Seq(1L, 2L, 3L, 4L))
     // 6 rows provably precede the [100,102] file → it drops; 2 kept of 3
-    assert(GraftCsv.lastSkipStats.get() == ((2, 3)))
+    assert(fileCounts(overlap) == ((2, 3)))
     // a NULL in the sort column declines the pushdown, answer unchanged
     val out3 = java.nio.file.Files.createTempDirectory("graftcsv-topn3").toString
     (0 until 40).map(i => if (i == 7) None else Some(i.toLong)).toDF("k")
       .repartitionByRange(2, $"k")
       .write.format(fmt).mode("overwrite").save(out3)
-    GraftCsv.lastBoundPushdown.set("sentinel")
-    val withNull = spark.read.schema(sch1).format(fmt).load(out3)
-      .orderBy($"k".desc).limit(3).as[Option[Long]].collect().toSeq
+    val nullQ = spark.read.schema(sch1).format(fmt).load(out3)
+      .orderBy($"k".desc).limit(3).as[Option[Long]]
+    val withNull = nullQ.collect().toSeq
     assert(withNull == Seq(Some(39L), Some(38L), Some(37L)))
-    assert(GraftCsv.lastBoundPushdown.get().isEmpty,
+    assert(pushedBound(nullQ).isEmpty,
       "null-bearing sort column must decline top-n pushdown")
   }
 
   test("limit pushdown: a row-sufficient file prefix is read, count exact") {
-    import graft.sources.v2.GraftCsv
     val out = java.nio.file.Files.createTempDirectory("graftcsv-lim").toString
     val sch = StructType(Seq(StructField("k", LongType)))
     (0 until 400).map(_.toLong).toDF("k").repartition(8)
       .write.format(fmt).mode("overwrite").save(out)
     def rd = spark.read.schema(sch).format(fmt).load(out)
-    GraftCsv.lastBoundPushdown.set("")
-    assert(rd.limit(60).count() == 60)
-    assert(GraftCsv.lastBoundPushdown.get() == "limit=60")
-    val (kept, total) = GraftCsv.lastSkipStats.get()
+    val lim = rd.limit(60).agg(count(lit(1)))
+    assert(lim.collect().head.getLong(0) == 60)
+    assert(pushedBound(lim) == "limit=60")
+    val (kept, total) = fileCounts(lim)
     assert(total == 8 && kept < total && kept >= 2, s"$kept/$total")
     // limit past the table reads everything and returns everything
-    GraftCsv.lastBoundPushdown.set("")
-    assert(rd.limit(100000).count() == 400)
-    assert(GraftCsv.lastSkipStats.get() == ((8, 8)))
+    val (all, counts) = countWithFiles(rd.limit(100000))
+    assert(all == 400)
+    assert(counts == ((8, 8)))
     // a pushed filter declines the limit bound (raw rows ≠ matching rows)
-    GraftCsv.lastBoundPushdown.set("sentinel")
-    assert(rd.filter($"k" >= 200L).limit(60).count() == 60)
-    assert(GraftCsv.lastBoundPushdown.get().isEmpty,
+    val filtered = rd.filter($"k" >= 200L).limit(60).agg(count(lit(1)))
+    assert(filtered.collect().head.getLong(0) == 60)
+    assert(pushedBound(filtered).isEmpty,
       "limit pushdown must decline under pushed filters")
   }
 }

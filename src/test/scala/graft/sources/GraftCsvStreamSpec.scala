@@ -86,18 +86,25 @@ class GraftCsvStreamSpec extends SparkSpec {
     // 10-file backlog staged BEFORE the stream starts — the catch-up shape
     (0 until 100).map(i => (i.toLong % 4, i.toLong)).toDF("k", "v")
       .repartition(10).write.format(fmt).mode("append").save(in)
-    GraftCsv.lastStreamBatches.set(Nil)
+    assert(GraftCsv.listDataFiles(in).size == 10)
     val got = scala.collection.mutable.ArrayBuffer[Long]()
+    val dataBatches = new java.util.concurrent.atomic.AtomicInteger(0)
     val q = spark.readStream.schema(sch).format(fmt)
       .option("maxFilesPerTrigger", "3").load(in)
       .writeStream.option("checkpointLocation", ck)
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        got ++= b.select("v").as[Long].collect(); ()
+        val rows = b.select("v").as[Long].collect()
+        if (rows.nonEmpty) dataBatches.incrementAndGet()
+        got ++= rows; ()
       }.start()
-    q.processAllAvailable(); q.stop()
-    val batches = GraftCsv.lastStreamBatches.get().filter(_ > 0)
+    q.processAllAvailable()
+    val batches = GraftCsv.batchFiles(q)
+    q.stop()
     assert(batches.length >= 4, s"10 files / 3 per trigger → ≥4 batches, got $batches")
     assert(batches.forall(_ <= 3), s"a batch exceeded maxFilesPerTrigger: $batches")
+    // each batch is planned several times, yet reports one file count
+    assert(batches.length == dataBatches.get() && batches.sum == 10,
+      s"${dataBatches.get()} data micro-batches, file counts $batches")
     assert(got.sorted == (0L until 100L), "rate limiting must not lose/replay rows")
   }
 
@@ -144,23 +151,23 @@ class GraftCsvStreamSpec extends SparkSpec {
     (0 until 60).map(i => (i.toLong % 3, i.toLong)).toDF("k", "v")
       .repartition(6).write.format(fmt).mode("append").save(in)
     val sink = scala.collection.mutable.ArrayBuffer[Long]()
-    def run(): Unit = {
+    // the file count of each micro-batch the run read
+    def run(): Seq[Int] = {
       val q = spark.readStream.schema(sch).format(fmt)
         .option("maxFilesPerTrigger", "2").load(in)
         .writeStream.option("checkpointLocation", ck)
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
           sink ++= b.select("v").as[Long].collect(); ()
         }.start()
-      q.processAllAvailable(); q.stop()
+      q.processAllAvailable()
+      try GraftCsv.batchFiles(q) finally q.stop()
     }
-    GraftCsv.lastStreamBatches.set(Nil)
-    run() // drains the 6-file backlog in 3 bounded batches
-    assert(GraftCsv.lastStreamBatches.get().filter(_ > 0).forall(_ <= 2))
+    // drains the 6-file backlog in 3 bounded batches
+    assert(run().forall(_ <= 2))
     (60 until 80).map(i => (i.toLong % 3, i.toLong)).toDF("k", "v")
       .repartition(4).write.format(fmt).mode("append").save(in)
-    GraftCsv.lastStreamBatches.set(Nil)
-    run() // a fresh query on the same checkpoint reads ONLY the append
-    assert(GraftCsv.lastStreamBatches.get().filter(_ > 0).forall(_ <= 2))
+    // a fresh query on the same checkpoint reads ONLY the append
+    assert(run().forall(_ <= 2))
     assert(sink.sorted == (0L until 80L), s"restart lost or replayed rows: ${sink.size}")
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
+import graft.sources.ScanFacts._
 
 class GraftCsvV2Spec extends SparkSpec {
   import spark.implicits._
@@ -153,30 +154,33 @@ class GraftCsvV2Spec extends SparkSpec {
     val manifest = GraftCsv.readManifest(out)
     assert(manifest.size == 4 && manifest.values.forall(_.keySet == Set("k", "m")))
     // a tight range predicate must plan ONLY the file(s) containing it
-    val got = rd.filter(col("k") >= 120 && col("k") <= 130).select("k")
-      .as[Long].collect().toSet
+    val range = rd.filter(col("k") >= 120 && col("k") <= 130).select("k").as[Long]
+    val got = range.collect().toSet
     assert(got == (120L to 130L).toSet)
-    val (kept, total) = GraftCsv.lastSkipStats.get()
+    val (kept, total) = fileCounts(range)
     assert(total == 4 && kept < total, s"no skipping happened: $kept/$total")
     // equality probe: exactly one file survives planning
-    assert(rd.filter(col("k") === 7).count() == 1)
-    assert(GraftCsv.lastSkipStats.get()._1 == 1)
+    val (one, oneFiles) = countWithFiles(rd.filter(col("k") === 7))
+    assert(one == 1)
+    assert(oneFiles._1 == 1)
     // a filter matching nothing skips every file
-    assert(rd.filter(col("k") > 100000).count() == 0)
-    assert(GraftCsv.lastSkipStats.get()._1 == 0)
+    val (none, noneFiles) = countWithFiles(rd.filter(col("k") > 100000))
+    assert(none == 0)
+    assert(noneFiles._1 == 0)
     // un-skippable column (m spans every file): nothing pruned, result exact
-    assert(rd.filter(col("m") === 3).count() == 8)
-    assert(GraftCsv.lastSkipStats.get()._1 == 4)
+    val (m3, m3Files) = countWithFiles(rd.filter(col("m") === 3))
+    assert(m3 == 8)
+    assert(m3Files._1 == 4)
     // APPEND merges the manifest: new files get entries, old ones survive
     (1000 until 1100).map(i => (i.toLong, i % 50, s"n$i")).toDF("k", "m", "name")
       .coalesce(1).write.format(fmt).mode("append").save(out)
     assert(GraftCsv.readManifest(out).size == 5)
-    assert(rd.filter(col("k") >= 1000).count() == 100)
-    assert(GraftCsv.lastSkipStats.get()._1 == 1, "append file not isolated by skip")
+    val (appended, appendedFiles) = countWithFiles(rd.filter(col("k") >= 1000))
+    assert(appended == 100)
+    assert(appendedFiles._1 == 1, "append file not isolated by skip")
   }
 
   test("file skipping stays conservative: all-null columns and IsNull/IsNotNull") {
-    import graft.sources.v2.GraftCsv
     val out = java.nio.file.Files.createTempDirectory("graftcsv-skipnull").toString
     val sch = StructType(Seq(StructField("a", LongType), StructField("b", LongType)))
     // file 1: b entirely null; file 2: b fully populated
@@ -186,17 +190,13 @@ class GraftCsvV2Spec extends SparkSpec {
       .coalesce(1).write.format(fmt).mode("append").save(out)
     def rd = spark.read.schema(sch).format(fmt).load(out)
     // value predicate on b: the all-null file is provably unmatchable
-    assert(rd.filter(col("b") > 0).count() == 2)
-    assert(GraftCsv.lastSkipStats.get() == ((1, 2)))
+    assert(countWithFiles(rd.filter(col("b") > 0)) == ((2L, (1, 2))))
     // IsNull keeps only the all-null file; IsNotNull only the populated one
-    assert(rd.filter(col("b").isNull).count() == 2)
-    assert(GraftCsv.lastSkipStats.get() == ((1, 2)))
-    assert(rd.filter(col("b").isNotNull).count() == 2)
-    assert(GraftCsv.lastSkipStats.get() == ((1, 2)))
+    assert(countWithFiles(rd.filter(col("b").isNull)) == ((2L, (1, 2))))
+    assert(countWithFiles(rd.filter(col("b").isNotNull)) == ((2L, (1, 2))))
   }
 
   test("bloom skipping prunes equality probes that min/max cannot") {
-    import graft.sources.v2.GraftCsv
     val out = java.nio.file.Files.createTempDirectory("graftcsv-bloom").toString
     val sch = StructType(Seq(StructField("k", LongType), StructField("name", StringType)))
     // interleaved layout: file f holds keys ≡ f (mod 4), so every file's
@@ -211,9 +211,9 @@ class GraftCsvV2Spec extends SparkSpec {
     def rd = spark.read.schema(sch).format(fmt).load(out)
     // the equality probe prunes through the blooms to (almost) one file;
     // correctness first: exactly the right row comes back
-    assert(rd.filter(col("k") === 402L).as[(Long, String)].collect().toSeq ==
-      Seq((402L, "v402")))
-    val (kept, total) = GraftCsv.lastSkipStats.get()
+    val probe = rd.filter(col("k") === 402L).as[(Long, String)]
+    assert(probe.collect().toSeq == Seq((402L, "v402")))
+    val (kept, total) = fileCounts(probe)
     assert(total == 4 && kept < 4, s"bloom should prune: kept=$kept of $total")
     // a probe for an ABSENT key inside every range scans nothing (up to
     // Bloom false positives, which only ever keep extra files) and
@@ -236,12 +236,13 @@ class GraftCsvV2Spec extends SparkSpec {
       .toDF("id", "name", "score", "big")
     df.repartition(3).write.format(fmt).mode("overwrite").save(out)
     def rd = spark.read.schema(schema).format(fmt).load(out)
-    def aggRow = rd.agg(
+    def aggQ = rd.agg(
       count(lit(1)).as("n"), count($"score").as("n_score"),
       min($"id").as("min_id"), max($"id").as("max_id"),
-      min($"score").as("min_s"), max($"big").as("max_b")).collect().head
-    val r1 = aggRow
-    assert(GraftCsv.lastAggPushdown.get().nonEmpty, "pushdown not accepted")
+      min($"score").as("min_s"), max($"big").as("max_b"))
+    val q1 = aggQ
+    val r1 = q1.collect().head
+    assert(pushedAgg(q1).nonEmpty, "pushdown not accepted")
     assert(r1.getLong(0) == 200 && r1.getLong(1) == 180) // 20 planted nulls
     assert(r1.getInt(2) == 0 && r1.getInt(3) == 199)
     assert(r1.getDouble(4) == 1.5 && r1.getLong(5) == 597L)
@@ -257,42 +258,40 @@ class GraftCsvV2Spec extends SparkSpec {
       new java.io.File(f.getParent, s".${f.getName}.crc").delete()
     }
     assert(rd.select("id").collect().isEmpty, "files were not truncated")
-    val r2 = aggRow
+    val r2 = aggQ.collect().head
     assert(r2 == r1, s"manifest-only answer drifted: $r2 vs $r1")
   }
 
   test("aggregate pushdown declines every shape stats cannot answer exactly") {
-    import graft.sources.v2.GraftCsv
     val out = java.nio.file.Files.createTempDirectory("graftcsv-aggn").toString
     val df = (0 until 100).map(i =>
       (i, s"n$i", if (i % 10 == 0) None else Some(i * 1.5), i.toLong * 3))
       .toDF("id", "name", "score", "big")
     df.repartition(2).write.format(fmt).mode("overwrite").save(out)
     def rd = spark.read.schema(schema).format(fmt).load(out)
-    def declined[T](body: => T): T = {
-      GraftCsv.lastAggPushdown.set("sentinel")
-      val r = body
-      assert(GraftCsv.lastAggPushdown.get().isEmpty,
+    def declined(q: org.apache.spark.sql.DataFrame): Array[org.apache.spark.sql.Row] = {
+      val r = q.collect()
+      assert(pushedAgg(q).isEmpty,
         "pushdown should have been declined (scan must read data)")
       r
     }
     // a pushed filter invalidates whole-file stats
-    assert(declined(rd.filter($"id" >= 50).agg(min($"id")).collect())
+    assert(declined(rd.filter($"id" >= 50).agg(min($"id")))
       .head.getInt(0) == 50)
     // SUM has no manifest lane
-    assert(declined(rd.agg(sum($"big")).collect()).head.getLong(0) == 14850L)
+    assert(declined(rd.agg(sum($"big"))).head.getLong(0) == 14850L)
     // grouping has no manifest lane
-    assert(declined(rd.groupBy($"id" % 2).agg(max($"id")).collect()).length == 2)
+    assert(declined(rd.groupBy($"id" % 2).agg(max($"id"))).length == 2)
     // DISTINCT count cannot come from min/max/nulls
-    assert(declined(rd.agg(countDistinct($"id")).collect()).head.getLong(0) == 100)
+    assert(declined(rd.agg(countDistinct($"id"))).head.getLong(0) == 100)
     // string columns carry no stats
-    assert(declined(rd.agg(min($"name")).collect()).head.getString(0) == "n0")
+    assert(declined(rd.agg(min($"name"))).head.getString(0) == "n0")
     // one unanswerable function poisons the whole pushdown (all-or-nothing)
-    val mixed = declined(rd.agg(min($"id"), sum($"id")).collect()).head
+    val mixed = declined(rd.agg(min($"id"), sum($"id"))).head
     assert(mixed.getInt(0) == 0 && mixed.getLong(1) == 4950L)
     // a table whose manifest is gone answers from data — never wrongly skips
     new java.io.File(s"$out/_stats.csv").delete()
-    val noStats = declined(rd.agg(count(lit(1)), min($"id")).collect()).head
+    val noStats = declined(rd.agg(count(lit(1)), min($"id"))).head
     assert(noStats.getLong(0) == 100 && noStats.getInt(1) == 0)
   }
 }
