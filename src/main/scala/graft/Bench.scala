@@ -40,10 +40,23 @@ package graft
   * distinguish host noise from plan regressions WITHOUT a human
   * cross-session diff. The `queries` map itself is unchanged (same
   * statistic, same budget); on a clean session `queries_min` is empty.
+  *
+  * Each rep starts from `Harness.reset`, the one reset every query main
+  * uses (no cached frames, no temp views, no persisted RDD blocks; one
+  * forced GC per query, before rep 1). Per rep, `queries_detail` also
+  * carries the listener's job accounting: `jobs` (jobs that ran),
+  * `task_s` (task time of their stages) and `between_jobs_s` (wall time
+  * outside any job: driver planning and steering gaps). Task time
+  * exploding marks evicted-cache recompute; the gap exploding marks a
+  * driver stall. A watchdog dumps every thread's stack to stderr once
+  * when a warm rep runs past max(3x rep 1, 2 s), so a stall is caught
+  * in the act (it caught round 14's q47 stall).
   */
 object Bench {
   import java.lang.management.ManagementFactory
   import scala.jdk.CollectionConverters._
+  import org.apache.spark.ListenerBusAccess
+  import Harness.fmt
 
   private def gcMs: Long =
     ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
@@ -57,54 +70,27 @@ object Bench {
   private def loadAvg: Double =
     ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
 
-  private def fmt(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val selected = Harness.select()
     val spark = GraftSession.get("graft-bench")
     // Warm the session (JVM + codegen + FS + parquet footers) outside any
     // query's timing — otherwise the alphabetically-first query absorbs
     // several seconds of reader initialization.
-    spark.range(1).count()
+    Harness.warm(spark)
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").schema
       catch { case _: Throwable => }
     }
-    // Local perf-iteration aids: SPARK_GRAFT_ONLY restricts to a
-    // comma-separated query subset; SPARK_GRAFT_REPS (default 2) runs each
+    // Local perf-iteration aid: SPARK_GRAFT_REPS (default 2) runs each
     // query that many times (first rep warms codegen, LAST rep is the
     // recorded time — warm-vs-warm comparisons only; set REPS=1 for a
     // cold-including number).
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val reps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(2)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    // Session-state reset between queries (round-6 verdict: gate queries
-    // and operators cache DataFrames; 144 queries in one JVM with no
-    // clearCache let those accumulate until late-alphabet queries paid
-    // up to 17x — q93 41 s in-session vs 2.3 s isolated). Each query is
-    // timed from the same clean state ScaleBench uses: no cached
-    // partitions, no leftover temp views.
-    def resetSession(gc: Boolean): Unit = {
-      spark.catalog.clearCache()
-      spark.sqlContext.tableNames().foreach { t =>
-        try spark.catalog.dropTempView(t) catch { case _: Throwable => }
-      }
-      // localCheckpoint blocks (the iterative operators' lineage cuts)
-      // are reclaimed by ContextCleaner only when a JVM GC runs — left
-      // to chance, checkpoint storage from q71/q74/q112-style queries
-      // accumulates across the session and shows up as multi-second
-      // variance on later iterative queries. Forcing a GC makes the
-      // reclaim deterministic per QUERY boundary; between the reps of
-      // ONE query a second forced full GC buys nothing (the rep leaves
-      // only its own checkpoint blocks) and at 250 queries the extra
-      // 250 GCs cost the session minutes of pure pause time.
-      if (gc) System.gc()
-    }
-    case class Rep(wall: Double, gcDeltaMs: Long, cpuDeltaMs: Option[Long])
+    case class Rep(wall: Double, gcDeltaMs: Long, cpuDeltaMs: Option[Long],
+      jobs: Long, betweenJobsS: Double, taskS: Double)
     // Streaming gates pay a state-store open/commit cycle whose wall time
     // is CONTENTION-SENSITIVE (round-11: q218 read 23.1 s in the driver's
     // capture vs 3.8-4.1 s in two back-to-back committed sessions on the
@@ -174,42 +160,6 @@ object Bench {
       t.setDaemon(true)
       t.start()
     }
-    // SPARK_GRAFT_MEMLOG=1: per-rep block-manager/heap snapshot to stderr —
-    // diagnosing late-session interference (cache-heavy queries running 3-8x
-    // slower in a 363-query session than isolated, with the CPU-time blow-up
-    // that marks evicted-cache recomputation). Pure diagnostics, off by
-    // default, never touches stdout.
-    val memlogOn = sys.env.contains("SPARK_GRAFT_MEMLOG")
-    def memlog(tag: String): Unit = if (memlogOn) {
-      val sc = spark.sparkContext
-      val (maxMem, remMem) = sc.getExecutorMemoryStatus.values.foldLeft((0L, 0L)) {
-        case ((a, b), (m, r)) => (a + m, b + r)
-      }
-      val rdds = sc.getRDDStorageInfo
-      val rt = Runtime.getRuntime
-      val providers = try {
-        val cls = Class.forName(
-          "org.apache.spark.sql.execution.streaming.state.StateStore$")
-        val mod = cls.getField("MODULE$").get(null)
-        val f = cls.getDeclaredFields.find(_.getName.contains("loadedProviders"))
-        f.map { fl => fl.setAccessible(true)
-          fl.get(mod) match {
-            case m: scala.collection.mutable.Map[_, _] => m.size.toString
-            case m: java.util.Map[_, _] => m.size.toString
-            case _ => "?"
-          }
-        }.getOrElse("?")
-      } catch { case _: Throwable => "?" }
-      val pools = ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(p => p.getName.contains("CodeHeap") || p.getName.contains("Metaspace"))
-        .map(p => s"${p.getName.replace("CodeHeap '", "").replace("'", "").replace(" ", "")}=" +
-          s"${p.getUsage.getUsed / (1 << 20)}/${p.getUsage.getMax / (1 << 20)}MB")
-        .mkString(" ")
-      System.err.println(f"[memlog] $tag $pools heapUsed=${(rt.totalMemory - rt.freeMemory) / (1 << 20)}%dMB " +
-        f"heapComm=${rt.totalMemory / (1 << 20)}%dMB storageUsed=${(maxMem - remMem) / (1 << 20)}%dMB " +
-        f"rddBlocks=${rdds.map(_.numCachedPartitions).sum}%d rddMem=${rdds.map(_.memSize).sum / (1 << 20)}%dMB " +
-        f"rddDisk=${rdds.map(_.diskSize).sum / (1 << 20)}%dMB nRdds=${rdds.length}%d stateProviders=$providers")
-    }
     def drainSamples(name: String): Unit = if (samplerOn) {
       import scala.jdk.CollectionConverters._
       val top = sampleCounts.asScala.toSeq.map { case (k, v) => (k, v.sum) }
@@ -218,70 +168,50 @@ object Bench {
       System.err.println(s"[sampler] $name " +
         top.map { case (k, v) => s"$k=$v" }.mkString(" "))
     }
-    // SPARK_GRAFT_JOBLOG=1: per-rep job/stage accounting — how much of a
-    // rep's wall time sat BETWEEN jobs (driver/steering gaps) vs inside
-    // stages (task compute), and the largest single gap. Separates the
-    // "evicted-cache recompute" blow-up signature (task time explodes)
-    // from the "driver stall" one (gap explodes). Diagnostics only.
-    val joblogOn = sys.env.contains("SPARK_GRAFT_JOBLOG")
-    case class JobSpan(id: Int, t0: Long, var t1: Long)
-    val jobSpans = new java.util.concurrent.ConcurrentHashMap[Int, JobSpan]()
-    val taskMs = new java.util.concurrent.atomic.LongAdder
-    if (joblogOn) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobSpans.put(js.jobId, JobSpan(js.jobId, System.nanoTime(), -1L))
-        override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val s = jobSpans.get(je.jobId); if (s != null) s.t1 = System.nanoTime()
-        }
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          taskMs.add(sc.stageInfo.taskMetrics.executorRunTime)
-      })
-    def drainJoblog(tag: String, repWallS: Double): Unit = if (joblogOn) {
-      import scala.jdk.CollectionConverters._
-      val spans = jobSpans.values.asScala.toSeq.filter(_.t1 > 0).sortBy(_.t0)
-      jobSpans.clear()
-      val jobsS = spans.map(s => (s.t1 - s.t0) / 1e9).sum
-      var gapMax = 0.0
-      spans.sliding(2).foreach {
-        case Seq(a, b) => gapMax = math.max(gapMax, (b.t0 - a.t1) / 1e9)
-        case _ =>
-      }
-      val t = taskMs.sumThenReset() / 1e3
-      System.err.println(f"[joblog] $tag wall=$repWallS%.2f nJobs=${spans.size}%d " +
-        f"jobsWall=$jobsS%.2f betweenJobs=${math.max(0, repWallS - jobsS)}%.2f " +
-        f"maxGap=$gapMax%.2f taskSec=$t%.1f")
-    }
-    // SPARK_GRAFT_WATCHDOG=1: when a warm rep runs 3x past the query's
-    // first rep, dump every thread's state + stack ONCE to stderr — the
-    // roving late-session blow-ups (one rep 3-20x slower with the same
-    // plan) need the stall caught in the act, and the RUNNABLE-only
-    // sampler cannot see waits. Diagnostics only.
-    val watchdogOn = sys.env.contains("SPARK_GRAFT_WATCHDOG")
+    // Per-rep job accounting (see scaladoc). The bus is drained around
+    // each rep, so every event of a rep's jobs lands in that rep. A bus
+    // still busy after the drain's 10 s wait costs the accounting some
+    // precision, never the session.
+    val sc = spark.sparkContext
+    def drainBus(): Unit =
+      try ListenerBusAccess.drain(sc) catch { case _: java.util.concurrent.TimeoutException => }
+    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
+    val jobs, jobMs, taskMs = new java.util.concurrent.atomic.LongAdder
+    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobStart.put(e.jobId, e.time)
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        Option(jobStart.remove(e.jobId)).foreach { t0 => jobs.increment(); jobMs.add(e.time - t0) }
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        taskMs.add(e.stageInfo.taskMetrics.executorRunTime)
+    })
+    // Watchdog: when a warm rep runs 3x past the query's first rep, dump
+    // every thread's state + stack ONCE to stderr — the roving
+    // late-session blow-ups (one rep 3-20x slower with the same plan)
+    // need the stall caught in the act, and the RUNNABLE-only sampler
+    // cannot see waits.
     @volatile var wdDeadline = Long.MaxValue
     @volatile var wdTag = ""
     @volatile var wdFired = false
-    if (watchdogOn) {
-      val t = new Thread(() => {
-        while (true) {
-          if (!wdFired && System.nanoTime() > wdDeadline) {
-            wdFired = true
-            val sb = new StringBuilder(s"[watchdog] STALL $wdTag\n")
-            Thread.getAllStackTraces.forEach { (th, frames) =>
-              if (frames.nonEmpty) {
-                sb.append(s"[watchdog]  ${th.getName} ${th.getState}\n")
-                frames.take(14).foreach(f => sb.append(s"[watchdog]    $f\n"))
-              }
+    val wd = new Thread(() => {
+      while (true) {
+        if (!wdFired && System.nanoTime() > wdDeadline) {
+          wdFired = true
+          val sb = new StringBuilder(s"[watchdog] STALL $wdTag\n")
+          Thread.getAllStackTraces.forEach { (th, frames) =>
+            if (frames.nonEmpty) {
+              sb.append(s"[watchdog]  ${th.getName} ${th.getState}\n")
+              frames.take(14).foreach(f => sb.append(s"[watchdog]    $f\n"))
             }
-            System.err.print(sb.result())
           }
-          Thread.sleep(500)
+          System.err.print(sb.result())
         }
-      }, "graft-watchdog")
-      t.setDaemon(true)
-      t.start()
-    }
+        Thread.sleep(500)
+      }
+    }, "graft-watchdog")
+    wd.setDaemon(true)
+    wd.start()
     val health0 = (loadAvg, gcMs, cpuMs)
     val wall0 = System.nanoTime()
     val results = selected.map { case (name, fn) =>
@@ -289,22 +219,23 @@ object Bench {
       val nReps = if (isStream(name)) math.max(reps, 4) else reps
       var rep1Wall = 0.0
       val repRows = (1 to nReps).map { r =>
-        resetSession(gc = r == 1)
+        Harness.reset(spark, newQuery = r == 1)
+        drainBus()
+        jobStart.clear(); Seq(jobs, jobMs, taskMs).foreach(_.reset())
         val (g0, c0, t0) = (gcMs, cpuMs, System.nanoTime())
-        if (watchdogOn && r > 1 && rep1Wall > 0) {
+        if (r > 1 && rep1Wall > 0) {
           wdTag = s"$name rep$r (rep1=${fmt(rep1Wall)}s)"
           wdFired = false
           wdDeadline = t0 + (math.max(3 * rep1Wall, 2.0) * 1e9).toLong
         } else wdDeadline = Long.MaxValue
-        val e = try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
-          catch { case e: Throwable => Some(e.toString.takeWhile(_ != '\n').take(160)) }
-        if (e.isDefined) err = e
+        val run = Harness.timed(fn(spark, sfDir))
         wdDeadline = Long.MaxValue
-        if (r == 1) rep1Wall = (System.nanoTime() - t0) / 1e9
-        memlog(s"$name rep$r")
-        drainJoblog(s"$name rep$r", (System.nanoTime() - t0) / 1e9)
-        Rep((System.nanoTime() - t0) / 1e9, gcMs - g0,
-          for (c1 <- cpuMs; c <- c0) yield c1 - c)
+        val wall = run.getOrElse((System.nanoTime() - t0) / 1e9)
+        run.left.foreach(e => err = Some(e))
+        if (r == 1) rep1Wall = wall
+        drainBus()
+        Rep(wall, gcMs - g0, for (c1 <- cpuMs; c <- c0) yield c1 - c,
+          jobs.sum, math.max(0, wall - jobMs.sum / 1e3), taskMs.sum / 1e3)
       }
       val res = QRes(name, repRows, err)
       // stderr progress (stdout carries ONLY the two JSON lines — the
@@ -318,8 +249,6 @@ object Bench {
     val health1 = (loadAvg, gcMs, cpuMs)
     val sessionWall = (System.nanoTime() - wall0) / 1e9
     val qs = results.map { q =>
-      // Locale.ROOT: the default locale could print a comma decimal
-      // separator and corrupt the JSON line
       "\"" + q.name + "\":" + (if (q.err.isDefined) "-1" else fmt(q.recorded))
     }.mkString("{", ",", "}")
     val errors = results.collect { case q if q.err.isDefined => s""""${q.name}"""" }
@@ -389,12 +318,15 @@ object Bench {
       val gs = q.reps.map(_.gcDeltaMs).mkString("[", ",", "]")
       // unavailable CPU data is an explicit JSON null, never a sentinel
       val cs = q.reps.map(_.cpuDeltaMs.map(_.toString).getOrElse("null")).mkString("[", ",", "]")
-      s""""${q.name}":{"min":${if (q.err.isDefined) "-1" else fmt(q.min)},"spread":${fmt(q.spread)},"noisy":${q.noisy},"reps":$rs,"gc_ms":$gs,"cpu_ms":$cs}"""
+      val js = q.reps.map(_.jobs).mkString("[", ",", "]")
+      val bs = q.reps.map(r => fmt(r.betweenJobsS)).mkString("[", ",", "]")
+      val ts = q.reps.map(r => fmt(r.taskS)).mkString("[", ",", "]")
+      s""""${q.name}":{"min":${if (q.err.isDefined) "-1" else fmt(q.min)},"spread":${fmt(q.spread)},"noisy":${q.noisy},"reps":$rs,"gc_ms":$gs,"cpu_ms":$cs,"jobs":$js,"between_jobs_s":$bs,"task_s":$ts}"""
     }.mkString("{", ",", "}")
     def healthJson(h: (Double, Long, Option[Long])): String =
       s"""{"loadavg_1m":${fmt(h._1)},"gc_ms_cum":${h._2},"proc_cpu_s_cum":${h._3.map(c => fmt(c / 1000.0)).getOrElse("null")}}"""
     val full =
-      s"""{"harness":"graft.Bench","reps":$reps,"timed_rep":"last (streaming gates: min of ${math.max(reps, 4) - 1} warm reps — state-store open cost is contention-sensitive)","state_reset":"clearCache+dropTempViews per rep; System.gc per query","n_queries":${results.size},""" +
+      s"""{"harness":"graft.Bench","reps":$reps,"timed_rep":"last (streaming gates: min of ${math.max(reps, 4) - 1} warm reps — state-store open cost is contention-sensitive)","state_reset":"Harness.reset per rep: cache cleared, temp views dropped, persisted RDDs unpersisted (blocking); System.gc per query","n_queries":${results.size},""" +
         s""""session_health":{"start":${healthJson(health0)},"end":${healthJson(health1)},"session_wall_s":${fmt(sessionWall)}},""" +
         s""""queries_detail":$detail,""" +
         line.drop(1)

@@ -204,9 +204,10 @@ object Plans {
         "join provably a no-op, so the optimizer removed it outright."),
     "q238_dsv2_skipping" ->
       ("DSv2 file skipping: the scan's PushedFilters carry the key range " +
-        "and partition planning consulted the _stats.csv manifest — at " +
-        "gate scale 2 of 8 range-clustered files survive planning (the " +
-        "in-query require pins it); the plan itself shows the pushed " +
+        "and partition planning consulted the _stats.csv manifest. The " +
+        "range is the second eighth of the table's key span, so 1 or 2 " +
+        "of 8 range-clustered files survive planning at every scale (the " +
+        "in-query require pins 0 < kept < 8); the plan itself shows the pushed " +
         "predicates on the custom GraftCsvScan."),
     "q264_tpch_q17_shape" ->
       ("TPC-H Q17's correlated-scalar-aggregate shape, decorrelated: each " +

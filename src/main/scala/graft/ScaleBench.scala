@@ -4,10 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-proof harness: materializes a k× copy of an sf directory and times
-  * the headline scale-sensitive queries on BOTH the source and the scaled
-  * data, printing per-query seconds and the scaling ratio — converting the
-  * "would this hold at 10×?" design arguments into measurements when no
-  * larger driver-side sf exists.
+  * every gate query (`Harness.select`, in name order) on BOTH the source
+  * and the scaled data, printing per-query seconds and the scaling
+  * ratio — converting the "would this hold at 10×?" design arguments
+  * into measurements when no larger driver-side sf exists.
   *
   * Scaling is union-of-key-offset copies, preserving the invariants the
   * engine derives from (SURVEY §1.1 / Derive.scala):
@@ -29,385 +29,19 @@ import org.apache.spark.sql.functions._
   * line: {"metric":"scale","k":10,"queries":{q:{"base":s,"scaled":s}},...}.
   */
 object ScaleBench {
+  import Harness.fmt
 
-  /** The scale-sensitive headline subset (round-2 verdict item 8): scans,
-    * broadcast joins, the snap bucket join, the per-tile and Pregel reach,
-    * LSH dedup, fingerprinting, ANN brute scan — plus the curation family
-    * (repetition explode-aggregation, PII regex scan, k-means training,
-    * decontamination shingle join). */
-  val ScaleQueries: Seq[String] = Seq(
-    "q01_pricing_summary", "q03_revenue_by_nation", "q21_sym_dedup",
-    "q23_snap", "q26_dijkstra_reach", "q27_multi_tile_reach",
-    "q31_minhash_lsh", "q37_fingerprint", "q40_cosine_topk",
-    "q45_reach_pregel", "q56_repetition", "q58_pii_scrub",
-    "q60_kmeans", "q62_decontaminate",
-    // event-stream family (as-of join, gap sessions, funnel) and the
-    // round-5 additions (SemDeDup, components, exact Jaccard, shard
-    // shuffle) — each a distinct shuffle/join geometry
-    "q64_asof_join", "q65_sessionize", "q69_funnel",
-    "q70_semdedup", "q71_components", "q72_jaccard_allpairs",
-    "q73_shuffle_shard",
-    // round-6 additions: CDC/SCD2 windows, bigram-LM count joins, the
-    // containment posting join, Bloom decontamination, packing cumsums
-    "q77_cdc_snapshot", "q78_scd2", "q79_bigram_lm", "q80_containment",
-    "q81_bloom_decontaminate", "q86_pack_offsets",
-    // continuing round 6: the native top-k aggregate (map-side bounded
-    // partials), Lee-et-al span masking (positional-gram joins), BPE
-    // (vocabulary-bound rounds — should be ~flat in corpus size), the
-    // MERGE upsert, the rewritten range join, and triangle wedges.
-    // (q98_heavy_hitters sat out this batch while its absolute minFreq
-    // made the 10× precondition fail loudly by design — it rejoins in
-    // the round-7 block below with the N-relative threshold)
-    "q92_native_topk", "q93_dup_span_mask", "q97_bpe_merges",
-    "q100_merge_upsert", "q103_range_join_rule", "q104_triangles",
-    // later round-6 additions: BM25 retrieval (filtered tf + broadcast
-    // stats), k-core peeling (degree shuffles × erosion rounds),
-    // prefix-filtered containment (the q80 contrast pair — measures the
-    // PPJoin prune's scaling win on the same oracle answer), PQ ANN
-    // (4 Lloyd trainings + code/ADC map passes), char entropy (explode +
-    // two partial aggs), interval-overlap join, cohort retention, and the
-    // integer z-score scan
-    "q110_char_entropy", "q111_bm25", "q112_kcore",
-    "q113_containment_prefix", "q115_interval_overlap", "q116_pq_ann",
-    "q117_cohort_retention", "q119_zscore_outliers",
-    // the deep-join geometry: 7 tables, mixed broadcast + shuffled fact
-    // joins — the classic optimizer scaling case
-    "q126_market_share",
-    // round-7 additions (round-6 verdict "Missing" #3): the next-slowest
-    // bench entries without a 10× row — MinHash calibration (signature
-    // generation + paired verify), POI tag extraction (union-by-name
-    // category scan), the point query (snap + radius + k-NN fallback) —
-    // plus one representative per q13x/q14x family: time-weighted avg
-    // (interval lag windows), hopping windows (double window explosion),
-    // SCD2 point-in-time lookup (interval containment join), conditional
-    // aggregates, and the forward as-of join (time-reversed backward
-    // machinery). q98 REJOINS the harness: its threshold is now
-    // N-relative (3/4000 of input count, exact integer ceil), so the
-    // no-false-negative precondition minFreq·capacity ≥ N survives
-    // growth by construction instead of failing loudly at 10×.
-    "q24_poi_extract", "q38_point_query", "q91_minhash_estimate",
-    "q98_heavy_hitters", "q133_time_weighted_avg", "q135_hopping_window",
-    "q140_scd2_lookup", "q143_conditional_aggs", "q145_asof_forward",
-    // later round-7 additions: line-level dedup (explode + first-
-    // occurrence windows), pointer jumping (the log-depth claim needs a
-    // measured depth increase: 10× docs ≈ 10× forest depth ≈ +3-4
-    // doubling rounds, so the ratio should sit well under 10× wall),
-    // int8 quantization (pure per-row array math — should be ~flat),
-    // skyline (distinct-coordinate window after collapse), Merkle table
-    // diff (two checksum scans + a pruned re-read), the graft_top_k
-    // stratified sampler, gaps-and-islands coalescing (per-group shared
-    // windows), and MAD outliers (two exact-median passes + broadcasts)
-    "q148_line_dedup", "q149_pointer_jumping", "q151_int8_quant",
-    "q153_skyline", "q155_table_diff", "q156_group_priority_sample",
-    "q157_interval_coalesce", "q158_mad_outliers",
-    // Markov transitions (one per-user window + |types|² agg), quantile
-    // normalization (global order statistics via reduced-domain cumsum +
-    // bucket range join — the no-global-sort claim needs a number), and
-    // RRF fusion (BM25 candidates + entropy re-rank of 20 docs)
-    "q159_markov_transitions", "q160_quantile_normalize", "q161_rrf_fusion",
-    // market-basket pair join (fan-out bounded by basket size, never
-    // vocabulary), clustering coefficient (the q104 wedge join + one
-    // degree aggregate), and path trigrams (two leads, one shuffle)
-    "q162_copurchase", "q163_clustering_coeff", "q164_path_trigrams",
-    // ANN recall eval (two rankings joined on (qid, vec_id) — corpus
-    // cost is the two retrievals), rate change (reduced-domain lag),
-    // centroid drift (posexplode + two dim-keyed aggregates)
-    "q165_ann_recall", "q166_rate_change", "q167_centroid_drift",
-    // mixture planning + dataset card (source-keyed aggregates) and
-    // pairwise centroid cosines (dim-keyed sums, |groups|² pair join)
-    "q168_mixture_rates", "q169_dataset_card", "q170_centroid_cos",
-    // change-feed extraction (full-outer key join of two snapshots), OLS
-    // trend (one map-side-combined agg to |groups|), gap fill (per-key
-    // spine explode + IGNORE NULLS carries), CUSUM (one per-key window
-    // sort shared by sum+min), RFM (reduced per-user table, then
-    // unpartitioned ntiles over |keys| rows — the q13 exception, and 10×
-    // users makes |keys| itself grow 10×, so this row tests it), and the
-    // equi-depth histogram (reduced-domain cumsum + bucket range join —
-    // the second no-global-sort order-statistics claim needing a number)
-    "q171_change_feed", "q172_ols_trend", "q173_gap_fill",
-    "q174_cusum", "q175_rfm", "q176_equidepth_hist",
-    // A/B report (one conditional-sum agg to |types| rows), PMI
-    // collocations (two corpus counts + broadcast joins; the bigram
-    // domain, not the corpus, bounds the join), EWMA (per-key sorted
-    // fold — per-user history depth is scale-invariant here, so the 10×
-    // cost is 10× keys), and power iteration (3× (map dot + dim-keyed
-    // gather) over 10× vectors — should scale with the scan)
-    "q177_ab_report", "q178_pmi_colloc", "q179_ewma",
-    "q180_power_iteration",
-    // entity resolution: blocked fuzzy candidates + component closure +
-    // golden-record agg — candidate volume is bounded by the name
-    // vocabulary (which the 10× doc rewrite does NOT grow), so the cost
-    // should track the two part-table scans
-    "q181_entity_resolution",
-    // seasonal profile (two scans, |types|·7 broadcast) and count-min
-    // (fixed d·w grid shuffle — the domain-independent-shuffle claim
-    // needs a number; the exact-count calibration side grows with keys)
-    "q182_seasonal", "q183_countmin",
-    // synchronous LPA: 3 × (edge-label join + vote count + per-node
-    // top-1 window), all node-partitioned — should track edge growth
-    "q184_label_prop",
-    // calibration bins (reduced-domain cumulative, the third
-    // order-statistics consumer) and the quarantine rule battery
-    // (pure map-side projection — should be ~flat)
-    "q185_calibration", "q186_quarantine",
-    // split-overlap contamination: shingle explode + semi-join against
-    // the distinct train-gram set — the q62 join geometry at report
-    // granularity
-    "q187_split_overlap",
-    // vocab drift: one token count to the |vocabulary| domain, chi²
-    // arithmetic on that reduced domain only
-    "q188_vocab_drift",
-    // rollup cascade (two map-side-combined aggregations, the second
-    // over the tiny hour domain) and the dataset fingerprint (pure scan
-    // + one keyless XOR fold — should track the scan)
-    "q189_rollup_cascade", "q190_dataset_fingerprint",
-    // ---- round-8 block: FULL gate coverage (round-7 verdict #2). "Sub-
-    // second at sf0.1" was an assumption for ~100 queries, and q178's 10×
-    // surprise came from exactly such a query; every gate row now gets a
-    // measured ratio (or an explicit waiver in SCALECHECK.md).
-    // Relational basics: scans, projections, semi/anti joins, windows,
-    // distinct unions — the Catalyst-default shapes
-    "q02_filter_project", "q04_semi_join", "q05_anti_join",
-    "q06_window_topk", "q07_running_sum", "q08_union_distinct",
-    "q09_rekey", "q10_walkability", "q11_reciprocity", "q12_degree_stats",
-    "q13_weight_sanity", "q14_geo_distances", "q15_mercator",
-    "q16_sanitize", "q17_reach_summary", "q18_path", "q19_coercion",
-    "q20_nodes", "q22_degrees", "q25_grid", "q28_assign_tiles",
-    // corpus/text family without a row yet: exact dedup, simhash, stats,
-    // langid, quality, tokens, cleaning pipeline, TF-IDF, URL dedup,
-    // length report, vocab report, quality gate, intake, chunking,
-    // stratified sample, domain cap, priority sample
-    "q30_exact_dedup", "q32_simhash", "q33_text_stats", "q34_langid",
-    "q35_quality", "q36_tokens", "q47_corpus_clean", "q57_stratified_sample",
-    "q59_domain_cap", "q61_doc_intake", "q63_chunking", "q75_quality_gate",
-    "q76_tfidf", "q82_url_dedup", "q83_length_report", "q85_vocab_report",
-    "q150_priority_sample",
-    // similarity family: IVF ANN, embedding LSH near-dup
-    "q41_ann_ivf", "q42_embed_neardup",
-    // geo/graph remainder: bbox crop, counts, accuracy, head limit,
-    // nodes-near, WKT centroids, valid endpoints, pagerank
-    "q39_accuracy", "q43_bbox_crop", "q44_counts_by_type", "q46_head_limit",
-    "q53_valid_endpoints", "q54_nodes_near", "q55_wkt_centroid",
-    "q74_pagerank",
-    // sources/sinks: every round-trip (write cost scales with data),
-    // DSv2 scan + write, schema evolution, compaction, Z-order
-    "q48_csv_roundtrip", "q49_json_roundtrip", "q50_text_roundtrip",
-    "q51_jdbc_roundtrip", "q52_validated_source", "q84_dsv2_scan",
-    "q108_orc_roundtrip", "q118_schema_evolution", "q124_dsv2_write",
-    "q125_compaction", "q99_zorder_scan",
-    // event-family remainder: time rollup, rolling window, JSON props,
-    // CDC-feed queries, funnel3, winsorized/median/share, calendar
-    "q66_time_rollup", "q67_rolling_window", "q68_json_props",
-    "q132_funnel3", "q134_winsorized_mean", "q131_median",
-    "q142_week_rollup", "q144_share_rank", "q152_calendar",
-    // SQL-surface suites: window breadth, subqueries, set ops, cube,
-    // grouping sets, lateral, unpivot, ignore-nulls, null-safe join,
-    // variant, windowed distinct, HOF surface, regex extraction,
-    // constraint audit, nested round-trip, conditional aggs are covered;
-    // group-by-all and try_* close the family
-    "q101_window_suite", "q102_fuzzy_names", "q105_subqueries",
-    "q106_set_ops", "q107_cube", "q109_quantile_sketch", "q114_lateral",
-    "q120_incremental_join", "q121_grouping_sets", "q122_unpivot",
-    "q123_ignore_nulls", "q127_null_safe_join", "q129_variant",
-    "q130_windowed_distinct", "q136_hof_surface", "q137_approx_topk",
-    "q138_regex_extract", "q139_constraint_audit", "q141_nested_roundtrip",
-    "q191_group_by_all", "q192_try_surface",
-    // sketches + aggregates: distinct sketch, salted join, range join,
-    // profiler, rollup/pivot, incremental agg, BPE encode, histogram
-    "q87_distinct_sketch", "q88_salted_join", "q89_range_join",
-    "q90_profile", "q94_rollup", "q95_pivot", "q96_incremental_agg",
-    "q128_bpe_encode", "q154_histogram",
-    // media decode: synthesized PNG/WAV batches decoded via JDK codecs —
-    // decode cost is per-byte, should track the batch row count
-    "q146_imageio_decode", "q147_wav_decode",
-    // round-8 gate additions: the k∝n SemDeDup production configuration
-    // (k grows 10×, within-cluster quadratic stays ≈125·n) and the two
-    // streaming-fed gates (file-source micro-batches + MERGE sink; the
-    // staging row_number window is simulated-arrival cost, counted
-    // honestly in the ratio)
-    "q193_semdedup_prod", "q194_stream_windows", "q195_stream_sessions",
-    // XML round-trip (write cost scales with data), the recursive-CTE
-    // BFS (UnionLoop: per-level joins against the seed frontier), ordered
-    // LISTAGG, and the mergeable-HLL re-aggregability gate
-    "q196_xml_roundtrip", "q197_recursive_cte", "q198_listagg",
-    "q199_hll_merge",
-    // SNM candidates (O(N·w) leads vs q102's blocked self-join), winnowing
-    // (pure per-row HOFs — should track the scan), KS + Gini (reduced-
-    // domain order statistics), bitmap exact-distinct partials, and the
-    // streaming CDC gate (micro-batch arrival simulation included in the
-    // measured cost, like q194/q195)
-    "q200_snm_names", "q201_winnow", "q202_ks_test", "q203_gini_sources",
-    "q204_bitmap_distinct", "q205_stream_cdc",
-    // tokenizer fertility (vocabulary-bound encode + per-lang aggregate),
-    // map/array surface reports, and the transformWithState streaming gate
-    "q206_tokenizer_fertility", "q207_map_surface", "q208_array_setops",
-    "q209_stream_heavy",
-    // collation grouping (a lower()-class scan agg), near-dup cluster
-    // canonicalization (the q71 component machinery + one golden-record
-    // agg), ROUGE-2 counted-gram join, JSD drift (vocabulary-domain
-    // arithmetic), and the bucketed co-located join (write cost scales
-    // with data; the join itself is exchange-free by bucket layout)
-    "q210_collation", "q211_neardup_canon", "q212_rouge_overlap",
-    "q213_jsd_drift", "q214_bucketed_join", "q215_partition_prune",
-    // stream-stream interval join gate (arrival simulation counted
-    // honestly in the ratio, like q194/q195) and the BPE round-trip
-    // invariant (vocabulary-bound, like q97/q128)
-    "q216_stream_join", "q217_bpe_roundtrip",
-    // streaming dedup (arrival simulation in the ratio), the 64- vs
-    // 32-dim retrieval ablation (two brute rankings over 10x vectors),
-    // and the image dHash near-dup (decode + hash per asset is map-side;
-    // the block join grows with the planted duplicate volume)
-    "q218_stream_dedup", "q219_mrl_ablation", "q220_image_dhash",
-    "q221_video_frames", "q222_nfc_normalize", "q223_jaro_winkler",
-    "q224_ivfpq_ann", "q225_blocklist", "q226_semantic_decontam",
-    "q227_hilbert_scan", "q228_mv_rewrite", "q229_tpch_q21_shape",
-    "q230_tpch_q13_shape", "q231_multi_touch", "q232_median_impute",
-    "q233_k_anonymity", "q234_dynamic_pivot", "q235_join_elim",
-    "q236_mmr_rerank", "q237_mv_incremental", "q238_dsv2_skipping", "q239_stream_mv", "q240_edit_join", "q241_m4_downsample", "q242_binary_rerank",
-    "q243_pseudonymize", "q244_incremental_dedup", "q245_damerau",
-    "q246_cuped", "q247_srm", "q248_lsh_recall", "q249_accent_fold",
-    "q250_streaks", "q251_churn_labels",
-    // fourth continuation batch: Kaplan–Meier (per-user agg + reduced-
-    // domain fold), Benford (one digit histogram), apportionment (cell-
-    // domain windows), assortativity (degree joins + keyless agg),
-    // lag-1..3 autocorrelation (one per-series window + two passes),
-    // and 3-round HITS (6 gather joins + 6 scalar renorms)
-    "q252_kaplan_meier", "q253_benford", "q254_apportion",
-    "q255_assortativity", "q256_autocorr", "q257_hits",
-    // fifth continuation batch: Mann-Whitney (reduced value domain),
-    // IPF raking (cell-domain windows), phrase search (positional
-    // posting joins), weighted median (per-group reduced domain),
-    // Good-Turing (distinct-frequency domain), time-RANGE frames
-    // (per-user value-based window)
-    "q258_mann_whitney", "q259_ipf_rake", "q260_phrase_search",
-    "q261_weighted_median", "q262_good_turing", "q263_range_frame",
-    // sixth continuation batch: the Q17 double-correlated-scalar
-    // decorrelation shape, k-center seeding (4 broadcast-seed scans),
-    // and binary-segmentation change-point argmax (one per-series window)
-    "q264_tpch_q17_shape", "q265_kcenter_seeds", "q266_binary_segmentation",
-    // seventh continuation batch: Kendall tau (cell-domain pair join),
-    // stratified split assignment (per-stratum hash windows), WordPiece
-    // encode (vocabulary-bound HOF fold — should be ~flat like BPE)
-    "q267_kendall_tau", "q268_stratified_split", "q269_wordpiece",
-    // eighth continuation batch: uplift/ROC/DiD evaluation (reduced-
-    // domain cumulative bins; the DiD median cut is one domain window),
-    // LSH precision (band join + exact verify), community modularity
-    // (label-prop rounds + two label joins)
-    "q270_qini", "q271_roc_curve", "q272_did",
-    "q273_lsh_precision", "q274_modularity",
-    // ninth continuation batch: the Q20 three-level decorrelation shape,
-    // bloom file skipping (write + 3 planned point reads), Theil-Sen
-    // (calendar-pair domain joins + reduced-domain medians)
-    "q275_tpch_q20_shape", "q276_bloom_skip", "q277_theil_sen",
-    // the approx-distinct rewrite: sketch agg vs the exact Expand
-    "q278_approx_distinct_rule", "q279_spearman", "q280_silhouette",
-    "q281_holt_trend", "q282_l_diversity", "q283_ndcg", "q284_corr_matrix",
-    "q285_holt_backtest", "q286_chi2_indep", "q287_textrank",
-    "q288_dbscan_grid", "q289_interarrival", "q290_naive_bayes",
-    "q291_isotonic", "q292_conversion_latency", "q293_jl_distortion",
-    "q294_pretokenize", "q295_radius_pushdown", "q296_tpch_q22_shape",
-    "q297_tpch_q15_shape", "q298_moving_median", "q299_feature_hashing",
-    "q300_lm_perplexity", "q301_covariate_balance", "q302_abc_pareto",
-    "q303_simpson_audit", "q304_skipgram_pmi", "q305_named_window",
-    "q306_decimal_q1", "q307_null_surface", "q308_cohort_ltv",
-    // round 9: the deep-BPE kernel, the two kill-and-resume streaming
-    // gates, and the TPC-H Q2/Q4/Q11/Q18 decorrelation shapes.
-    // (PlanContractSpec pins ScaleQueries == SparkEntry.queries.keySet, so
-    // a new gate query cannot skip the comparable 10× session again —
-    // the round-8 q308 lesson, institutionalized.)
-    "q309_bpe_deep", "q310_stream_recovery", "q311_stream_mv_recovery",
-    "q312_tpch_q2_shape", "q313_tpch_q4_shape", "q314_tpch_q11_shape",
-    "q315_tpch_q18_shape", "q316_bpe_deep_roundtrip",
-    "q317_tpch_q16_shape", "q318_tpch_q19_shape",
-    // round 10: the TPC-H shape suite completed — Q3/Q5/Q10 star joins,
-    // Q6 scan-reduce, Q7/Q8 double-nation joins, Q9 derived-partsupp
-    // profit, Q12/Q14 CASE-pivot aggregations
-    "q319_tpch_q3_shape", "q320_tpch_q5_shape", "q321_tpch_q6_shape",
-    "q322_tpch_q7_shape", "q323_tpch_q8_shape", "q324_tpch_q9_shape",
-    "q325_tpch_q10_shape", "q326_tpch_q12_shape", "q327_tpch_q14_shape",
-    // Kneser-Ney eval (reduced-vocabulary joins), DSIR selection
-    // (bucket-broadcast score join + TakeOrdered top-k), corpus BLEU
-    // (counted-gram equi-joins, the q212 class)
-    "q328_kneser_ney", "q329_dsir_select", "q330_bleu_corpus",
-    // landmark BFS sketch (4 frontier join+agg rounds), HRW resharding
-    // audit (in-row argmax + shard-domain reduces), runtime bloom join
-    "q331_landmark_sketch", "q332_rendezvous_shards", "q333_runtime_bloom",
-    // stream-static enrichment (per-batch broadcast join + running agg)
-    "q334_stream_enrich",
-    // round 11: weighted landmark sketch (4 broadcast-frontier rounds —
-    // ball-bounded work, cost should track the edge scans), the AQE
-    // skew-join gate (input-relative thresholds keep detection AND
-    // split arity scale-invariant), and the two measured write paths
-    // (parquet full-table sink; on-disk Derby INSERT stream — expect
-    // ~linear, the sink is the bound)
-    "q335_landmark_weighted", "q336_skew_join_aqe",
-    "q337_sink_parquet", "q338_sink_jdbc",
-    // round 11 continued: dynamic partition pruning (write partitioned
-    // fact + DPP-pruned join — the scan should read 5/25 partitions at
-    // every scale), and the SQL pipe-syntax surface (plain grouped
-    // reduce under the new parser form)
-    "q339_dpp", "q340_pipe_syntax",
-    // DSv2 aggregate pushdown — metadata-only answer; the measured cost
-    // is the sink write + a |files|-row fold, so the aggregate itself
-    // should be scale-flat
-    "q341_dsv2_agg",
-    // temperature mixture (|sources|-domain reduce — should be scan-
-    // bound flat) and the unigram Viterbi (vocab-domain DP; Heaps-law
-    // sublinear in corpus size)
-    "q342_temperature_mixture", "q343_unigram_segment",
-    // storage-partitioned join: both keyed writes + the zero-exchange
-    // join — the measured cost is the two writes; the join itself never
-    // shuffles at any scale
-    "q344_spj",
-    // parameterized SQL (plain grouped reduce under the binding surface)
-    // and HyperBall (exact closure lane is lattice-O(1)-ball linear; the
-    // sketch lane is the constant-memory-per-node scale path)
-    "q345_param_sql", "q346_neighborhood",
-    // round 12: grouped manifest aggregate (zero-data-bytes per-key
-    // partials — the measured cost is the keyed write), the stats-driven
-    // join-strategy gate (cost = two sink writes + the broadcast join),
-    // and the SHARDED JDBC sink (q338's scale-safe twin: 8 Derby targets,
-    // expect the only super-linear row to flatten toward linear)
-    "q347_dsv2_group_agg", "q348_dsv2_stats_join", "q349_sink_jdbc_sharded",
-    // SPJ under skew: the dominant key's splits stay parallel tasks with
-    // the dim group replicated across them — cost is the salted keyed
-    // write; the join never shuffles and never serializes on the hot key
-    "q350_spj_skew",
-    // runtime file filtering in the custom source: cost is the range-
-    // partitioned write + the pruned join; the scan's file list shrinks
-    // with the dim's selectivity at every scale (5 of 25 key groups read)
-    "q351_dsv2_runtime_filter",
-    // quantile sketch: the GK summary is one mergeable pass (the scale
-    // path); the exact lane reduces to the distinct-value domain first
-    "q352_quantile_sketch",
-    // window group limit: per-partition top-k discard BEFORE the window
-    // sort — the mechanism that keeps "top 3 per group" flat at scale
-    "q353_window_group_limit",
-    // observed metrics: accumulators riding the profile action, zero
-    // extra passes; recursive CTE: 25-node lattice, rounds not data-bound
-    "q354_observed_metrics", "q355_recursive_cte",
-    // bounded scans: cost is the write; the top-n/limit READ touches a
-    // near-constant file prefix at every scale (that is the point)
-    "q356_dsv2_topn", "q357_dsv2_limit",
-    // outer stream join: same state geometry as q216 plus the eviction-
-    // driven outer emission; state bounded by watermark exactly as inner
-    "q358_stream_outer_join",
-    // write-side clustering: the cost is the planner-inserted shuffle +
-    // the keyed write — exactly the once-per-ingest cost q344 measures
-    "q359_dsv2_write_distribution",
-    // catalog lifecycle: cost is the keyed INSERT; the DELETE is
-    // metadata-only (drops whole files) and the SELECT reads 12/16 keys
-    "q360_catalog_sql",
-    // streaming read of the custom source: cost is the two staged writes
-    // + per-batch state-store cycles; each batch reads only new files
-    "q361_dsv2_stream",
-    // round 13: admission-controlled catch-up (12-file backlog drains in
-    // ≥4 bounded micro-batches; data volume scales, file/batch counts
-    // stay fixed BY CONSTRUCTION), copy-on-write catalog DELETE (cost =
-    // keyed INSERT + 14 one-task file rewrites), and key-hash-routed
-    // sharded JDBC under a coalesced input (balance data-determined)
-    "q362_stream_admission", "q363_catalog_cow_delete",
-    "q364_sink_jdbc_balance")
+  /** Copy `i` of the documents table: doc ids offset by `i * nDoc`, and
+    * every token of the text prefixed with `c<i>_`. The prefix is
+    * injective, so each copy's near-dup pairs survive (Jaccard similarity
+    * is invariant under token renaming) but copies never pair with each
+    * other. "c${i}_" has a separator, not "c$i": an unseparated prefix is
+    * not injective once k > 10 (copy 1 + token "0x" would collide with
+    * copy 10 + token "x"), which would silently create the cross-copy
+    * near-dups this rewrite exists to prevent. */
+  def documentCopy(d: DataFrame, i: Int, nDoc: Long): DataFrame = d
+    .withColumn("doc_id", col("doc_id") + lit(i * nDoc))
+    .withColumn("text", regexp_replace(col("text"), "(\\S+)", s"c${i}_" + "$1"))
 
   def materialize(spark: SparkSession, src: String, out: String, k: Int): Unit = {
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
@@ -431,13 +65,7 @@ object ScaleBench {
     copies("lineitem")((d, i) => d
       .withColumn("l_orderkey", col("l_orderkey") + lit(i * nOrd))
       .withColumn("l_partkey", col("l_partkey") + lit(i * nPart)))
-    copies("documents")((d, i) => d
-      .withColumn("doc_id", col("doc_id") + lit(i * nDoc))
-      // "c${i}_" with a separator, not "c$i": an unseparated prefix is not
-      // injective across copies once k > 10 (copy 1 + token "0x" would
-      // collide with copy 10 + token "x"), which would silently create the
-      // cross-copy near-dups this rewrite exists to prevent
-      .withColumn("text", regexp_replace(col("text"), "(\\S+)", s"c${i}_" + "$1"))
+    copies("documents")((d, i) => documentCopy(d, i, nDoc)
       // text-derived columns must follow the rewrite or the scaled table
       // is internally inconsistent for any n_chars consumer; cast keeps
       // the source's BIGINT type (length() alone would narrow to INT)
@@ -478,8 +106,9 @@ object ScaleBench {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = args.lift(1).map(_.toInt).getOrElse(10)
     val out = args.lift(2).getOrElse("/tmp/graft_scale")
+    val selected = Harness.select()
     val spark = GraftSession.get("graft-scalebench")
-    spark.range(1).count() // session warmup outside any timing
+    Harness.warm(spark)
 
     val t0 = System.nanoTime()
     // Local iteration aid: reuse an already-materialized scaled copy
@@ -487,41 +116,13 @@ object ScaleBench {
     if (!sys.env.contains("SPARK_GRAFT_SKIP_MAT")) materialize(spark, src, out, k)
     val tMat = (System.nanoTime() - t0) / 1e9
 
-    def time(dir: String, name: String): Either[String, Double] = {
-      val s = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
-        Right((System.nanoTime() - s) / 1e9)
-      } catch {
-        case e: Throwable => Left(e.toString.takeWhile(_ != '\n').take(160))
-      }
-    }
-
     // Per query: one UNTIMED base run first (absorbs whole-stage-codegen
     // compilation + JIT for the plan shape — otherwise the cold base
     // deflates the ratio and 10x data can read as fake sublinearity), then
-    // timed base, then timed scaled; clearCache between queries so caches
-    // created inside a query (q31's shingle table) can't leak into the
-    // next measurement.
-    // Local iteration aid (unset in full runs): restrict to a comma-
-    // separated query subset, same contract as Bench/Verify.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // Per-boundary reset, three layers: the SQL cache (clearCache), then
-    // EVERY RDD-level persisted block — localCheckpoint/persist blocks are
-    // NOT in the SQL cache, and waiting for ContextCleaner (async, GC-
-    // driven) let 48 queries' worth of 100×-sized pinned blocks pile up
-    // until the scaled phase opened with zero free execution memory
-    // (q23's UNABLE_TO_ACQUIRE_MEMORY → JVM heap OOM, 2026-08-16 session).
-    // Blocking unpersist frees them deterministically; between queries no
-    // cross-query RDD state exists, so this is always safe. GC last, for
-    // whatever the cleaner still holds.
-    def reset(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
-    val selected = ScaleQueries.filter(q => only.forall(_.contains(q)))
+    // timed base, then timed scaled; every run starts from Harness.reset,
+    // so caches and persisted blocks created inside a query (q31's
+    // shingle table, the lineage cuts) can't leak into the next
+    // measurement.
     // Two timing layouts. Interleaved (default, k=10 full runs): per query
     // warm→base→scaled, so each ratio is measured back-to-back. Bases-first
     // (SPARK_GRAFT_BASES_FIRST, for k=100 spot runs): ALL base timings in a
@@ -532,23 +133,16 @@ object ScaleBench {
     // any big one removes that pollution without changing the warm-plan/
     // cold-cache contract (codegen warm-up is plan-shape-, not data-bound).
     val rows = if (sys.env.contains("SPARK_GRAFT_BASES_FIRST")) {
-      val bases = selected.map { q =>
-        time(src, q); reset()
-        val b = time(src, q); reset(); (q, b)
+      val bases = selected.map { case (name, q) =>
+        Harness.run(spark, q, src, newQuery = true)
+        (name, q, Harness.run(spark, q, src, newQuery = false))
       }
-      bases.map { case (q, b) =>
-        val scaled = time(out, q); reset(); (q, b, scaled)
-      }
-    } else selected.map { q =>
-      time(src, q)
-      reset()
-      val base = time(src, q)
-      reset()
-      val scaled = time(out, q)
-      reset()
-      (q, base, scaled)
+      bases.map { case (name, q, b) => (name, b, Harness.run(spark, q, out, newQuery = true)) }
+    } else selected.map { case (name, q) =>
+      Harness.run(spark, q, src, newQuery = true)
+      val base = Harness.run(spark, q, src, newQuery = false)
+      (name, base, Harness.run(spark, q, out, newQuery = false))
     }
-    def fmt(d: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
     val qs = rows.map { case (q, b, s) =>
       val base = b.fold(_ => "-1", fmt)
       val scaled = s.fold(_ => "-1", fmt)

@@ -41,6 +41,7 @@ import org.apache.spark.sql.functions._
   * "ratio":r}},…}; results land in SCALECHECK.md's skew section.
   */
 object SkewBench {
+  import Harness.fmt
 
   /** 12 tokens → 10 interior 3-gram shingles; the `bp_` namespace cannot
     * collide with corpus vocabulary or with ScaleBench's `c<i>_` rewrite
@@ -64,14 +65,9 @@ object SkewBench {
     val nDoc = docs.count()
     plantBoilerplate(docs)
       .write.mode("overwrite").parquet(s"$out/base/documents.parquet")
-    val scaled = (0 until k).map { i =>
-      plantBoilerplate(docs
-        .withColumn("doc_id", col("doc_id") + lit(i * nDoc))
-        // injective per-copy token prefix, same rationale as
-        // ScaleBench.materialize: organic shingles must not pair across
-        // copies (see its scaladoc for the separator-injectivity note)
-        .withColumn("text", regexp_replace(col("text"), "(\\S+)", s"c${i}_" + "$1")))
-    }.reduce(_ unionByName _)
+    val scaled = (0 until k)
+      .map(i => plantBoilerplate(ScaleBench.documentCopy(docs, i, nDoc)))
+      .reduce(_ unionByName _)
     scaled.write.mode("overwrite").parquet(s"$out/scaled/documents.parquet")
     nDoc
   }
@@ -80,15 +76,20 @@ object SkewBench {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = args.lift(1).map(_.toInt).getOrElse(10)
     val out = args.lift(2).getOrElse("/tmp/graft_skew")
+    val exact = "q80_containment"
+    val prefix = "q113_containment_prefix"
+    // SPARK_GRAFT_ONLY restricts the TIMED set — the k=100 spot run times
+    // only the prefix variant, because the exact form's scaled run is the
+    // proven k² shape (≈10·C(0.3·k·N, 2) join rows: minutes at 10×, hours
+    // at 100× — measuring it again teaches nothing). The base-corpus
+    // result-identity gate below always runs.
+    val timedSet = Harness.select().filter { case (q, _) => q == exact || q == prefix }
     val spark = GraftSession.get("graft-skewbench")
-    spark.range(1).count()
+    Harness.warm(spark)
 
     val t0 = System.nanoTime()
     val nDoc = materialize(spark, src, out, k)
     val tMat = (System.nanoTime() - t0) / 1e9
-
-    val exact = "q80_containment"
-    val prefix = "q113_containment_prefix"
 
     // Result-identity gate on the skewed corpus BEFORE timing: the prefix
     // variant must remain bit-equal to the exact form with the planted
@@ -99,37 +100,16 @@ object SkewBench {
     val p = SparkEntry.queries(prefix)(spark, base)
     val diff = e.exceptAll(p).count() + p.exceptAll(e).count()
     val pairs = e.count()
-    spark.catalog.clearCache()
     require(diff == 0,
       s"prefix variant diverged from exact on the skewed corpus: $diff differing rows")
 
-    def time(dir: String, name: String): Either[String, Double] = {
-      val s = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
-        Right((System.nanoTime() - s) / 1e9)
-      } catch {
-        case ex: Throwable => Left(ex.toString.takeWhile(_ != '\n').take(160))
-      }
-    }
     // Same discipline as ScaleBench: untimed base run absorbs codegen for
-    // the plan shape, clearCache between every measurement. SPARK_GRAFT_ONLY
-    // (same contract as ScaleBench) restricts the TIMED set — the k=100
-    // spot run times only the prefix variant, because the exact form's
-    // scaled run is the proven k² shape (≈10·C(0.3·k·N, 2) join rows:
-    // minutes at 10×, hours at 100× — measuring it again teaches nothing).
-    // The base-corpus result-identity gate above always runs.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val rows = Seq(exact, prefix).filter(q => only.forall(_.contains(q))).map { q =>
-      time(base, q)
-      spark.catalog.clearCache()
-      val b = time(base, q)
-      spark.catalog.clearCache()
-      val s = time(s"$out/scaled", q)
-      spark.catalog.clearCache()
-      (q, b, s)
+    // the plan shape, and every run starts from Harness.reset.
+    val rows = timedSet.map { case (name, q) =>
+      Harness.run(spark, q, base, newQuery = true)
+      val b = Harness.run(spark, q, base, newQuery = false)
+      (name, b, Harness.run(spark, q, s"$out/scaled", newQuery = false))
     }
-    def fmt(d: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
     val qs = rows.map { case (q, b, s) =>
       val ratio = (b, s) match {
         case (Right(bb), Right(ss)) if bb > 0 => fmt(ss / bb)

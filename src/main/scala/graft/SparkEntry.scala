@@ -3397,12 +3397,17 @@ object SparkEntry {
     // whose stats refute the pushed filters at PLANNING time — the
     // custom-source analogue of parquet row-group pruning (and of
     // Iceberg/Delta manifest skipping). Orders are range-clustered on
-    // o_orderkey into 8 files, so the key-range query must plan a strict
-    // subset of files (in-query require on the scan node's file counts)
-    // while answering exactly like the raw-table oracle.
+    // o_orderkey into 8 files, and the query reads the second eighth of
+    // the table's own key span, so at every scale it must plan a strict,
+    // non-empty subset of files (in-query require on the scan node's file
+    // counts) while answering exactly like the raw-table oracle.
     "q238_dsv2_skipping" -> ((s, dir) => {
       val path = rtPath("dsv2skip")
-      t(s, dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
+      val orders = t(s, dir, "orders")
+      val span = orders.agg(min("o_orderkey"), max("o_orderkey")).head
+      val (lo, hi) = (span.getLong(0), span.getLong(1))
+      val (from, until) = (lo + (hi - lo + 1) / 8, lo + (hi - lo + 1) / 4)
+      orders.select("o_orderkey", "o_custkey", "o_totalprice")
         .repartitionByRange(8, col("o_orderkey"))
         .sortWithinPartitions("o_orderkey")
         .write.format("graft.sources.v2.GraftCsv").mode("overwrite").save(path)
@@ -3411,18 +3416,18 @@ object SparkEntry {
         org.apache.spark.sql.types.StructField("o_custkey", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("o_totalprice", org.apache.spark.sql.types.DoubleType)))
       val q = s.read.schema(sch).format("graft.sources.v2.GraftCsv").load(path)
-        .filter(col("o_orderkey") >= 2000 && col("o_orderkey") < 3000)
+        .filter(col("o_orderkey") >= from && col("o_orderkey") < until)
         .groupBy(expr("o_orderkey div 100").as("bucket"))
         .agg(count(lit(1)).as("n"),
           sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("price_c"))
         .orderBy("bucket")
-      // ≤10-row eager checkpoint: one execution, whose scan node reports
-      // the files it read (the q336 discipline)
+      // small eager checkpoint (one row per 100 keys): one execution,
+      // whose scan node reports the files it read (the q336 discipline)
       val out = Materialize.cut(q)
       val counts = GraftCsv.scans(q).map(GraftCsv.fileCounts)
       require(counts.length == 1 &&
-          counts.forall { case (kept, total) => total == 8 && kept < total },
-        s"file skipping did not prune: (kept, total) per scan $counts")
+          counts.forall { case (kept, total) => total == 8 && kept > 0 && kept < total },
+        s"file skipping did not keep a strict, non-empty subset: (kept, total) per scan $counts")
       out
     }),
 
@@ -9936,12 +9941,16 @@ object SparkEntry {
         |ORDER BY l_returnflag, l_linestatus""".stripMargin,
 
     // The raw-table answer: skipping may touch fewer files, never fewer
-    // matching rows.
+    // matching rows. The bounds are the second eighth of the key span.
     "q238_dsv2_skipping" ->
-      """SELECT o_orderkey // 100 AS bucket, count(*) AS n,
+      """WITH span AS (
+        |  SELECT min(o_orderkey) AS lo, max(o_orderkey) - min(o_orderkey) + 1 AS width
+        |  FROM orders)
+        |SELECT o_orderkey // 100 AS bucket, count(*) AS n,
         |       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS price_c
         |FROM orders
-        |WHERE o_orderkey >= 2000 AND o_orderkey < 3000
+        |WHERE o_orderkey >= (SELECT lo + width // 8 FROM span)
+        |  AND o_orderkey < (SELECT lo + width // 4 FROM span)
         |GROUP BY 1 ORDER BY 1""".stripMargin,
 
     // The one-shot aggregate the per-batch folds must converge to —

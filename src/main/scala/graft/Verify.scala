@@ -6,20 +6,11 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    val selected = Harness.select()
     val spark = GraftSession.get("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // Local iteration aid (unset in driver runs): restrict to a
-    // comma-separated query subset, same contract as Bench.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      // same session-reset discipline as Bench: 144 queries in one JVM
-      // must not accumulate each other's cached partitions or temp views
-      spark.catalog.clearCache()
-      spark.sqlContext.tableNames().foreach { t =>
-        try spark.catalog.dropTempView(t) catch { case _: Throwable => }
-      }
+    selected.foreach { case (name, fn) =>
+      Harness.reset(spark, newQuery = true)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

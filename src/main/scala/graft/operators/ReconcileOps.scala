@@ -26,10 +26,10 @@ import org.apache.spark.sql.functions._
   * usual md5: the fingerprint never crosses an engine boundary (the
   * oracle brute-forces the diff and compares only the key/status
   * output), and xxhash64 is a codegen'd single-pass hash where md5
-  * costs a digest + hex parse per row — A/B on the 1.5M-row DiffBench
-  * cases: equal 1.03 → 0.76 s, scattered drift 2.49 → 1.94 s.
+  * costs a digest + hex parse per row — A/B on the 1.5M-row
+  * reconciliation cases (SCALECHECK.md): equal 1.03 → 0.76 s, scattered drift 2.49 → 1.94 s.
   *
-  * HONEST LOCAL LIMIT (DiffBench, 10× orders, all columns): on ONE node
+  * HONEST LOCAL LIMIT (SCALECHECK.md, 10× orders, all columns): on ONE node
   * with narrow rows the brute join is never worse — its shuffle is
   * in-memory and ~free, while every Merkle regime pays extra scans
   * (equal 0.76 s vs brute 0.89 s is the only win; drifted regimes lose
@@ -73,7 +73,7 @@ object ReconcileOps {
     *
     * The disagreeing-bucket list (≤ nb rows) is collected and the prune
     * decision made driver-side — the same tiny-control-decision family
-    * as Bpe's per-round argmax. Three regimes, measured by DiffBench on
+    * as Bpe's per-round argmax. Three regimes, measured on
     * the 10× orders copy (SCALECHECK.md "Reconciliation"):
     *
     *  - no drift: zero bad buckets → the second pass folds to a

@@ -1,10 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
-import scala.jdk.CollectionConverters._
-import scala.util.Using
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -46,17 +41,7 @@ class MaterializeSpec extends SparkSpec {
     // The cut policy (localCheckpoint here, reliable checkpoint where
     // executors can be lost) is decided in one function only while no
     // other source calls localCheckpoint itself.
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"no sources at ${root.toAbsolutePath}")
-    val hits = Using.resource(Files.walk(root)) { paths =>
-      paths.iterator.asScala
-        .filter(p => p.toString.endsWith(".scala") &&
-          p.getFileName.toString != "Materialize.scala")
-        .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if line.contains(".localCheckpoint(") => s"$p:${i + 1}"
-        })
-        .toList
-    }
+    val hits = SourceScan.outside("Materialize.scala")(_.contains(".localCheckpoint("))
     assert(hits.isEmpty, hits.mkString("localCheckpoint outside Materialize.cut:\n", "\n", ""))
   }
 }

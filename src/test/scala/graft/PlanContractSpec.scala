@@ -1,8 +1,9 @@
 package graft
 
-/** Plan-shape contracts over the headline queries — the scale dossier's
+/** Plan-shape contracts over the gate queries — the scale dossier's
   * "no cartesian, no accidental nested loop" audit as a REGRESSION TEST:
-  * every ScaleBench query's physical plan is built against sf0.001 and
+  * every SparkEntry query's physical plan (the set ScaleBench measures,
+  * since it runs `Harness.select`) is built against sf0.001 and
   * must contain no CartesianProduct, and BroadcastNestedLoopJoin only
   * where a query legitimately broadcasts a 1-row scalar (or runs a
   * guarded brute-force fallback) — the allowlist below, each entry
@@ -92,22 +93,8 @@ class PlanContractSpec extends SparkSpec {
     // chars); the shape exists in the plan, the data never does.
     "q240_edit_join")
 
-  test("every gate query has a ScaleBench row (the q308 lesson, institutionalized)") {
-    // round-8 verdict #5: a gate query is not "done" until it is measured
-    // in the same comparable 10x session as the rest — so the scale list
-    // must BE the gate list, enforced here rather than remembered.
-    val gate = SparkEntry.queries.keySet
-    val scale = ScaleBench.ScaleQueries.toSet
-    val missing = gate -- scale
-    val stale = scale -- gate
-    assert(missing.isEmpty && stale.isEmpty,
-      s"missing from ScaleQueries: ${missing.toSeq.sorted.mkString(", ")}; " +
-        s"stale in ScaleQueries: ${stale.toSeq.sorted.mkString(", ")}")
-    assert(ScaleBench.ScaleQueries.distinct.size == ScaleBench.ScaleQueries.size)
-  }
-
   test("headline query plans: no CartesianProduct; BNLJ only where allowlisted") {
-    val failures = ScaleBench.ScaleQueries.flatMap { name =>
+    val failures = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
       val plan = SparkEntry.queries(name)(spark, sfDir)
         .queryExecution.executedPlan.toString()
       val cart = plan.contains("CartesianProduct") && !cartAllowed(name)
