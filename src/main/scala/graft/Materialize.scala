@@ -1,8 +1,11 @@
 package graft
 
 import scala.annotation.tailrec
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, when}
 
 /** Materialize-then-release: the cache-hygiene contract for
   * multi-consumer operators (round-6 verdict "What's wrong" #1 — operator
@@ -30,15 +33,29 @@ import org.apache.spark.sql.DataFrame
   * `checkpoint()` on cluster storage.
   *
   * [[cut]] is that one decision for every lineage cut in the engine:
-  * [[thenRelease]], the graph convergence loops that run through
-  * [[fixpoint]], and every operator and query body that materializes a
-  * shared intermediate. No other file calls `localCheckpoint`
-  * (MaterializeSpec scans the sources for it).
+  * [[thenRelease]], [[cutCounting]], the graph convergence loops that run
+  * through [[fixpoint]], and every operator and query body that
+  * materializes a shared intermediate. No other file calls
+  * `localCheckpoint` (MaterializeSpec scans the sources for it).
   */
 object Materialize {
   /** The lineage cut: eagerly materializes `df` (one job) and returns a
     * frame whose plan reads the materialized partitions. */
   def cut(df: DataFrame): DataFrame = df.localCheckpoint()
+
+  /** The counting cut: [[cut]]s `df` and returns it with the number of its
+    * rows for which `cond` holds (a null `cond` does not count). The count
+    * is an observed metric of the cut's own job, so a caller that branches
+    * on it (a convergence test, a fallback that is needed only for some
+    * rows) pays no second job over the cut state. An empty `df` counts 0.
+    *
+    * Observed metrics reach the driver through the listener bus; the wait
+    * is bounded so that a lost event fails the call instead of hanging it. */
+  def cutCounting(df: DataFrame, cond: Column): (DataFrame, Long) = {
+    val obs = Observation()
+    val out = cut(df.observe(obs, count(when(cond, 1)).as("n")))
+    (out, Await.result(obs.future, 10.minutes).getLong(0))
+  }
 
   /** Eagerly materializes `result` (one job, while `shared` caches are
     * hot), then unpersists every `shared` frame. Returns the

@@ -43,15 +43,16 @@ object Plans {
         "exchange on doc_id for the 64 bit-sums, then the pigeonhole block " +
         "self-join on (blk, bval) - bucketed, never all-pairs, no window."),
     "q38_point_query" ->
-      ("The round-7 snap fix, in the plan: the node candidates arrive " +
-        "through a BroadcastHashJoin on the (cx,cy) degree-grid key (the " +
-        "points side explodes its 3x3 neighborhood) — the nodes table is " +
-        "never cross-joined against the points. The only " +
-        "BroadcastNestedLoopJoin(Cross) nodes are 1-row broadcasts of the " +
-        "lat-bound scalar (IdentityBroadcastMode over a single max(|lat|) " +
-        "aggregate row) plus the brute-force fallback, which sits behind " +
-        "the left-anti join of unresolved points — its crossJoin input is " +
-        "empty whenever the neighborhood decided every point."),
+      ("The snap's candidates arrive through one equi-join on the (cx,cy) " +
+        "degree-grid key (the points side explodes its 3x3 neighborhood) " +
+        "and one min(struct(d2, node_idx, lon, lat)) aggregate, which " +
+        "snapPoints cuts eagerly while counting undecided points on the " +
+        "same job; so the plan below reads the cut (an ExistingRDD scan) " +
+        "on the snapped side. Every q38 point is decided, so no brute-force " +
+        "fallback is planned: the nodes table is never joined against the " +
+        "points without the cell key, and there is no CartesianProduct. " +
+        "The one BroadcastNestedLoopJoin(Cross) is in the reach build: " +
+        "Derive.pois' 1-row node-count broadcast (the q26 class)."),
     "q40_cosine_topk" ->
       ("graft_dot_q appears as a plain codegen expression in the projection; " +
         "the 5-query side broadcasts; per-query top-k is a partitioned window, " +

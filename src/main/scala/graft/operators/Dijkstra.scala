@@ -226,23 +226,27 @@ object Dijkstra {
     // whole upstream plan (scan + symmetrize-dedup measured as the
     // dominant per-round cost).
     val e = Materialize.cut(edges.select(col("u"), col("v"), col("w")))
-    val best = Materialize.fixpoint("reachIterative", seeds, cap = 100) { best =>
-      val f = best.filter(col("moved"))
-      val relaxed = f.join(e, f("node") === e("u"))
-        .select(col("category"), col("v").as("node"),
-          (col("dist") + col("w")).as("dist"), col("poi"), lit(1).as("tag"))
-        .filter(col("dist") <= limitM)
-      // Tagged union: a row's own value (tag 0) wins ties, so the minimum
-      // carries tag 1 exactly when the round strictly improved the row or
-      // first reached it — the next frontier, read from the cut state.
-      Materialize.cut(relaxed
-        .union(best.select(col("category"), col("node"), col("dist"), col("poi"),
-          lit(0).as("tag")))
-        .groupBy("category", "node")
-        .agg(min(struct(col("dist"), col("poi"), col("tag"))).as("m"))
-        .select(col("category"), col("node"), col("m.dist").as("dist"),
-          col("m.poi").as("poi"), (col("m.tag") === 1).as("moved")))
-    }(_.filter(col("moved")).isEmpty)
+    // state: (best, how many rows the round moved); the count rides the
+    // cut's own job
+    val (best, _) = Materialize.fixpoint("reachIterative", (seeds, -1L), cap = 100) {
+      case (best, _) =>
+        val f = best.filter(col("moved"))
+        val relaxed = f.join(e, f("node") === e("u"))
+          .select(col("category"), col("v").as("node"),
+            (col("dist") + col("w")).as("dist"), col("poi"), lit(1).as("tag"))
+          .filter(col("dist") <= limitM)
+        // Tagged union: a row's own value (tag 0) wins ties, so the minimum
+        // carries tag 1 exactly when the round strictly improved the row or
+        // first reached it — the next frontier, read from the cut state.
+        Materialize.cutCounting(relaxed
+          .union(best.select(col("category"), col("node"), col("dist"), col("poi"),
+            lit(0).as("tag")))
+          .groupBy("category", "node")
+          .agg(min(struct(col("dist"), col("poi"), col("tag"))).as("m"))
+          .select(col("category"), col("node"), col("m.dist").as("dist"),
+            col("m.poi").as("poi"), (col("m.tag") === 1).as("moved")),
+          col("moved"))
+    }(_._2 == 0)
     best.select(col("category"), col("node").as("node_idx"),
       col("dist").as("dist_m"), (col("dist") / lit(speedMps)).as("time_s"),
       col("poi").as("poi_id"))

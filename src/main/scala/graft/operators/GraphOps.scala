@@ -245,8 +245,9 @@ object GraphOps {
     * large-star/small-star variant; plain propagation is the right
     * trade for dedup graphs, whose diameter is small by construction.
     * Lineage is cut per round; the round's min-aggregate flags the labels
-    * it strictly lowered, and convergence is an isEmpty on that flag in
-    * the cut state — same driver-steering pattern as
+    * it strictly lowered, and the cut's own job counts that flag
+    * (`Materialize.cutCounting`): convergence is a count of 0 — same
+    * driver-steering pattern as
     * [[graft.operators.Dijkstra.reachIterative]]. More than 50 rounds
     * fail the call.
     *
@@ -265,16 +266,19 @@ object GraphOps {
       p.union(p.select(col("nbr").as("id"), col("id").as("nbr"))).distinct())
     val labels0 = Materialize.cut(sym.select(col("id")).distinct()
       .select(col("id"), col("id").as("label")))
-    val labels = Materialize.fixpoint("connectedComponents", labels0, cap = 50) { labels =>
-      val viaNbr = sym.join(labels.select(col("id").as("nbr"), col("label")), Seq("nbr"))
-        .select(col("id"), col("label"), lit(1).as("tag"))
-      // tagged union: the node's own label (tag 0) wins ties, so tag 1
-      // survives the min exactly when a neighbor strictly lowered it
-      Materialize.cut(labels.select(col("id"), col("label"), lit(0).as("tag"))
-        .union(viaNbr)
-        .groupBy("id").agg(min(struct(col("label"), col("tag"))).as("m"))
-        .select(col("id"), col("m.label").as("label"), (col("m.tag") === 1).as("moved")))
-    }(_.filter(col("moved")).isEmpty)
+    // state: (labels, how many labels the round lowered)
+    val (labels, _) = Materialize.fixpoint("connectedComponents", (labels0, -1L), cap = 50) {
+      case (labels, _) =>
+        val viaNbr = sym.join(labels.select(col("id").as("nbr"), col("label")), Seq("nbr"))
+          .select(col("id"), col("label"), lit(1).as("tag"))
+        // tagged union: the node's own label (tag 0) wins ties, so tag 1
+        // survives the min exactly when a neighbor strictly lowered it
+        Materialize.cutCounting(labels.select(col("id"), col("label"), lit(0).as("tag"))
+          .union(viaNbr)
+          .groupBy("id").agg(min(struct(col("label"), col("tag"))).as("m"))
+          .select(col("id"), col("m.label").as("label"), (col("m.tag") === 1).as("moved")),
+          col("moved"))
+    }(_._2 == 0)
     labels.select(col("id"), col("label").as("component"))
   }
 
@@ -298,19 +302,21 @@ object GraphOps {
     * changing, and more than 50 rounds fail the call. */
   def kCore(edges: DataFrame, k: Int, srcCol: String = "u",
             dstCol: String = "v"): DataFrame = {
-    val e0 = Materialize.cut(edges.select(col(srcCol).as("u"), col(dstCol).as("v")))
+    // the edge counts ride each cut's own job
+    val (e0, n0) = Materialize.cutCounting(
+      edges.select(col(srcCol).as("u"), col(dstCol).as("v")), lit(true))
     // state: (edges, edge count before the round, edge count after it)
-    val (e, _, _) = Materialize.fixpoint("kCore", (e0, -1L, e0.count()), cap = 50) {
+    val (e, _, _) = Materialize.fixpoint("kCore", (e0, -1L, n0), cap = 50) {
       case (e, _, nEdges) =>
         val deg = e.select(col("u").as("node"))
           .union(e.select(col("v").as("node")))
           .groupBy("node").agg(count(lit(1)).as("deg"))
         val keep = deg.filter(col("deg") >= k).select("node")
-        val e2 = Materialize.cut(e
+        val (e2, n2) = Materialize.cutCounting(e
           .join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
           .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
-          .select("u", "v"))
-        (e2, nEdges, e2.count())
+          .select("u", "v"), lit(true))
+        (e2, nEdges, n2)
     } { case (_, before, after) => before == after }
     e.select(col("u").as("node")).union(e.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -414,19 +420,21 @@ object GraphOps {
                        parentCol: String = "parent"): DataFrame = {
     val init = Materialize.cut(parents.select(col(idCol).as("id"), col(parentCol).as("anc"),
       when(col(parentCol) === col(idCol), 0L).otherwise(1L).as("depth")))
-    val state = Materialize.fixpoint("pointerJumpRoots", init, cap = 40) { state =>
-      // inner join is total by the every-parent-is-a-node contract; the
-      // cut stops the doubling lineage (2^rounds plan nodes). d2 (= the
-      // hop this round added) rides along in the cut state, so the
-      // convergence probe "did any row advance?" is a scan of
-      // materialized partitions: depth changed iff d2 ≠ 0.
-      val s3 = state.select("id", "anc", "depth")
-      Materialize.cut(s3.join(
-          s3.select(col("id").as("anc"), col("anc").as("anc2"),
-            col("depth").as("d2")), Seq("anc"))
-        .select(col("id"), col("anc2").as("anc"),
-          (col("depth") + col("d2")).as("depth"), col("d2")))
-    }(_.filter(col("d2") =!= 0L).isEmpty)
+    // state: (ancestors, how many rows the round advanced)
+    val (state, _) = Materialize.fixpoint("pointerJumpRoots", (init, -1L), cap = 40) {
+      case (state, _) =>
+        // inner join is total by the every-parent-is-a-node contract; the
+        // cut stops the doubling lineage (2^rounds plan nodes). d2 (= the
+        // hop this round added) is nonzero iff the row advanced, and the
+        // cut's own job counts those rows.
+        val s3 = state.select("id", "anc", "depth")
+        Materialize.cutCounting(s3.join(
+            s3.select(col("id").as("anc"), col("anc").as("anc2"),
+              col("depth").as("d2")), Seq("anc"))
+          .select(col("id"), col("anc2").as("anc"),
+            (col("depth") + col("d2")).as("depth"), col("d2")),
+          col("d2") =!= 0L)
+    }(_._2 == 0)
     state.select(col("id"), col("anc").as("root"), col("depth"))
   }
 

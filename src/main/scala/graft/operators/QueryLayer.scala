@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.functions.GeoFunctions._
 
 /** The user-facing query layer (SURVEY.md §3.3, reference entry point C —
@@ -41,16 +42,27 @@ object QueryLayer {
     * whose probed rows carry their own, wider, widths.
     *
     * One left-outer equi-join on the cell keys (×9 point fan-out) and
-    * one candidate aggregate per point follow. A point whose candidate
-    * winner has d² ≤ g² is the GLOBAL argmin — every node at d² ≤ g²,
-    * ties included, is a candidate. Points the neighborhood can't decide
-    * (no candidate, or the winner is beyond the guarantee radius — their
-    * snap is −1, but the reported snap_dist_m must still be the true
-    * nearest's) fall back to the original brute-force argmin, applied
-    * to ONLY those points. Both branches share one
-    * min_by(…, struct(d², node_idx)) expression, so the deterministic
-    * tie-break is identical and the result is bit-equal to the
-    * all-pairs form (q38's oracle pins it).
+    * one candidate aggregate per point follow: min(struct(d², node_idx,
+    * lon, lat)), so the winner and its d² come out of one expression with
+    * the deterministic (d², node_idx) tie-break. A point whose candidate
+    * winner has d² ≤ g² is the GLOBAL argmin — every node at d² ≤ g², ties
+    * included, is a candidate. The aggregate is cut eagerly
+    * ([[graft.Materialize.cutCounting]]) and its job counts the points the
+    * neighborhood can't decide (no candidate, or the winner beyond the
+    * guarantee radius — their snap is −1, but the reported snap_dist_m
+    * must still be the true nearest's). Only when that count is above 0 is
+    * the brute-force argmin planned, over those points alone, with the
+    * same candidate expression; otherwise no points × nodes product
+    * exists in the plan. The result is bit-equal to the all-pairs form
+    * (q38's oracle pins it).
+    *
+    * The call is eager: it runs the cut, and the returned frame reads the
+    * small materialized snap, which AQE can broadcast into a later join
+    * (pointQuery's reach lookup).
+    *
+    * Every input point yields exactly one row. A point with a null
+    * coordinate, or any point when no node has coordinates, gets
+    * node_idx −1 and a null snap_dist_m.
     *
     * `points` must have (query_id, lon, lat). */
   def snapPoints(points: DataFrame, nodes: DataFrame,
@@ -58,10 +70,9 @@ object QueryLayer {
     val pts = points.select(col("query_id"), col("lon").as("q_lon"), col("lat").as("q_lat"))
     val nodeCols = Seq(col("node_idx"), col("lon"), col("lat"))
     val d2 = equirectDist2(col("q_lon"), col("q_lat"), col("lon"), col("lat"))
-    // unmatched left-outer rows (null node) are skipped: min_by ignores a
-    // null ordering
-    val pick = min_by(struct(nodeCols: _*),
-      when(col("node_idx").isNotNull, struct(d2, col("node_idx"))))
+    // a row without a distance (unmatched left-outer row, null coordinate)
+    // is no candidate: min skips a null struct
+    val pick = min(when(d2.isNotNull, struct(d2.as("d2") +: nodeCols: _*))).as("nn")
     val g = maxSnapM / R_QUERY_M // guarantee radius in equirect radians
     val aDeg = math.toDegrees(g) // row height, degrees
     def row(lat: Column): Column = floor(lat / lit(aDeg)).cast("long")
@@ -78,23 +89,24 @@ object QueryLayer {
       .withColumn("dx", explode(neighbors))
       .select(col("query_id"), col("q_lon"), col("q_lat"), col("cy"),
         (floor(col("q_lon") / width(col("cy"))).cast("long") + col("dx")).as("cx"))
-    val nn = rep.join(nx, Seq("cx", "cy"), "left_outer")
-      .groupBy("query_id", "q_lon", "q_lat")
-      .agg(pick.as("nn"), min(d2).as("d2min"))
-    val decided = col("d2min") <= lit(g * g)
-    val resolved = nn.filter(decided).drop("d2min")
-    val brute = nn.filter(col("d2min").isNull || !decided)
-      .select("query_id", "q_lon", "q_lat")
-      .crossJoin(nodes.select(nodeCols: _*))
-      .groupBy("query_id", "q_lon", "q_lat")
-      .agg(pick.as("nn"))
-    resolved.unionByName(brute)
-      .select(col("query_id"), col("q_lon"), col("q_lat"),
-        col("nn.node_idx").as("node_idx"), col("nn.lon").as("n_lon"), col("nn.lat").as("n_lat"))
+    val undecided = col("q_lon").isNotNull && col("q_lat").isNotNull &&
+      (col("nn").isNull || col("nn.d2") > lit(g * g))
+    val (nn, nUndecided) = Materialize.cutCounting(
+      rep.join(nx, Seq("cx", "cy"), "left_outer")
+        .groupBy("query_id", "q_lon", "q_lat").agg(pick),
+      undecided)
+    val snapped =
+      if (nUndecided == 0) nn
+      else nn.filter(!undecided).unionByName(nn.filter(undecided)
+        .select("query_id", "q_lon", "q_lat")
+        // left outer, so a point survives an empty node table
+        .join(nodes.select(nodeCols: _*), lit(true), "left_outer")
+        .groupBy("query_id", "q_lon", "q_lat").agg(pick))
+    snapped
       .withColumn("snap_dist_m",
-        haversineM(col("q_lon"), col("q_lat"), col("n_lon"), col("n_lat")))
+        haversineM(col("q_lon"), col("q_lat"), col("nn.lon"), col("nn.lat")))
       .select(col("query_id"),
-        when(col("snap_dist_m") > maxSnapM, lit(-1)).otherwise(col("node_idx")).as("node_idx"),
+        when(col("snap_dist_m") <= maxSnapM, col("nn.node_idx")).otherwise(lit(-1)).as("node_idx"),
         col("snap_dist_m"))
   }
 

@@ -1582,17 +1582,23 @@ class GraftCsvMicroBatchStream(fullSchema: StructType, required: StructType,
   override def metrics(latestConsumedOffset: java.util.Optional[Offset]): util.Map[String, String] =
     Map(GraftCsv.BatchFiles -> plannedFiles.toString).asJava
 
+  // the last planned (start, end] and its partitions: the engine plans
+  // each micro-batch several times, and a log entry never changes once
+  // written, so each entry is read once
+  private var lastPlanned: ((Long, Long), Array[InputPartition]) = ((-1L, -1L), Array.empty)
+
   /** The batch = the files named by log generations (start, end] — read
     * from O(batch) small log entries, never by re-listing or re-diffing
     * the whole table. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[GraftCsvOffset].gen
-    val e = end.asInstanceOf[GraftCsvOffset].gen
-    val names = ((s + 1) to e).flatMap(readGen)
-    plannedFiles = names.length
-    val base = new Path(path)
-    names.map(n => GraftCsvPartition(new Path(base, n).toString): InputPartition)
-      .toArray
+    val range = (start.asInstanceOf[GraftCsvOffset].gen, end.asInstanceOf[GraftCsvOffset].gen)
+    if (lastPlanned._1 != range) {
+      val base = new Path(path)
+      lastPlanned = range -> ((range._1 + 1) to range._2).flatMap(readGen)
+        .map(n => GraftCsvPartition(new Path(base, n).toString): InputPartition).toArray
+    }
+    plannedFiles = lastPlanned._2.length
+    lastPlanned._2
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -37,6 +37,22 @@ class MaterializeSpec extends SparkSpec {
       .exists(_.getMessage.contains("[CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND]")), err)
   }
 
+  test("cutCounting: the count rides the cut's own job; empty inputs count 0") {
+    import spark.implicits._
+    val src = spark.range(0, 100).toDF("x")
+    val ((cut, n), jobs) = countingJobs(Materialize.cutCounting(src, col("x") % 3 === 0))
+    assert(n == 34 && jobs == 1, s"count $n in $jobs jobs")
+    assert(cut.count() == 100)
+    // null conditions do not count
+    assert(Materialize.cutCounting(src, when(col("x") > 1, lit(true)))._2 == 98)
+    val empties = Seq(src.filter(lit(false)), spark.range(0).toDF("x"),
+      Seq.empty[Long].toDF("x"), src.filter(col("x") < 0).groupBy("x").count())
+    empties.foreach { df =>
+      val (c, m) = Materialize.cutCounting(df, lit(true))
+      assert(m == 0 && c.isEmpty)
+    }
+  }
+
   test("every lineage cut in src/main goes through Materialize.cut") {
     // The cut policy (localCheckpoint here, reliable checkpoint where
     // executors can be lost) is decided in one function only while no

@@ -5,21 +5,22 @@ package graft
   * every SparkEntry query's physical plan (the set ScaleBench measures,
   * since it runs `Harness.select`) is built against sf0.001 and
   * must contain no CartesianProduct, and BroadcastNestedLoopJoin only
-  * where a query legitimately broadcasts a 1-row scalar (or runs a
-  * guarded brute-force fallback) — the allowlist below, each entry
+  * where a query legitimately broadcasts a 1-row scalar (or a small
+  * query side, or runs a k-NN fallback) — the allowlist below, each entry
   * justified in the PLANS.md dossier. A new operator that accidentally
   * plans a cross join fails here before any benchmark has to catch it.
   *
   * Plans only — nothing executes beyond the driver-steered control some
-  * operators run while BUILDING their frame (k-means rounds, BPE argmax),
+  * operators run while BUILDING their frame (k-means rounds, BPE argmax,
+  * the q38 snap),
   * which is why this uses the tiny sf0.001 directory. */
 class PlanContractSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
   /** Queries where BroadcastNestedLoopJoin is the intended shape:
-    * 1-row scalar broadcasts (crossJoin of a single aggregate row) or a
-    * guarded brute-force fallback behind an anti-join. */
+    * 1-row scalar broadcasts (crossJoin of a single aggregate row), a
+    * small broadcast query side, or a k-NN fallback branch. */
   private val bnljAllowed: Set[String] = Set(
     "q13_weight_sanity",        // 1-row totals broadcast
     "q23_snap", "q26_dijkstra_reach", "q27_multi_tile_reach", // 1-row snap-radius / bound scalars
@@ -29,7 +30,7 @@ class PlanContractSpec extends SparkSpec {
     "q236_mmr_rerank",          // candidate retrieval IS bruteTopK (the q40 shape)
     "q161_rrf_fusion",          // 20-doc re-rank side broadcast
     "q162_copurchase",          // 1-row basket-count scalar
-    "q38_point_query",          // lat-bound scalar + guarded fallback
+    "q38_point_query",          // Derive.pois' 1-row node-count scalar (the q26 class)
     "q39_accuracy",             // scalar accuracy denominator
     "q54_nodes_near",           // k-NN fallback branch
     "q60_kmeans", "q70_semdedup", "q116_pq_ann", // centroid-array 1-row frames
@@ -83,15 +84,12 @@ class PlanContractSpec extends SparkSpec {
     "q330_bleu_corpus",              // five 1-row piece frames crossJoined (clip/tot/lens scalars)
     "q352_quantile_sketch")          // |q|-row (3) sketch-probe broadcast crossJoined twice (rank bracket + exact lane)
 
-  /** q38's brute-force fallback joins the (empty-whenever-the-grid-
-    * decides) unresolved-points frame against nodes — the initial plan
-    * shows the cartesian even though its left input is empty at runtime;
-    * the guard is the left-anti join above it (PLANS.md q38 section). */
-  private val cartAllowed: Set[String] = Set("q38_point_query",
-    // q240's brute bucket: all-pairs over strings too short for the gram
-    // bound — EMPTY on every realistic name domain (p_names are 20+
-    // chars); the shape exists in the plan, the data never does.
-    "q240_edit_join")
+  /** q240's brute bucket: all-pairs over strings too short for the gram
+    * bound — EMPTY on every realistic name domain (p_names are 20+
+    * chars); the shape exists in the plan, the data never does. (q38's
+    * snap plans its brute-force fallback only when a point is undecided,
+    * and every q38 point is decided, so its plan has no product.) */
+  private val cartAllowed: Set[String] = Set("q240_edit_join")
 
   test("headline query plans: no CartesianProduct; BNLJ only where allowlisted") {
     val failures = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>

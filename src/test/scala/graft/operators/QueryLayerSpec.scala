@@ -17,6 +17,16 @@ class QueryLayerSpec extends SparkSpec {
     assert(got(11L) == -1) // ~45 km away from everything
   }
 
+  test("snapPoints plans the brute-force fallback only when a point is undecided") {
+    def product(pts: Seq[(Long, Double, Double)]): Boolean = {
+      val plan = QueryLayer.snapPoints(pts.toDF("query_id", "lon", "lat"), nodes)
+        .queryExecution.executedPlan.toString
+      plan.contains("NestedLoopJoin") || plan.contains("Cartesian")
+    }
+    assert(!product(Seq((10L, 18.6002, 54.3501))))
+    assert(product(Seq((10L, 18.6002, 54.3501), (11L, 18.0, 54.0))))
+  }
+
   test("snapPoints: bucketed path == brute-force argmin on a dense lattice") {
     // 21×21 node lattice at ~70 m pitch; query points sit at lattice
     // points, cell corners, mid-edges, and far outside — exercising the
@@ -92,11 +102,29 @@ class QueryLayerSpec extends SparkSpec {
     got.zip(want).foreach { case (g, w) => assert(math.abs(g._3 - w._3) < 1e-9) }
   }
 
-  test("snapPoints -> pointQuery: one resolved point runs in at most 9 Spark jobs") {
+  test("snapPoints: one row per point; no coordinate or no node gives -1 and a null distance") {
+    val pts = Seq[(Long, java.lang.Double, java.lang.Double)](
+      (10L, null, null), (11L, 18.6002, null), (12L, 18.6002, 54.3501))
+      .toDF("query_id", "lon", "lat")
+    def snap(n: org.apache.spark.sql.DataFrame): Map[Long, (Int, Option[Double])] =
+      QueryLayer.snapPoints(pts, n).collect()
+        .map(r => r.getLong(0) -> (r.getInt(1), Option(r.getAs[java.lang.Double](2)).map(_.toDouble)))
+        .toMap
+    val got = snap(nodes)
+    assert(got.keySet == Set(10L, 11L, 12L))
+    assert(got(10L) == (-1, None) && got(11L) == (-1, None), got)
+    assert(got(12L)._1 == 0 && got(12L)._2.exists(_ < 300.0), got)
+    val none = snap(nodes.filter(org.apache.spark.sql.functions.lit(false)))
+    assert(none == Map(10L -> (-1, None), 11L -> (-1, None), 12L -> (-1, None)), none)
+  }
+
+  test("snapPoints -> pointQuery: one resolved point runs in at most 7 Spark jobs") {
     // The plan's contract: one equi-join on cell keys and one candidate
-    // aggregate per query. A per-query aggregate over the node table (a
-    // data-derived cell size, an anti-join feeding the fallback) adds
-    // jobs and fails this: the plan that had both ran 13 jobs here.
+    // aggregate per query, cut once; the brute-force fallback is planned
+    // only when the cut counts an undecided point. Re-running the join
+    // and aggregate in a lazily planned fallback branch ran 9 jobs here;
+    // a per-query aggregate over the node table (a data-derived cell
+    // size, an anti-join feeding the fallback) on top of that ran 13.
     val pts = Seq((1L, 18.6002, 54.3501)).toDF("query_id", "lon", "lat")
     val reach = Seq((0, "supermarket", 400.0, 360.0, 7L), (2, "school", 90.0, 81.0, 8L))
       .toDF("node_idx", "category", "dist_m", "time_s", "poi_id")
@@ -105,7 +133,7 @@ class QueryLayerSpec extends SparkSpec {
         .select("query_id", "category").as[(Long, String)].collect().toSeq
     }
     assert(got == Seq((1L, "supermarket")))
-    assert(jobs <= 9, s"$jobs Spark jobs for one point query")
+    assert(jobs <= 7, s"$jobs Spark jobs for one point query")
   }
 
   test("nodesNear: radius branch when matches exist, k-nearest fallback otherwise") {

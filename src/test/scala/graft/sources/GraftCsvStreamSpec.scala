@@ -108,6 +108,28 @@ class GraftCsvStreamSpec extends SparkSpec {
     assert(got.sorted == (0L until 100L), "rate limiting must not lose/replay rows")
   }
 
+  test("a re-planned batch reuses its partitions: each log entry is read once") {
+    import graft.sources.v2.{GraftCsv, GraftCsvMicroBatchStream}
+    val in = java.nio.file.Files.createTempDirectory("gmemo-in").toString
+    val ck = java.nio.file.Files.createTempDirectory("gmemo-ck").toString
+    (0 until 20).map(i => (i.toLong % 4, i.toLong)).toDF("k", "v")
+      .repartition(2).write.format(fmt).mode("append").save(in)
+    val stream = new GraftCsvMicroBatchStream(sch, sch, Array.empty, in, ck, None)
+    val start = stream.initialOffset()
+    val end = stream.latestOffset(start, stream.getDefaultReadLimit)
+    val planned = stream.planInputPartitions(start, end).toSeq
+    assert(planned.size == 2)
+    // the engine plans a batch several times; the second planning of the
+    // same (start, end] must not read the log entry again
+    val entry = java.nio.file.Paths.get(ck, "graft_discovery_log", f"${1L}%020d")
+    java.nio.file.Files.delete(entry)
+    assert(stream.planInputPartitions(start, end).toSeq == planned)
+    assert(stream.metrics(java.util.Optional.empty()).get(GraftCsv.BatchFiles) == "2")
+    // an empty range plans nothing and reports 0 files
+    assert(stream.planInputPartitions(end, end).isEmpty)
+    assert(stream.metrics(java.util.Optional.empty()).get(GraftCsv.BatchFiles) == "0")
+  }
+
   test("discovery-log compaction: snapshot written, replay from it stays exact") {
     val in = java.nio.file.Files.createTempDirectory("gcomp-in").toString
     val ck = java.nio.file.Files.createTempDirectory("gcomp-ck").toString

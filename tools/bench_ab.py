@@ -19,12 +19,15 @@ as long as BENCHMARK.json's `run_seconds`. Pair i uses seed `--seed + i` on
 both sides, and the side that runs first alternates from pair to pair. Per
 metric (the end-to-end metrics of BENCHMARK.json, or the per-layer ones with
 `--trace 1`) it prints each side's median and quartiles, the number of pairs
-the change won (ties count for neither), whether a gain would hold (the
-change wins at least nine tenths of the pairs and the medians differ by more
-than the parent's inter-quartile range) and, for a metric with a bound,
-whether the change's median is worse than the parent's by more than it. A
-failed run is reported and leaves its pair out. Exit code 1 if any run
-failed.
+the change won (ties count for neither), whether a gain would hold (at
+least ten pairs, the change wins at least nine tenths of them and the
+medians differ by more than the parent's inter-quartile range) and, for a
+metric with a bound, whether the change's median is worse than the parent's
+by more than it: `YES` if so, else `unresolved` when the parent's
+inter-quartile range, relative to its median, is wider than the bound and
+not every run of the change reads better than every run of the parent, else
+`no`. A failed run is reported and leaves its pair out. Exit code 1 if any
+run failed.
 """
 import argparse
 import hashlib
@@ -37,6 +40,7 @@ import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SIDES = ("parent", "change")
+MIN_PAIRS = 10  # fewest pairs a gain may rest on
 
 
 def git(*args, binary=False):
@@ -127,7 +131,8 @@ def quartiles(xs):
 
 def summarize(metrics, pairs):
     """Per metric: each side's quartiles, the change's wins, whether a gain
-    holds and whether the change is worse than the metric's bound."""
+    holds and whether the change is worse than the metric's bound (`YES`,
+    `unresolved` or `no`)."""
     rows = []
     for m in metrics:
         ok = [(p[m["name"]], c[m["name"]]) for p, c in pairs
@@ -138,11 +143,20 @@ def summarize(metrics, pairs):
         wins = sum((c < p) if lower else (c > p) for p, c in ok)
         par, chg = quartiles([p for p, _ in ok]), quartiles([c for _, c in ok])
         better = chg[1] < par[1] if lower else chg[1] > par[1]
-        gain = wins >= 0.9 * len(ok) and better and abs(chg[1] - par[1]) > par[2] - par[0]
-        worse = (chg[1] - par[1] if lower else par[1] - chg[1]) / abs(par[1]) if par[1] else 0.0
+        gain = (len(ok) >= MIN_PAIRS and wins >= 0.9 * len(ok) and better
+                and abs(chg[1] - par[1]) > par[2] - par[0])
+        past = "no"
+        if "bound" in m:
+            rel = lambda x: x / abs(par[1]) if par[1] else 0.0
+            worse = rel(chg[1] - par[1] if lower else par[1] - chg[1])
+            cs, ps = [c for _, c in ok], [p for p, _ in ok]
+            dominated = max(cs) < min(ps) if lower else min(cs) > max(ps)
+            if worse > m["bound"]:
+                past = "YES"
+            elif rel(par[2] - par[0]) > m["bound"] and not dominated:
+                past = "unresolved"
         rows.append({"metric": m["name"], "pairs": len(ok), "parent": par, "change": chg,
-                     "wins": wins, "gain": gain,
-                     "past_bound": "bound" in m and worse > m["bound"]})
+                     "wins": wins, "gain": gain, "past_bound": past})
     return rows
 
 
@@ -188,7 +202,9 @@ def main():
     for r in rows:
         print(f"{r['metric']:<36}{fmt(r['parent']):>30}{fmt(r['change']):>30}"
               f"{r['wins']:>4}/{r['pairs']:<2}  {'yes' if r['gain'] else 'no ':<4}  "
-              f"{'YES' if r['past_bound'] else 'no'}")
+              f"{r['past_bound']}")
+    if len(pairs) < MIN_PAIRS:
+        print(f"{len(pairs)} pairs: a gain needs at least {MIN_PAIRS}")
     for log in failed:
         print(f"failed run: {log}")
     sys.exit(1 if failed else 0)
