@@ -43,16 +43,18 @@ object Plans {
         "exchange on doc_id for the 64 bit-sums, then the pigeonhole block " +
         "self-join on (blk, bval) - bucketed, never all-pairs, no window."),
     "q38_point_query" ->
-      ("The snap's candidates arrive through one equi-join on the (cx,cy) " +
-        "degree-grid key (the points side explodes its 3x3 neighborhood) " +
-        "and one min(struct(d2, node_idx, lon, lat)) aggregate, which " +
-        "snapPoints cuts eagerly while counting undecided points on the " +
-        "same job; so the plan below reads the cut (an ExistingRDD scan) " +
-        "on the snapped side. Every q38 point is decided, so no brute-force " +
-        "fallback is planned: the nodes table is never joined against the " +
-        "points without the cell key, and there is no CartesianProduct. " +
-        "The one BroadcastNestedLoopJoin(Cross) is in the reach build: " +
-        "Derive.pois' 1-row node-count broadcast (the q26 class)."),
+      ("snapPoints runs while the frame is built: it collects the points " +
+        "with their 3x3 probe cells, broadcasts them into one equi-join on " +
+        "the (cx,cy) degree-grid key against the nodes, and merges each node " +
+        "partition's nearest candidates on the driver; its brute-force pass " +
+        "(broadcast undecided points x nodes) runs only for an undecided " +
+        "point, and every q38 point is decided. So the snapped side below is " +
+        "a LocalTableScan, and pointQuery filters the reach side to the " +
+        "snapped node keys (node_idx = 7: sf0.001 has one q38 point; more " +
+        "keys make an IN list), which a JDBC reach table takes as its " +
+        "PushedFilters. There is no CartesianProduct; the one " +
+        "BroadcastNestedLoopJoin(Cross) is in the reach build: Derive.pois' " +
+        "1-row node-count broadcast (the q26 class)."),
     "q40_cosine_topk" ->
       ("graft_dot_q appears as a plain codegen expression in the projection; " +
         "the 5-query side broadcasts; per-query top-k is a partitioned window, " +

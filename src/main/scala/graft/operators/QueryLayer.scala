@@ -1,16 +1,20 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-import graft.Materialize
 import graft.functions.GeoFunctions._
 
 /** The user-facing query layer (SURVEY.md §3.3, reference entry point C —
   * poi_query.py): snap a (lon, lat) to its nearest graph node, look the
-  * node up in the precomputed reach table, filter by radius, sort by
-  * distance.
+  * node up in the precomputed reach table, filter by radius (the caller
+  * sorts for display, as q38 does).
   *
   * The reach table is the materialized view the whole design rests on
   * (precompute-then-O(1)-lookup split, reference precompute_poi_reach.py:
@@ -22,6 +26,11 @@ object QueryLayer {
     * over all nodes, exact haversine refine on the winner, −1 beyond
     * `maxSnapM` (reference poi_query.py:21-47 brute-force scan + the
     * cKDTree cutoff variant, test_path.py:262-268).
+    *
+    * Input contract: `points` (query_id, lon, lat) is a query batch the
+    * driver holds — a single point, a client's batch, q38's nodes/300
+    * probes. Its rows, with their probe cells, are collected; bulk
+    * snapping (every POI of a map) is [[SnapJoin.nearestNode]].
     *
     * Scale shape (round-7 SCALECHECK caught the original
     * points × nodes crossJoin at 19.9× on 10× data — 100× candidate
@@ -41,38 +50,35 @@ object QueryLayer {
     * needed — including for points outside the nodes' latitude range,
     * whose probed rows carry their own, wider, widths.
     *
-    * One left-outer equi-join on the cell keys (×9 point fan-out) and
-    * one candidate aggregate per point follow: min(struct(d², node_idx,
-    * lon, lat)), so the winner and its d² come out of one expression with
-    * the deterministic (d², node_idx) tie-break. A point whose candidate
-    * winner has d² ≤ g² is the GLOBAL argmin — every node at d² ≤ g², ties
-    * included, is a candidate. The aggregate is cut eagerly
-    * ([[graft.Materialize.cutCounting]]) and its job counts the points the
-    * neighborhood can't decide (no candidate, or the winner beyond the
-    * guarantee radius — their snap is −1, but the reported snap_dist_m
-    * must still be the true nearest's). Only when that count is above 0 is
-    * the brute-force argmin planned, over those points alone, with the
-    * same candidate expression; otherwise no points × nodes product
-    * exists in the plan. The result is bit-equal to the all-pairs form
-    * (q38's oracle pins it).
+    * Candidate pass: the driver collects the points with their 3×3
+    * probe cells (no job when `points` is a local relation) and
+    * broadcasts them into one equi-join on the cell keys against the
+    * nodes. Each node partition keeps its best (d², node_idx, lon, lat)
+    * per point and the driver merges the partitions' bests — the order
+    * of Spark's min(struct(d², node_idx, lon, lat)), doubles compared
+    * as SQL compares them, so the (d², node_idx) tie-break is
+    * deterministic. A point whose winner has d² ≤ g² holds the GLOBAL
+    * argmin — every node at d² ≤ g², ties included, is a candidate.
+    * A point the neighborhood can't decide (no candidate, or the winner
+    * beyond the guarantee radius — its snap is −1, but the reported
+    * snap_dist_m must still be the true nearest's) goes to one more
+    * merge of the same shape over broadcast(undecided points) × nodes;
+    * that pass runs only when such a point exists, so a decided batch
+    * makes one pass over the nodes and no points × nodes product. The
+    * result is bit-equal to the all-pairs form (q38's oracle pins it).
     *
-    * The call is eager: it runs the cut, and the returned frame reads the
-    * small materialized snap, which AQE can broadcast into a later join
-    * (pointQuery's reach lookup).
-    *
-    * Every input point yields exactly one row. A point with a null
-    * coordinate, or any point when no node has coordinates, gets
-    * node_idx −1 and a null snap_dist_m.
-    *
-    * `points` must have (query_id, lon, lat). */
+    * The call is eager and returns a local relation: one row per
+    * distinct (query_id, lon, lat) — duplicate input rows, and copies
+    * of a point that differ only in the sign of a zero coordinate (or
+    * in a NaN's bits), collapse to one row, as a SQL GROUP BY on those
+    * three columns does. A point with a null coordinate, or any point
+    * when no node has coordinates, gets node_idx −1 and a null
+    * snap_dist_m. */
   def snapPoints(points: DataFrame, nodes: DataFrame,
                  maxSnapM: Double = 300.0): DataFrame = {
+    val spark = points.sparkSession
     val pts = points.select(col("query_id"), col("lon").as("q_lon"), col("lat").as("q_lat"))
     val nodeCols = Seq(col("node_idx"), col("lon"), col("lat"))
-    val d2 = equirectDist2(col("q_lon"), col("q_lat"), col("lon"), col("lat"))
-    // a row without a distance (unmatched left-outer row, null coordinate)
-    // is no candidate: min skips a null struct
-    val pick = min(when(d2.isNotNull, struct(d2.as("d2") +: nodeCols: _*))).as("nn")
     val g = maxSnapM / R_QUERY_M // guarantee radius in equirect radians
     val aDeg = math.toDegrees(g) // row height, degrees
     def row(lat: Column): Column = floor(lat / lit(aDeg)).cast("long")
@@ -82,43 +88,123 @@ object QueryLayer {
     }
     val nx = nodes.select(nodeCols :+ row(col("lat")).as("cy"): _*)
       .withColumn("cx", floor(col("lon") / width(col("cy"))).cast("long"))
-    val neighbors = array((-1 to 1).map(lit): _*)
-    val rep = pts
-      .withColumn("dy", explode(neighbors))
-      .withColumn("cy", row(col("q_lat")) + col("dy"))
-      .withColumn("dx", explode(neighbors))
-      .select(col("query_id"), col("q_lon"), col("q_lat"), col("cy"),
-        (floor(col("q_lon") / width(col("cy"))).cast("long") + col("dx")).as("cx"))
-    val undecided = col("q_lon").isNotNull && col("q_lat").isNotNull &&
-      (col("nn").isNull || col("nn.d2") > lit(g * g))
-    val (nn, nUndecided) = Materialize.cutCounting(
-      rep.join(nx, Seq("cx", "cy"), "left_outer")
-        .groupBy("query_id", "q_lon", "q_lat").agg(pick),
-      undecided)
-    val snapped =
-      if (nUndecided == 0) nn
-      else nn.filter(!undecided).unionByName(nn.filter(undecided)
-        .select("query_id", "q_lon", "q_lat")
-        // left outer, so a point survives an empty node table
-        .join(nodes.select(nodeCols: _*), lit(true), "left_outer")
-        .groupBy("query_id", "q_lon", "q_lat").agg(pick))
-    snapped
+    // a point's three probed rows, each with the point's cell under the
+    // row's width; the cells either side of it are probed too
+    val probes = array((-1 to 1).map { dy =>
+      val cy = row(col("q_lat")) + dy
+      struct(cy.as("cy"), floor(col("q_lon") / width(cy)).cast("long").as("cx"))
+    }: _*)
+    // distinct points (GROUP BY keys) in input order, each with its cells
+    // (copies of one key probe the same cells)
+    val byKey = mutable.LinkedHashMap.empty[Seq[Any], (Seq[Any], Seq[Row])]
+    pts.select(col("*"), probes).collect().foreach { r =>
+      val key = Seq(r.get(0), r.get(1), r.get(2)).map(groupKey)
+      byKey.getOrElseUpdate(key.map(hashable), (key, r.getSeq[Row](3)))
+    }
+    val keys = byKey.values.map(_._1).toIndexedSeq
+    val ptType = StructType(pts.schema.fields.tail.map(_.copy(nullable = true)))
+    def local(rows: Seq[Row], cols: StructType): DataFrame =
+      spark.createDataFrame(rows.asJava, StructType(StructField("pid", IntegerType) +: cols.fields))
+    val cellType = StructType(Seq(StructField("cy", LongType), StructField("cx", LongType)))
+    val cells = local(byKey.values.map(_._2).zipWithIndex.toSeq.flatMap { case (cs, pid) =>
+      for { c <- cs if !c.isNullAt(0) && !c.isNullAt(1); dx <- -1 to 1 }
+        yield Row(pid, keys(pid)(1), keys(pid)(2), c.getLong(0), c.getLong(1) + dx)
+    }, StructType(ptType.fields ++ cellType.fields))
+    val near = nearest(broadcast(cells).join(nx, Seq("cx", "cy")))
+    val gg = g * g
+    val undecided = keys.indices.filter { pid =>
+      keys(pid)(1) != null && keys(pid)(2) != null &&
+        near.get(pid).forall(c => SQLOrderingUtil.compareDoubles(c.d2, gg) > 0)
+    }
+    val snapped = if (undecided.isEmpty) near else near ++ nearest(
+      broadcast(local(undecided.map(pid => Row(pid, keys(pid)(1), keys(pid)(2))), ptType))
+        .crossJoin(nodes.select(nodeCols: _*)))
+    val nodeType = nodes.select(nodeCols: _*).schema.fields.map(_.copy(nullable = true))
+    val nnType = StructType(StructField("d2", DoubleType) +: nodeType)
+    val out = spark.createDataFrame(keys.indices.map { pid =>
+      Row(keys(pid) :+ snapped.get(pid).map(c => Row(c.d2, c.node, c.lon, c.lat)).orNull: _*)
+    }.asJava, StructType(pts.schema.fields.map(_.copy(nullable = true)) :+ StructField("nn", nnType)))
       .withColumn("snap_dist_m",
         haversineM(col("q_lon"), col("q_lat"), col("nn.lon"), col("nn.lat")))
       .select(col("query_id"),
         when(col("snap_dist_m") <= maxSnapM, col("nn.node_idx")).otherwise(lit(-1)).as("node_idx"),
         col("snap_dist_m"))
+    // a projection of a local relation: collected without a job
+    spark.createDataFrame(out.collect().toSeq.asJava, out.schema)
+  }
+
+  /** One candidate: a node's d² to a point and the node's columns. */
+  private case class Cand(d2: Double, node: Any, lon: Any, lat: Any)
+
+  /** A value as a SQL GROUP BY key sees it: −0.0 is 0.0, every NaN one NaN. */
+  private def groupKey(v: Any): Any = v match {
+    case d: Double => if (d.isNaN) Double.NaN else d + 0.0
+    case f: Float => if (f.isNaN) Float.NaN else f + 0.0f
+    case other => other
+  }
+
+  /** A [[groupKey]] value as a hash key: Scala's == has NaN ≠ NaN. */
+  private def hashable(v: Any): Any = v match {
+    case d: Double => java.lang.Double.doubleToLongBits(d)
+    case f: Float => java.lang.Float.floatToIntBits(f)
+    case other => other
+  }
+
+  /** SQL ascending order of one struct field: null first, doubles and
+    * floats by [[SQLOrderingUtil]] (NaN last, −0.0 = 0.0). */
+  private def sqlCompare(a: Any, b: Any): Int = (a, b) match {
+    case (null, null) => 0
+    case (null, _) => -1
+    case (_, null) => 1
+    case (x: Double, y: Double) => SQLOrderingUtil.compareDoubles(x, y)
+    case (x: Float, y: Float) => SQLOrderingUtil.compareFloats(x, y)
+    case (x: Comparable[Any @unchecked], y) => x.compareTo(y)
+  }
+
+  /** min(struct(d², node_idx, lon, lat))'s order. */
+  private val byCand: Ordering[Cand] = (a, b) => {
+    val d = SQLOrderingUtil.compareDoubles(a.d2, b.d2)
+    if (d != 0) d
+    else Iterator((a.node, b.node), (a.lon, b.lon), (a.lat, b.lat))
+      .map { case (x, y) => sqlCompare(x, y) }.find(_ != 0).getOrElse(0)
+  }
+
+  /** Per point id, the least candidate of `pairs` (pid, q_lon, q_lat +
+    * a node's columns): each partition keeps its best per point, the
+    * driver merges them. A row without a d² (a null coordinate) is no
+    * candidate, as min skips a null struct. */
+  private def nearest(pairs: DataFrame): Map[Int, Cand] = {
+    val d2 = equirectDist2(col("q_lon"), col("q_lat"), col("lon"), col("lat"))
+    pairs.select(col("pid"), d2.as("d2"), col("node_idx"), col("lon"), col("lat"))
+      .filter(col("d2").isNotNull)
+      .rdd.mapPartitions { rows =>
+        val best = mutable.HashMap.empty[Int, Cand]
+        rows.foreach { r =>
+          val c = Cand(r.getDouble(1), r.get(2), r.get(3), r.get(4))
+          if (best.get(r.getInt(0)).forall(byCand.gt(_, c))) best(r.getInt(0)) = c
+        }
+        best.iterator
+      }.collect()
+      .groupMapReduce(_._1)(_._2)(byCand.min)
   }
 
   /** P7 + W6 + U4: per-category reach lookup for snapped query points.
     * Returns only rows within `radiusM` (the in-range split; out-of-range =
-    * anti-join recoverable downstream), sorted for display (S15 analog). */
-  def pointQuery(snapped: DataFrame, reach: DataFrame, radiusM: Double): DataFrame =
-    snapped
-      .filter(col("node_idx") >= 0)
-      .join(reach, Seq("node_idx"))
+    * anti-join recoverable downstream), in no particular order. The
+    * snapped node keys are collected (no job for a local `snapped`, such
+    * as [[snapPoints]]' result) and the reach frame is filtered to them
+    * with `isin`, so a JDBC reach table is read as `WHERE node_idx IN
+    * (…)` — the precompute-then-O(1)-lookup of reference poi_query.py —
+    * and an empty key list folds to an empty relation. */
+  def pointQuery(snapped: DataFrame, reach: DataFrame, radiusM: Double): DataFrame = {
+    val hit = snapped.filter(col("node_idx") >= 0)
+    val keyType = reach.schema("node_idx").dataType
+    val keys = hit.select("node_idx").collect().map(_.get(0)).distinct
+    hit.join(reach.filter(col("node_idx").isin(keys.map(lit(_).cast(keyType)).toSeq: _*)),
+        Seq("node_idx"))
       .filter(col("dist_m") <= radiusM)
       .select(col("query_id"), col("category"), col("dist_m"), col("time_s"), col("poi_id"))
+  }
 
   /** P8: distance-window node filter with k-nearest fallback — keep nodes
     * within `radiusM` of the center; if NONE qualify, fall back to the k

@@ -87,8 +87,9 @@ class PlanContractSpec extends SparkSpec {
   /** q240's brute bucket: all-pairs over strings too short for the gram
     * bound — EMPTY on every realistic name domain (p_names are 20+
     * chars); the shape exists in the plan, the data never does. (q38's
-    * snap plans its brute-force fallback only when a point is undecided,
-    * and every q38 point is decided, so its plan has no product.) */
+    * snap runs its passes, the brute-force one only for an undecided
+    * point, while its frame is built, so its plan holds the snap as a
+    * local relation; QueryLayerSpec proves that rule.) */
   private val cartAllowed: Set[String] = Set("q240_edit_join")
 
   test("headline query plans: no CartesianProduct; BNLJ only where allowlisted") {

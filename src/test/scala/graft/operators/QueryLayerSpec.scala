@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.sources.Sinks
 
 class QueryLayerSpec extends SparkSpec {
   import spark.implicits._
@@ -18,13 +19,23 @@ class QueryLayerSpec extends SparkSpec {
   }
 
   test("snapPoints plans the brute-force fallback only when a point is undecided") {
-    def product(pts: Seq[(Long, Double, Double)]): Boolean = {
-      val plan = QueryLayer.snapPoints(pts.toDF("query_id", "lon", "lat"), nodes)
-        .queryExecution.executedPlan.toString
-      plan.contains("NestedLoopJoin") || plan.contains("Cartesian")
+    // every node row the snap reads is counted: a decided batch makes one
+    // pass over the nodes (the cell join), a far point one more (the
+    // product of the undecided points alone with the nodes); each pass is
+    // two jobs, the broadcast of its local point side and the pass
+    val read = spark.sparkContext.longAccumulator("nodes read")
+    val counted = nodes.as[(Int, Double, Double)].map { n => read.add(1); n }
+      .toDF("node_idx", "lon", "lat")
+    def passes(pts: Seq[(Long, Double, Double)]): (Long, Int) = {
+      read.reset()
+      val (_, jobs) = countingJobs(QueryLayer.snapPoints(pts.toDF("query_id", "lon", "lat"), counted))
+      (read.sum / nodes.count(), jobs)
     }
-    assert(!product(Seq((10L, 18.6002, 54.3501))))
-    assert(product(Seq((10L, 18.6002, 54.3501), (11L, 18.0, 54.0))))
+    val decided = Seq((10L, 18.6002, 54.3501), (12L, 18.7001, 54.4001))
+    val (p1, j1) = passes(decided)
+    val (p2, j2) = passes(decided :+ ((11L, 18.0, 54.0)))
+    assert(p1 == 1 && p2 == 2, s"node passes: decided $p1, with a far point $p2")
+    assert(j1 == 2 && j2 == 4, s"jobs: decided $j1, with a far point $j2")
   }
 
   test("snapPoints: bucketed path == brute-force argmin on a dense lattice") {
@@ -102,29 +113,38 @@ class QueryLayerSpec extends SparkSpec {
     got.zip(want).foreach { case (g, w) => assert(math.abs(g._3 - w._3) < 1e-9) }
   }
 
-  test("snapPoints: one row per point; no coordinate or no node gives -1 and a null distance") {
+  test("snapPoints: one row per distinct point; no coordinate or no node gives -1 and a null distance") {
+    // 12 is given twice and 13 as both -0.0 and 0.0: one row each, as a
+    // GROUP BY (query_id, lon, lat) gives
     val pts = Seq[(Long, java.lang.Double, java.lang.Double)](
-      (10L, null, null), (11L, 18.6002, null), (12L, 18.6002, 54.3501))
+      (10L, null, null), (11L, 18.6002, null), (12L, 18.6002, 54.3501), (12L, 18.6002, 54.3501),
+      (13L, -0.0, 54.35), (13L, 0.0, 54.35))
       .toDF("query_id", "lon", "lat")
-    def snap(n: org.apache.spark.sql.DataFrame): Map[Long, (Int, Option[Double])] =
-      QueryLayer.snapPoints(pts, n).collect()
+    def snap(n: org.apache.spark.sql.DataFrame): Map[Long, (Int, Option[Double])] = {
+      val rows = QueryLayer.snapPoints(pts, n).collect()
         .map(r => r.getLong(0) -> (r.getInt(1), Option(r.getAs[java.lang.Double](2)).map(_.toDouble)))
-        .toMap
+      assert(rows.length == 4, rows.toSeq)
+      rows.toMap
+    }
     val got = snap(nodes)
-    assert(got.keySet == Set(10L, 11L, 12L))
+    assert(got.keySet == Set(10L, 11L, 12L, 13L))
     assert(got(10L) == (-1, None) && got(11L) == (-1, None), got)
     assert(got(12L)._1 == 0 && got(12L)._2.exists(_ < 300.0), got)
+    assert(got(13L)._1 == -1 && got(13L)._2.exists(_ > 300.0), got)
     val none = snap(nodes.filter(org.apache.spark.sql.functions.lit(false)))
-    assert(none == Map(10L -> (-1, None), 11L -> (-1, None), 12L -> (-1, None)), none)
+    assert(none == Map(10L -> (-1, None), 11L -> (-1, None), 12L -> (-1, None), 13L -> (-1, None)), none)
   }
 
-  test("snapPoints -> pointQuery: one resolved point runs in at most 7 Spark jobs") {
-    // The plan's contract: one equi-join on cell keys and one candidate
-    // aggregate per query, cut once; the brute-force fallback is planned
-    // only when the cut counts an undecided point. Re-running the join
-    // and aggregate in a lazily planned fallback branch ran 9 jobs here;
-    // a per-query aggregate over the node table (a data-derived cell
-    // size, an anti-join feeding the fallback) on top of that ran 13.
+  test("snapPoints -> pointQuery: one resolved point runs in at most 5 Spark jobs") {
+    // The plan's contract: one pass over the nodes per query (the
+    // broadcast of the local probe cells and the cell join), merged on
+    // the driver; the brute-force pass runs only for an undecided point,
+    // and the reach side is read for the snapped keys alone. With this
+    // session's broadcast threshold off, the reach join is a sort-merge
+    // join over two shuffles. Cutting a candidate aggregate ran 7 jobs
+    // here; re-running the join and aggregate in a lazily planned
+    // fallback branch ran 9, and a per-query aggregate over the node
+    // table on top of that 13.
     val pts = Seq((1L, 18.6002, 54.3501)).toDF("query_id", "lon", "lat")
     val reach = Seq((0, "supermarket", 400.0, 360.0, 7L), (2, "school", 90.0, 81.0, 8L))
       .toDF("node_idx", "category", "dist_m", "time_s", "poi_id")
@@ -133,7 +153,34 @@ class QueryLayerSpec extends SparkSpec {
         .select("query_id", "category").as[(Long, String)].collect().toSeq
     }
     assert(got == Seq((1L, "supermarket")))
-    assert(jobs <= 7, s"$jobs Spark jobs for one point query")
+    assert(jobs <= 5, s"$jobs Spark jobs for one point query")
+  }
+
+  test("pointQuery reads only the snapped nodes' reach rows from JDBC") {
+    val url = "jdbc:derby:memory:querylayerspec;create=true"
+    Sinks.writeJdbc(Seq((0, "supermarket", 400.0, 360.0, 7L), (1, "school", 90.0, 81.0, 8L),
+      (2, "school", 300.0, 270.0, 9L)).toDF("node_idx", "category", "dist_m", "time_s", "poi_id"),
+      url, "reach")
+    def snap(pts: Seq[(Long, Double, Double)]): org.apache.spark.sql.DataFrame =
+      QueryLayer.snapPoints(pts.toDF("query_id", "lon", "lat"), nodes)
+    def keyed(snapped: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+      QueryLayer.pointQuery(snapped, Sinks.readJdbc(spark, url, "reach"), radiusM = 1000.0)
+    def query(pts: Seq[(Long, Double, Double)]): org.apache.spark.sql.DataFrame = keyed(snap(pts))
+    def pushed(df: org.apache.spark.sql.DataFrame): String = {
+      val plan = df.queryExecution.executedPlan.toString
+      plan.linesIterator.find(_.contains("PushedFilters")).getOrElse(fail(plan))
+    }
+    val one = query(Seq((1L, 18.6002, 54.3501)))
+    assert(pushed(one).contains("EqualTo(node_idx,0)"), pushed(one))
+    assert(one.select("query_id", "poi_id").as[(Long, Long)].collect().toSeq == Seq((1L, 7L)))
+    val batch = query(Seq((1L, 18.6002, 54.3501), (2L, 18.7001, 54.4001), (3L, 18.0, 54.0)))
+    assert(pushed(batch).contains("In(node_idx, [0,2])"), pushed(batch))
+    assert(batch.select("query_id", "poi_id").as[(Long, Long)].collect().toSet == Set((1L, 7L), (2L, 9L)))
+    // the keys of a local snap are collected without a job, and no key
+    // leaves no reach scan
+    val far = snap(Seq((1L, 18.0, 54.0), (2L, 19.5, 55.0)))
+    val (rows, jobs) = countingJobs(keyed(far).collect())
+    assert(rows.isEmpty && jobs == 0, s"${rows.length} rows, $jobs jobs")
   }
 
   test("nodesNear: radius branch when matches exist, k-nearest fallback otherwise") {
