@@ -44,15 +44,19 @@ object Plans {
         "self-join on (blk, bval) - bucketed, never all-pairs, no window."),
     "q38_point_query" ->
       ("snapPoints runs while the frame is built: it collects the points " +
-        "with their 3x3 probe cells, broadcasts them into one equi-join on " +
-        "the (cx,cy) degree-grid key against the nodes, and merges each node " +
-        "partition's nearest candidates on the driver; its brute-force pass " +
-        "(broadcast undecided points x nodes) runs only for an undecided " +
-        "point, and every q38 point is decided. So the snapped side below is " +
-        "a LocalTableScan, and pointQuery filters the reach side to the " +
-        "snapped node keys (node_idx = 7: sf0.001 has one q38 point; more " +
-        "keys make an IN list), which a JDBC reach table takes as its " +
-        "PushedFilters. There is no CartesianProduct; the one " +
+        "with their 3x3 probe cells and hands them to the executors as a " +
+        "literal map, (cy,cx) degree-grid cell -> the points probing it; " +
+        "each node row looks its own cell up and explodes what it finds, " +
+        "and the driver merges each node partition's nearest candidates. " +
+        "Its brute-force pass (each node exploding a literal array of the " +
+        "undecided points) runs only for an undecided point, and every q38 " +
+        "point is decided. pointQuery collects the snapped keys with their " +
+        "query ids: the reach side is filtered to those keys (node_idx = 7: " +
+        "sf0.001 has one q38 point; more keys make an IN list), which a JDBC " +
+        "reach table takes as its PushedFilters, and each reach row left " +
+        "explodes its query ids from a literal map node_idx -> ids (the " +
+        "Generate above that Filter), so the snapped side is neither joined nor " +
+        "broadcast. There is no CartesianProduct; the one " +
         "BroadcastNestedLoopJoin(Cross) is in the reach build: Derive.pois' " +
         "1-row node-count broadcast (the q26 class)."),
     "q40_cosine_topk" ->

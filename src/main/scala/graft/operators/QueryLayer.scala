@@ -51,21 +51,21 @@ object QueryLayer {
     * whose probed rows carry their own, wider, widths.
     *
     * Candidate pass: the driver collects the points with their 3×3
-    * probe cells (no job when `points` is a local relation) and
-    * broadcasts them into one equi-join on the cell keys against the
-    * nodes. Each node partition keeps its best (d², node_idx, lon, lat)
-    * per point and the driver merges the partitions' bests — the order
-    * of Spark's min(struct(d², node_idx, lon, lat)), doubles compared
-    * as SQL compares them, so the (d², node_idx) tie-break is
-    * deterministic. A point whose winner has d² ≤ g² holds the GLOBAL
-    * argmin — every node at d² ≤ g², ties included, is a candidate.
-    * A point the neighborhood can't decide (no candidate, or the winner
-    * beyond the guarantee radius — its snap is −1, but the reported
-    * snap_dist_m must still be the true nearest's) goes to one more
-    * merge of the same shape over broadcast(undecided points) × nodes;
-    * that pass runs only when such a point exists, so a decided batch
-    * makes one pass over the nodes and no points × nodes product. The
-    * result is bit-equal to the all-pairs form (q38's oracle pins it).
+    * probe cells (no job when `points` is a local relation) and hands
+    * them to the executors as a literal map, cell → the points (id,
+    * q_lon, q_lat) probing it; each node row looks its own cell up and
+    * explodes what it finds: one job, no join, no broadcast. Each node
+    * partition keeps its best (d², node_idx, lon, lat) per point and the
+    * driver merges the partitions' bests — the order of Spark's
+    * min(struct(d², node_idx, lon, lat)), doubles compared as SQL
+    * compares them, so the (d², node_idx) tie-break is deterministic. A
+    * point whose winner has d² ≤ g² holds the GLOBAL argmin — every node
+    * at d² ≤ g², ties included, is a candidate. A point the neighborhood
+    * can't decide (no candidate, or the winner beyond the guarantee
+    * radius — its snap is −1, but the reported snap_dist_m must still be
+    * the true nearest's) goes to one more pass over a literal array of
+    * the undecided points, run only when such a point exists. The result
+    * is bit-equal to the all-pairs form (q38's oracle pins it).
     *
     * The call is eager and returns a local relation: one row per
     * distinct (query_id, lon, lat) — duplicate input rows, and copies
@@ -95,30 +95,23 @@ object QueryLayer {
       struct(cy.as("cy"), floor(col("q_lon") / width(cy)).cast("long").as("cx"))
     }: _*)
     // distinct points (GROUP BY keys) in input order, each with its cells
-    // (copies of one key probe the same cells)
-    val byKey = mutable.LinkedHashMap.empty[Seq[Any], (Seq[Any], Seq[Row])]
-    pts.select(col("*"), probes).collect().foreach { r =>
-      val key = Seq(r.get(0), r.get(1), r.get(2)).map(groupKey)
-      byKey.getOrElseUpdate(key.map(hashable), (key, r.getSeq[Row](3)))
-    }
-    val keys = byKey.values.map(_._1).toIndexedSeq
-    val ptType = StructType(pts.schema.fields.tail.map(_.copy(nullable = true)))
-    def local(rows: Seq[Row], cols: StructType): DataFrame =
-      spark.createDataFrame(rows.asJava, StructType(StructField("pid", IntegerType) +: cols.fields))
-    val cellType = StructType(Seq(StructField("cy", LongType), StructField("cx", LongType)))
-    val cells = local(byKey.values.map(_._2).zipWithIndex.toSeq.flatMap { case (cs, pid) =>
-      for { c <- cs if !c.isNullAt(0) && !c.isNullAt(1); dx <- -1 to 1 }
-        yield Row(pid, keys(pid)(1), keys(pid)(2), c.getLong(0), c.getLong(1) + dx)
-    }, StructType(ptType.fields ++ cellType.fields))
-    val near = nearest(broadcast(cells).join(nx, Seq("cx", "cy")))
-    val gg = g * g
-    val undecided = keys.indices.filter { pid =>
-      keys(pid)(1) != null && keys(pid)(2) != null &&
-        near.get(pid).forall(c => SQLOrderingUtil.compareDoubles(c.d2, gg) > 0)
-    }
-    val snapped = if (undecided.isEmpty) near else near ++ nearest(
-      broadcast(local(undecided.map(pid => Row(pid, keys(pid)(1), keys(pid)(2))), ptType))
-        .crossJoin(nodes.select(nodeCols: _*)))
+    // and, if it has both coordinates, its probe (copies probe as one)
+    val byKey = mutable.LinkedHashMap.empty[Seq[Any], (Seq[Any], Option[Probe], Seq[Row])]
+    pts.select(col("*"), col("q_lon").cast("double"), col("q_lat").cast("double"), probes)
+      .collect().foreach { r =>
+        val key = Seq(r.get(0), r.get(1), r.get(2)).map(groupKey)
+        def at = Option.when(!r.isNullAt(3) && !r.isNullAt(4))(
+          Probe(byKey.size, r.getDouble(3), r.getDouble(4)))
+        byKey.getOrElseUpdate(key.map(hashable), (key, at, r.getSeq[Row](5)))
+      }
+    val (keys, at, cells) = byKey.values.toIndexedSeq.unzip3
+    val byCell = at.zip(cells).flatMap { case (p, cs) =>
+      for { q <- p.toSeq; c <- cs; dx <- -1 to 1 } yield Cell(c.getLong(0), c.getLong(1) + dx) -> q
+    }.groupMap(_._1)(_._2)
+    val near = nearest(nx, element_at(typedLit(byCell), struct(col("cy"), col("cx"))))
+    val undecided = at.flatten.filter(p =>
+      near.get(p.pid).forall(c => SQLOrderingUtil.compareDoubles(c.d2, g * g) > 0))
+    val snapped = if (undecided.isEmpty) near else near ++ nearest(nx, typedLit(undecided))
     val nodeType = nodes.select(nodeCols: _*).schema.fields.map(_.copy(nullable = true))
     val nnType = StructType(StructField("d2", DoubleType) +: nodeType)
     val out = spark.createDataFrame(keys.indices.map { pid =>
@@ -132,6 +125,10 @@ object QueryLayer {
     // a projection of a local relation: collected without a job
     spark.createDataFrame(out.collect().toSeq.asJava, out.schema)
   }
+
+  /** A query point as a pass over the nodes reads it, and a grid cell. */
+  private case class Probe(pid: Int, q_lon: Double, q_lat: Double)
+  private case class Cell(cy: Long, cx: Long)
 
   /** One candidate: a node's d² to a point and the node's columns. */
   private case class Cand(d2: Double, node: Any, lon: Any, lat: Any)
@@ -169,13 +166,14 @@ object QueryLayer {
       .map { case (x, y) => sqlCompare(x, y) }.find(_ != 0).getOrElse(0)
   }
 
-  /** Per point id, the least candidate of `pairs` (pid, q_lon, q_lat +
-    * a node's columns): each partition keeps its best per point, the
+  /** Per point id, the least candidate among the points each node row
+    * explodes from `probed`: each partition keeps its best per point, the
     * driver merges them. A row without a d² (a null coordinate) is no
     * candidate, as min skips a null struct. */
-  private def nearest(pairs: DataFrame): Map[Int, Cand] = {
-    val d2 = equirectDist2(col("q_lon"), col("q_lat"), col("lon"), col("lat"))
-    pairs.select(col("pid"), d2.as("d2"), col("node_idx"), col("lon"), col("lat"))
+  private def nearest(nodes: DataFrame, probed: Column): Map[Int, Cand] = {
+    val d2 = equirectDist2(col("p.q_lon"), col("p.q_lat"), col("lon"), col("lat"))
+    nodes.select(col("node_idx"), col("lon"), col("lat"), explode(probed).as("p"))
+      .select(col("p.pid"), d2.as("d2"), col("node_idx"), col("lon"), col("lat"))
       .filter(col("d2").isNotNull)
       .rdd.mapPartitions { rows =>
         val best = mutable.HashMap.empty[Int, Cand]
@@ -188,22 +186,24 @@ object QueryLayer {
       .groupMapReduce(_._1)(_._2)(byCand.min)
   }
 
-  /** P7 + W6 + U4: per-category reach lookup for snapped query points.
-    * Returns only rows within `radiusM` (the in-range split; out-of-range =
-    * anti-join recoverable downstream), in no particular order. The
-    * snapped node keys are collected (no job for a local `snapped`, such
-    * as [[snapPoints]]' result) and the reach frame is filtered to them
-    * with `isin`, so a JDBC reach table is read as `WHERE node_idx IN
-    * (…)` — the precompute-then-O(1)-lookup of reference poi_query.py —
-    * and an empty key list folds to an empty relation. */
+  /** P7 + W6 + U4: per-category reach lookup for snapped query points:
+    * the equi-join of `snapped` and `reach` on node_idx, rows within
+    * `radiusM` only (out-of-range = anti-join recoverable downstream), in
+    * no particular order. The snapped keys and their query ids are
+    * collected (no job for a local `snapped`, as [[snapPoints]] gives);
+    * reach is filtered to the keys with `isin` — read from JDBC as `WHERE
+    * node_idx IN (…)`, the O(1) lookup of reference poi_query.py; no key,
+    * no scan — and each row left explodes its ids from a literal map. */
   def pointQuery(snapped: DataFrame, reach: DataFrame, radiusM: Double): DataFrame = {
-    val hit = snapped.filter(col("node_idx") >= 0)
-    val keyType = reach.schema("node_idx").dataType
-    val keys = hit.select("node_idx").collect().map(_.get(0)).distinct
-    hit.join(reach.filter(col("node_idx").isin(keys.map(lit(_).cast(keyType)).toSeq: _*)),
-        Seq("node_idx"))
-      .filter(col("dist_m") <= radiusM)
-      .select(col("query_id"), col("category"), col("dist_m"), col("time_s"), col("poi_id"))
+    val (keyType, idType) = (reach.schema("node_idx").dataType, snapped.schema("query_id").dataType)
+    val pairs = snapped.filter(col("node_idx") >= 0)
+      .select(col("node_idx").cast(keyType), col("query_id")).collect().map(r => (r.get(0), r.get(1)))
+    val keys = pairs.map(_._1).distinct.toSeq
+    val byNode = map(pairs.groupMap(_._1)(_._2).toSeq.flatMap { case (k, ids) =>
+      Seq(lit(k), array(ids.toSeq.map(lit): _*)) }: _*).cast(MapType(keyType, ArrayType(idType)))
+    reach.filter(col("node_idx").isin(keys: _*) && col("dist_m") <= radiusM)
+      .select(explode(element_at(byNode, col("node_idx"))).as("query_id"),
+        col("category"), col("dist_m"), col("time_s"), col("poi_id"))
   }
 
   /** P8: distance-window node filter with k-nearest fallback — keep nodes

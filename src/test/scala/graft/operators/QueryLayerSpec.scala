@@ -20,9 +20,10 @@ class QueryLayerSpec extends SparkSpec {
 
   test("snapPoints plans the brute-force fallback only when a point is undecided") {
     // every node row the snap reads is counted: a decided batch makes one
-    // pass over the nodes (the cell join), a far point one more (the
-    // product of the undecided points alone with the nodes); each pass is
-    // two jobs, the broadcast of its local point side and the pass
+    // pass over the nodes (each node looks its cell up in the literal cell
+    // map), a far point one more (each node explodes the literal array of
+    // the undecided points); each pass is one job, the points ride in the
+    // plan as literals with no broadcast of their own
     val read = spark.sparkContext.longAccumulator("nodes read")
     val counted = nodes.as[(Int, Double, Double)].map { n => read.add(1); n }
       .toDF("node_idx", "lon", "lat")
@@ -35,7 +36,7 @@ class QueryLayerSpec extends SparkSpec {
     val (p1, j1) = passes(decided)
     val (p2, j2) = passes(decided :+ ((11L, 18.0, 54.0)))
     assert(p1 == 1 && p2 == 2, s"node passes: decided $p1, with a far point $p2")
-    assert(j1 == 2 && j2 == 4, s"jobs: decided $j1, with a far point $j2")
+    assert(j1 == 1 && j2 == 2, s"jobs: decided $j1, with a far point $j2")
   }
 
   test("snapPoints: bucketed path == brute-force argmin on a dense lattice") {
@@ -135,16 +136,16 @@ class QueryLayerSpec extends SparkSpec {
     assert(none == Map(10L -> (-1, None), 11L -> (-1, None), 12L -> (-1, None), 13L -> (-1, None)), none)
   }
 
-  test("snapPoints -> pointQuery: one resolved point runs in at most 5 Spark jobs") {
-    // The plan's contract: one pass over the nodes per query (the
-    // broadcast of the local probe cells and the cell join), merged on
-    // the driver; the brute-force pass runs only for an undecided point,
-    // and the reach side is read for the snapped keys alone. With this
-    // session's broadcast threshold off, the reach join is a sort-merge
-    // join over two shuffles. Cutting a candidate aggregate ran 7 jobs
-    // here; re-running the join and aggregate in a lazily planned
-    // fallback branch ran 9, and a per-query aggregate over the node
-    // table on top of that 13.
+  test("snapPoints -> pointQuery: one resolved point runs in at most 2 Spark jobs") {
+    // The plan's contract: one pass over the nodes per query, the probe
+    // cells a literal map each node row looks its cell up in, merged on
+    // the driver; the brute-force pass runs only for an undecided point;
+    // the reach side is read for the snapped keys alone, and each reach
+    // row explodes its query ids from a literal map. Broadcasting the
+    // local probe cells and the snapped side of a reach join ran 4 jobs
+    // here; cutting a candidate aggregate 7; re-running the join and
+    // aggregate in a lazily planned fallback branch 9, and a per-query
+    // aggregate over the node table on top of that 13.
     val pts = Seq((1L, 18.6002, 54.3501)).toDF("query_id", "lon", "lat")
     val reach = Seq((0, "supermarket", 400.0, 360.0, 7L), (2, "school", 90.0, 81.0, 8L))
       .toDF("node_idx", "category", "dist_m", "time_s", "poi_id")
@@ -153,7 +154,7 @@ class QueryLayerSpec extends SparkSpec {
         .select("query_id", "category").as[(Long, String)].collect().toSeq
     }
     assert(got == Seq((1L, "supermarket")))
-    assert(jobs <= 5, s"$jobs Spark jobs for one point query")
+    assert(jobs <= 2, s"$jobs Spark jobs for one point query")
   }
 
   test("pointQuery reads only the snapped nodes' reach rows from JDBC") {
@@ -199,6 +200,33 @@ class QueryLayerSpec extends SparkSpec {
     val got = QueryLayer.pointQuery(snapped, reach, radiusM = 800.0)
       .select("query_id", "category").as[(Long, String)].collect().toSeq
     assert(got == Seq((10L, "supermarket"))) // school filtered, -1 snap dropped
+  }
+
+  test("pointQuery returns the multiset of the equi-join it replaces") {
+    // ids 1 and 2 snap to node 0; id 3 sits at two coordinates that snap
+    // to node 1 and at a third that snaps to node 2, as does a null id;
+    // node 5 has no reach rows; -1 is no snap; rows past 800 m drop out
+    val snapped = Seq[(java.lang.Long, Int)](
+      (1L, 0), (2L, 0), (3L, 1), (3L, 1), (3L, 2), (null, 2), (4L, 5), (6L, -1))
+      .toDF("query_id", "node_idx")
+    val reach = Seq((0, "supermarket", 400.0, 360.0, 7L), (0, "school", 900.0, 810.0, 8L),
+      (1, "park", 100.0, 90.0, 9L), (2, "school", 300.0, 270.0, 10L), (2, "pub", 801.0, 700.0, 11L),
+      (3, "bakery", 50.0, 45.0, 12L)).toDF("node_idx", "category", "dist_m", "time_s", "poi_id")
+    def multiset(df: org.apache.spark.sql.DataFrame): Map[Seq[Any], Int] =
+      df.collect().toSeq.map(_.toSeq).groupMapReduce(identity)(_ => 1)(_ + _)
+    // the reach key as an Int, as the snap's, and as a Long
+    for (r <- Seq(reach, reach.withColumn("node_idx", $"node_idx".cast("long")))) {
+      val want = snapped.filter($"node_idx" >= 0).join(r, "node_idx").filter($"dist_m" <= 800.0)
+        .select("query_id", "category", "dist_m", "time_s", "poi_id")
+      val got = QueryLayer.pointQuery(snapped, r, radiusM = 800.0)
+      assert(got.schema.map(_.dataType) == want.schema.map(_.dataType), got.schema)
+      assert(multiset(want) == Map(Seq(1L, "supermarket", 400.0, 360.0, 7L) -> 1,
+        Seq(2L, "supermarket", 400.0, 360.0, 7L) -> 1, Seq(3L, "park", 100.0, 90.0, 9L) -> 2,
+        Seq(3L, "school", 300.0, 270.0, 10L) -> 1, Seq(null, "school", 300.0, 270.0, 10L) -> 1))
+      assert(multiset(got) == multiset(want))
+      val plan = got.queryExecution.executedPlan.toString
+      assert(!plan.contains("Join") && !plan.contains("Broadcast"), plan)
+    }
   }
 
   test("cropCompleteWays keeps whole ways touching the bbox") {
